@@ -204,8 +204,7 @@ object Cms {
     * holds the logical zeros — one O(|evicted|) drain paid for by
     * those keys' own inserts. Emission: logical + d = stored, so the
     * candidate floor test is simply `stored >= floorCnt`. The
-    * q_cms_heavy_mg bench row and the Probe `genmg` curve pin the
-    * linear row scaling. */
+    * q_cms_heavy_mg bench row pins the linear row scaling. */
   def localHeavyCandidatesMG(df: DataFrame, keyCol: String, minCount: Long,
                              capacity: Int = 1 << 17): DataFrame = {
     val keyDf = df.select(col(keyCol))

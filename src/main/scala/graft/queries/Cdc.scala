@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Tables
 import graft.cdc._
@@ -906,7 +907,6 @@ object Cdc {
     // canal-json codec survives the broker AND the streaming consumer
     // path, not just a batch file read.
     "cdc_topic_envelope_stream" -> ((s, dir) => withStreamPartitions(s) {
-      import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types._
       val path = roundtripPath(dir, "topicenvstream")
       GraftSink.Topic(path = path, numPartitions = 8)
@@ -916,21 +916,12 @@ object Cdc {
         StructField("__partition", IntegerType, nullable = false),
         StructField("__offset", LongType, nullable = false),
         StructField(Envelope.EnvelopeCol, StringType)))
-      val qn = "topic_env_stream_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = Envelope.decode(
+      Materialize.snapshot(drainToMemory(Envelope.decode(
           graft.sources.TopicSource.stream(s, path, wireSchema,
             maxOffsetsPerTrigger =
               offsetsPerTrigger(eventsRowCount(s, dir), 32768L))
             .select(Envelope.EnvelopeCol),
-          envelopePayload, "graft", "events")
-        .writeStream.format("memory").queryName(qn)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckptenv").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      Materialize.snapshot(s.table(qn))
+          envelopePayload, "graft", "events")))
         .select(
           col("key").as("user_id"),
           col("event_type").as("last_event_type"),
@@ -974,14 +965,12 @@ object Cdc {
         StructField(Envelope.EnvelopeCol, StringType)))
       val sinkDir = freshScratch(dir, "topicenvevolve_sink")
       val dlqDir = freshScratch(dir, "topicenvevolve_dlq")
-      val q = CdcStream.deliverEvolvingWire(
+      drainOnce(CdcStream.deliverEvolvingWire(
         graft.sources.TopicSource.stream(s, path, wireSchema,
             maxOffsetsPerTrigger =
               offsetsPerTrigger(eventsRowCount(s, dir), 32768L))
           .select(Envelope.EnvelopeCol),
-        envelopePayload, "graft", "events", sinkDir, dlqDir,
-        java.nio.file.Files.createTempDirectory("ckpt").toString)
-      q.awaitTermination()
+        envelopePayload, "graft", "events", sinkDir, dlqDir, _))
       Materialize.snapshot(CdcStream.readEvolved(s, sinkDir))
         .select(col("key").as("user_id"), col("event_type"),
           col("amount"), col("region"), col("commit_ts_us").as("last_ts_us"))
@@ -1245,23 +1234,13 @@ object Cdc {
     // must reproduce exactly the topic the producer wrote — consumer
     // ≡ broker log, cross-engine.
     "cdc_topic_stream" -> ((s, dir) => withStreamPartitions(s) {
-      import org.apache.spark.sql.streaming.Trigger
       val path = roundtripPath(dir, "topicstream")
       GraftSink.Topic(path = path, numPartitions = 8)
         .write(changelog(s, dir))
-      val qn = "topic_stream_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = graft.sources.TopicSource.stream(s, path,
+      drainToMemory(graft.sources.TopicSource.stream(s, path,
           graft.sources.TopicSource.changelogTopicSchema,
           maxOffsetsPerTrigger =
-            offsetsPerTrigger(eventsRowCount(s, dir), 8192L))
-        .writeStream.format("memory").queryName(qn)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn)
+            offsetsPerTrigger(eventsRowCount(s, dir), 8192L)))
         .select(col("__partition").cast("long").as("__partition"),
           col("__offset"), col("seq"), col("key").as("user_id"),
           col("commit_ts_us"), col("event_type"))
@@ -1278,24 +1257,14 @@ object Cdc {
     // oracle is the shared snapshot SQL — stream-of-compacted ≡ batch
     // snapshot, cross-engine.
     "cdc_topic_stream_compacted" -> ((s, dir) => withStreamPartitions(s) {
-      import org.apache.spark.sql.streaming.Trigger
       val path = roundtripPath(dir, "topicstreamcompact")
       val sink = GraftSink.Topic(path = path, numPartitions = 8)
       sink.compact(sink.assign(changelog(s, dir)),
           retentionUs = 12L * 3600000000L)
         .write.mode(SaveMode.Overwrite).partitionBy("__partition")
         .parquet(path)
-      val qn = "topic_bootstrap_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = graft.sources.TopicSource.stream(s, path,
-          graft.sources.TopicSource.changelogTopicSchema)
-        .writeStream.format("memory").queryName(qn)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn)
+      drainToMemory(graft.sources.TopicSource.stream(s, path,
+          graft.sources.TopicSource.changelogTopicSchema))
         .where(col("op") =!= "D")
         .select(col("key").as("user_id"),
           col("event_type").as("last_event_type"),
@@ -1597,7 +1566,6 @@ object Cdc {
     // chain, per-key state machine — composes to exactly the batch
     // semantics (README.md:17-23's producer→broker→consumer shape).
     "cdc_topic_e2e" -> ((s, dir) => withStreamPartitions(s) {
-      import org.apache.spark.sql.streaming.Trigger
       val path = roundtripPath(dir, "topice2e")
       GraftSink.Topic(path = path, numPartitions = 8)
         .write(changelog(s, dir))
@@ -1609,16 +1577,7 @@ object Cdc {
       val chained = EventTypeFilter(
         Set("signup", "click", "purchase", "error"))(consumed)
       val updates = CdcStream.snapshotUpdates(chained)
-      val qn = "topic_e2e_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = updates.toDF().writeStream
-        .format("memory").queryName(qn).outputMode("update")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      Materialize.snapshot(s.table(qn))
+      Materialize.snapshot(drainToMemory(updates, "update"))
         .select(
           col("key").as("user_id"),
           col("event_type").as("last_event_type"),
@@ -1638,7 +1597,6 @@ object Cdc {
     // snapshot. Oracle = the batch snapshot SQL over the filtered log:
     // parity proves the group genuinely PARTITIONS the work.
     "cdc_topic_group_e2e" -> ((s, dir) => withStreamPartitions(s) {
-      import org.apache.spark.sql.streaming.Trigger
       val path = roundtripPath(dir, "topicgroupe2e")
       GraftSink.Topic(path = path, numPartitions = 8)
         .write(changelog(s, dir))
@@ -1654,26 +1612,17 @@ object Cdc {
       // await all — per-member state machines are key-disjoint, so
       // the result is identical.
       val perTrigger = offsetsPerTrigger(eventsRowCount(s, dir), 8192L)
-      val started = assigned.toSeq.sortBy(_._1).map { case (m, pids) =>
+      val memberUpdates = assigned.toSeq.sortBy(_._1).map { case (_, pids) =>
         val consumed = graft.sources.TopicSource.stream(s, path,
             graft.sources.TopicSource.changelogTopicSchema,
             maxOffsetsPerTrigger = perTrigger, partitions = pids)
           .drop("__partition", "__offset")
         val chained = EventTypeFilter(
           Set("signup", "click", "purchase", "error"))(consumed)
-        val qn = s"topic_group_e2e_${m}_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = CdcStream.snapshotUpdates(chained).toDF().writeStream
-          .format("memory").queryName(qn).outputMode("update")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory(s"ckptgrp$m").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        (q, qn)
+        CdcStream.snapshotUpdates(chained)
       }
-      started.foreach(_._1.awaitTermination())
-      val tables = started.map { case (_, qn) => s.table(qn) }
-      Materialize.snapshot(tables.reduce(_ unionByName _))
+      Materialize.snapshot(
+          drainToMemory(memberUpdates, "update").reduce(_ unionByName _))
         .select(
           col("key").as("user_id"),
           col("event_type").as("last_event_type"),
@@ -1960,18 +1909,9 @@ object Cdc {
       table.updateWhere(s, pmod(col("key"), lit(5L)) === 0,
         Map("value" -> (col("value") * 2),
           "event_type" -> lit("adjusted")))
-      import org.apache.spark.sql.streaming.Trigger
-      val qn = "stream_table_cdf_upd_sink"
-      val q = graft.sources.TableCdfSource
+      drainToMemory(graft.sources.TableCdfSource
         .stream(s, path, table.read(s).schema,
-          maxVersionsPerTrigger = 1, preimages = true)
-        .writeStream.format("memory").queryName(qn)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckptcdfu").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn)
+          maxVersionsPerTrigger = 1, preimages = true))
         .select(col("key").as("user_id"), col("event_type"),
           col("value"), col("commit_ts_us"),
           col("_change_type"), col("_commit_version"))
@@ -2323,13 +2263,11 @@ object Cdc {
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
       val table = GraftSink.VersionedTable(path)
-      val q = CdcStream.deliverVersioned(
+      drainOnce(CdcStream.deliverVersioned(
         CdcStream.fromParquetDir(s, inDir, ev.schema),
         Changefeed(Seq(TransformPlugin("to-changelog",
           Changelog.fromEvents))),
-        table,
-        java.nio.file.Files.createTempDirectory("ckpt").toString)
-      q.awaitTermination()
+        table, _))
       Seq(1L, 2L, 3L)
         .map(v => table.readVersion(s, v).withColumn("version", lit(v)))
         .reduce(_ unionByName _)
@@ -2550,17 +2488,8 @@ object Cdc {
       table.commit(log.where(
         col("commit_ts_us") > t1 && col("commit_ts_us") <= t2))
       table.commit(log.where(col("commit_ts_us") > t2))
-      import org.apache.spark.sql.streaming.Trigger
-      val qn = "stream_table_cdf_sink"
-      val q = graft.sources.TableCdfSource
-        .stream(s, path, log.schema, maxVersionsPerTrigger = 1)
-        .writeStream.format("memory").queryName(qn)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckptcdf").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn)
+      drainToMemory(graft.sources.TableCdfSource
+        .stream(s, path, log.schema, maxVersionsPerTrigger = 1))
         .groupBy(col("_commit_version").as("version"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           count(when(col("_change_type") === "insert", 1))
@@ -2595,18 +2524,9 @@ object Cdc {
         log.where(col("commit_ts_us") > t2)
       ).foreach(slice => table.mergeBucketed(slice, Seq("key"),
         Seq("commit_ts_us", "seq"), numBuckets = 16))
-      import org.apache.spark.sql.streaming.Trigger
-      val qn = "stream_table_cdf_merge_sink"
-      val q = graft.sources.TableCdfSource
+      drainToMemory(graft.sources.TableCdfSource
         .stream(s, path, table.read(s).schema,
-          maxVersionsPerTrigger = 1, keyCols = Seq("key"))
-        .writeStream.format("memory").queryName(qn)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckptcdfm").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn)
+          maxVersionsPerTrigger = 1, keyCols = Seq("key")))
         .select(col("key").as("user_id"), col("_change_type"),
           col("seq"), col("event_type"), col("value"),
           col("commit_ts_us"), col("_commit_version"))
@@ -2628,18 +2548,9 @@ object Cdc {
       table.mergeBucketed(log, Seq("key"),
         Seq("commit_ts_us", "seq"), numBuckets = 16)
       table.deleteWhere(s, pmod(col("key"), lit(7L)) === 0)
-      import org.apache.spark.sql.streaming.Trigger
-      val qn = "stream_table_cdf_dv_sink"
-      val q = graft.sources.TableCdfSource
+      drainToMemory(graft.sources.TableCdfSource
         .stream(s, path, table.read(s).schema,
-          maxVersionsPerTrigger = 1, keyCols = Seq("key"))
-        .writeStream.format("memory").queryName(qn)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckptcdfd").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn)
+          maxVersionsPerTrigger = 1, keyCols = Seq("key")))
         .where(col("_change_type") === "delete")
         .select(col("key").as("user_id"), col("event_type"),
           col("value"), col("commit_ts_us"),
@@ -2666,19 +2577,10 @@ object Cdc {
         Seq("commit_ts_us", "seq"), numBuckets = 16)
       table.deleteWhere(s, pmod(col("key"), lit(7L)) === 0)
       table.restore(s, 1L)
-      import org.apache.spark.sql.streaming.Trigger
-      val qn = "stream_table_cdf_restore_sink"
-      val q = graft.sources.TableCdfSource
+      drainToMemory(graft.sources.TableCdfSource
         .stream(s, path, table.read(s).schema,
           maxVersionsPerTrigger = 1, keyCols = Seq("key"),
-          startingVersion = 3L)
-        .writeStream.format("memory").queryName(qn)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckptcdfr").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn)
+          startingVersion = 3L))
         .select(col("key").as("user_id"), col("event_type"),
           col("value"), col("commit_ts_us"),
           col("_change_type"), col("_commit_version"))
@@ -2705,18 +2607,9 @@ object Cdc {
       table.commit(log.where(col("commit_ts_us") <= t1)) // v1
       table.commit(log.where(col("commit_ts_us") <= t2),
         overwrite = true) // v2: rewritten cumulative content
-      import org.apache.spark.sql.streaming.Trigger
-      val qn = "stream_table_cdf_overwrite_sink"
-      val q = graft.sources.TableCdfSource
+      drainToMemory(graft.sources.TableCdfSource
         .stream(s, path, table.read(s).schema,
-          keyCols = Seq("seq"), startingVersion = 2L)
-        .writeStream.format("memory").queryName(qn)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckptcdfo").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn)
+          keyCols = Seq("seq"), startingVersion = 2L))
         .select(col("key").as("user_id"), col("seq"), col("event_type"),
           col("value"), col("commit_ts_us"),
           col("_change_type"), col("_commit_version"))
@@ -2877,15 +2770,13 @@ object Cdc {
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
       val table = GraftSink.VersionedTable(path)
-      val q = CdcStream.deliverVersionedMerge(
+      drainOnce(CdcStream.deliverVersionedMerge(
         CdcStream.fromParquetDir(s, inDir, ev.schema),
         Changefeed(Seq(TransformPlugin("to-changelog",
           Changelog.fromEvents))),
-        table,
-        java.nio.file.Files.createTempDirectory("ckptvm").toString,
+        table, _,
         keyCols = Seq("key"), orderCols = Seq("commit_ts_us", "seq"),
-        numBuckets = 16)
-      q.awaitTermination()
+        numBuckets = 16))
       table.read(s)
         .select(col("key").as("user_id"),
           col("event_type").as("last_event_type"),
@@ -2908,27 +2799,18 @@ object Cdc {
     // watermark-fenced append discipline is exercised by the
     // interval-join queries (A30/A44).
     "cdc_stream_sessionize" -> ((s, dir) => withStreamPartitions(s) {
-      import org.apache.spark.sql.streaming.Trigger
       val ev = Tables.events(s, dir)
       val inDir = streamSliceDir(s, ev, dir, slices = 3, tag = "sess_in")
-      val qn = "stream_sessionize_sink"
-      val q = CdcStream.fromParquetDir(s, inDir, ev.schema)
+      val sessions = drainToMemory(CdcStream.fromParquetDir(s, inDir, ev.schema)
         .groupBy(col("user_id"),
           session_window(col("ts"), "1800000001 microseconds"))
         .agg(count(lit(1)).as("n_events"),
           min(col("ts_us")).as("session_start_us"),
           max(col("ts_us")).as("session_end_us"),
-          sumCents("value").as("sum_value_e2"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckptsess").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+          sumCents("value").as("sum_value_e2")), "complete")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("session_start_us"))
-      s.table(qn)
+      sessions
         .withColumn("session_id", row_number().over(w).cast("long"))
         .select(col("user_id"), col("session_id"), col("n_events"),
           col("session_start_us"), col("session_end_us"),
@@ -3006,11 +2888,9 @@ object Cdc {
         tag = "evolve_in")
       val sinkDir = freshScratch(dir, "evolve_sink")
       val dlqDir = freshScratch(dir, "evolve_dlq")
-      val q = CdcStream.deliverEvolving(
+      drainOnce(CdcStream.deliverEvolving(
         CdcStream.fromParquetDir(s, inDir, feed.schema),
-        sinkDir, dlqDir,
-        java.nio.file.Files.createTempDirectory("ckpt").toString)
-      q.awaitTermination()
+        sinkDir, dlqDir, _))
       Materialize.snapshot(CdcStream.readEvolved(s, sinkDir))
         .select(col("key").as("user_id"), col("event_type"),
           col("amount"), col("region"), col("commit_ts_us").as("last_ts_us"))
@@ -3227,21 +3107,11 @@ object Cdc {
     // The global-window slice prep is harness-only: a real deployment's
     // input already IS a stream.
     "cdc_stream_snapshot" -> ((s, dir) => withStreamPartitions(s) {
-      import org.apache.spark.sql.streaming.Trigger
       val ev = Tables.events(s, dir)
       val inDir = streamSliceDir(s, ev, dir, slices = 3)
       val stream = CdcStream.fromParquetDir(s, inDir, ev.schema)
       val updates = CdcStream.snapshotUpdates(Changelog.fromEvents(stream))
-      val qn = "snap_par_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = updates.toDF().writeStream
-        .format("memory").queryName(qn).outputMode("update")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      Materialize.snapshot(s.table(qn))
+      Materialize.snapshot(drainToMemory(updates, "update"))
         .select(
           col("key").as("user_id"),
           col("event_type").as("last_event_type"),
@@ -3260,7 +3130,6 @@ object Cdc {
     // claim that lets the 100 TB deployment bound join state by time
     // instead of buffering either stream whole.
     "cdc_stream_interval_join" -> ((s, dir) => withStreamPartitions(s) {
-      import org.apache.spark.sql.streaming.Trigger
       val ev = Tables.events(s, dir)
       val inDir = streamSliceDir(s, ev, dir, slices = 3)
       // ONE file-stream source AND one state machine serve BOTH join
@@ -3274,16 +3143,7 @@ object Cdc {
       val feed = CdcStream.fromParquetDir(s, inDir, ev.schema)
       val joined = CdcStream.intervalJoinTagged(
         feed, delay = "1 hour", window = "1 hour", emitUnmatched = false)
-      val qn = "ssj_par_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = joined.writeStream
-        .format("memory").queryName(qn).outputMode("append")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).orderBy("user_id", "purchase_seq", "click_seq")
+      drainToMemory(joined).orderBy("user_id", "purchase_seq", "click_seq")
     }),
 
     // A44: stream-stream LEFT-OUTER interval join — the incremental
@@ -3299,7 +3159,6 @@ object Cdc {
     // emission loses nothing and invents nothing (sentinels excluded
     // on both sides).
     "cdc_stream_interval_join_outer" -> ((s, dir) => withStreamPartitions(s) {
-      import org.apache.spark.sql.streaming.Trigger
       val ev = Tables.events(s, dir)
       val maxTs = ev.agg(max(col("ts_us"))).head.getLong(0)
       // one purchase + one click per sentinel flush, so BOTH side
@@ -3362,16 +3221,7 @@ object Cdc {
       val feed = CdcStream.fromParquetDir(s, inDir, ev.schema)
       val joined = CdcStream.intervalJoinTagged(
         feed, delay = "1 hour", window = "1 hour", emitUnmatched = true)
-      val qn = "ssjo_par_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = joined.writeStream
-        .format("memory").queryName(qn).outputMode("append")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).where(col("user_id") >= 0)
+      drainToMemory(joined).where(col("user_id") >= 0)
         .orderBy("user_id", "purchase_seq", "click_seq")
     }),
 
@@ -3397,12 +3247,10 @@ object Cdc {
         })))
       val outDir = freshScratch(dir, "dlq_out")
       val dlqDir = freshScratch(dir, "dlq_q")
-      val q = CdcStream.deliverWithDlq(
+      drainOnce(CdcStream.deliverWithDlq(
         CdcStream.fromParquetDir(s, inDir, ev.schema), chain,
         GraftSink.Files(outDir, saveMode = SaveMode.Append),
-        name => GraftSink.Files(s"$dlqDir/$name"),
-        java.nio.file.Files.createTempDirectory("ckpt").toString)
-      q.awaitTermination()
+        name => GraftSink.Files(s"$dlqDir/$name"), _))
       val delivered = s.read.parquet(outDir)
         .select(lit("delivered").as("disposition"), col("seq").as("id"))
       val quarantined = s.read.option("mergeSchema", "true")
@@ -3437,12 +3285,10 @@ object Cdc {
         })))
       val outDir = freshScratch(dir, "requeue_out")
       val dlqDir = freshScratch(dir, "requeue_q")
-      val q = CdcStream.deliverWithDlq(
+      drainOnce(CdcStream.deliverWithDlq(
         CdcStream.fromParquetDir(s, inDir, ev.schema), chain,
         GraftSink.Files(outDir, saveMode = SaveMode.Append),
-        name => GraftSink.Files(s"$dlqDir/$name"),
-        java.nio.file.Files.createTempDirectory("ckpt").toString)
-      q.awaitTermination()
+        name => GraftSink.Files(s"$dlqDir/$name"), _))
       // the fix: same chain minus the poison; requeue into the sink
       DlqReplay.requeue(s, s"$dlqDir/*",
         Changefeed(Seq(TransformPlugin("to-changelog",
@@ -3498,13 +3344,14 @@ object Cdc {
       val v2 = VersionedChain(2, Changefeed(Seq(
         TransformPlugin("to-changelog", Changelog.fromEvents),
         MaskPlugin(Seq("props"), Mask.Sha256))))
-      val roll = new ChainRollout(s, inDir, ev.schema,
-        GraftSink.Files(outDir, saveMode = SaveMode.Append),
-        Files.createTempDirectory("ckpt").toString, v1)
-      flush(0); flush(1); roll.start(); roll.drain()
-      roll.prepare(v2); flush(2)
-      roll.pause(); roll.commit()
-      flush(3); roll.start(); roll.drain()
+      drainOnce { ckpt =>
+        val roll = new ChainRollout(s, inDir, ev.schema,
+          GraftSink.Files(outDir, saveMode = SaveMode.Append), ckpt, v1)
+        flush(0); flush(1); roll.start(); roll.drain()
+        roll.prepare(v2); flush(2)
+        roll.pause(); roll.commit()
+        flush(3); roll.start()
+      }
       s.read.parquet(outDir)
         .select(col("key"), col("seq"), col("op"), col("event_type"),
           col("value"), col("commit_ts_us"), col("props"),
@@ -3615,6 +3462,43 @@ object Cdc {
     try body finally s.conf.set(key, prev)
   }
 
+  /** Drain each stream AvailableNow into its own uniquely named memory
+    * table and return the tables, in input order. All streams start
+    * before any is awaited, so independent drains overlap. No
+    * checkpointLocation: Spark gives a memory sink a temp checkpoint
+    * and deletes it once the query stops cleanly. */
+  private[queries] def drainToMemory(streams: Seq[Dataset[_]],
+                                     outputMode: String): Seq[DataFrame] = {
+    val started = streams.map(_.writeStream.format("memory")
+      .queryName("drain_" + java.util.UUID.randomUUID.toString.replace("-", ""))
+      .outputMode(outputMode)
+      .trigger(Trigger.AvailableNow())
+      .start())
+    started.foreach(_.awaitTermination())
+    started.map(q => q.sparkSession.table(q.name))
+  }
+
+  private[queries] def drainToMemory(stream: Dataset[_],
+                                     outputMode: String = "append"): DataFrame =
+    drainToMemory(Seq(stream), outputMode).head
+
+  /** Run the drain(s) `start` launches on a fresh temp checkpoint and
+    * await the query it returns. The checkpoint is deleted only when the
+    * query ended without an exception (the rule Spark applies to its own
+    * temp checkpoints), so a failed drain keeps its state for diagnosis. */
+  private[queries] def drainOnce(start: String => StreamingQuery): StreamingQuery = {
+    val ckpt = java.nio.file.Files.createTempDirectory("ckpt")
+    val q = start(ckpt.toString)
+    q.awaitTermination()
+    deleteTree(ckpt)
+    q
+  }
+
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p))
+      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => java.nio.file.Files.delete(f))
+
   /** Harness stand-in for an out-of-process HTTP plugin service (the
     * production form is any network endpoint speaking ndjson — the
     * spec drives a python3 http.server for the language-free claim):
@@ -3649,11 +3533,8 @@ object Cdc {
   private[graft] def freshScratch(dir: String, tag: String): String = {
     import java.nio.file.{Files, Paths}
     val out = roundtripPath(dir, tag)
-    val p = Paths.get(out)
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-    Files.createDirectories(p)
+    deleteTree(Paths.get(out))
+    Files.createDirectories(Paths.get(out))
     out
   }
 

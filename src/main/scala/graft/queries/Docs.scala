@@ -561,11 +561,9 @@ object Docs {
         orderCols = Seq(col("doc_id")), tag = "crawl_in")
       val corpusDir = CdcQ.freshScratch(dir, "crawl_corpus")
       val ledgerDir = CdcQ.freshScratch(dir, "crawl_ledger")
-      val q = CrawlIngest.start(
+      CdcQ.drainOnce(CrawlIngest.start(
         graft.streaming.CdcStream.fromParquetDir(s, inDir, d.schema),
-        "doc_id", "text", corpusDir, ledgerDir,
-        java.nio.file.Files.createTempDirectory("ckpt").toString)
-      q.awaitTermination()
+        "doc_id", "text", corpusDir, ledgerDir, _))
       val corpus = s.read.parquet(corpusDir)
       val ledgerN = s.read.parquet(ledgerDir).distinct().count()
       corpus.select(col("doc_id"), col("source"), col("lang"),
@@ -590,10 +588,8 @@ object Docs {
         .option("slices", 8).load()
       val corpusDir = CdcQ.freshScratch(dir, "gen_crawl_corpus")
       val ledgerDir = CdcQ.freshScratch(dir, "gen_crawl_ledger")
-      val q = CrawlIngest.start(stream, "doc_id", "text",
-        corpusDir, ledgerDir,
-        java.nio.file.Files.createTempDirectory("gen_ckpt").toString)
-      q.awaitTermination()
+      CdcQ.drainOnce(CrawlIngest.start(stream, "doc_id", "text",
+        corpusDir, ledgerDir, _))
       val corpus = s.read.parquet(corpusDir)
       val ledgerN = s.read.parquet(ledgerDir).distinct().count()
       corpus.select(col("doc_id"), col("source"),
@@ -617,11 +613,9 @@ object Docs {
         orderCols = Seq(col("doc_id")), tag = "crawlnd_in")
       val corpusDir = CdcQ.freshScratch(dir, "crawlnd_corpus")
       val bandsDir = CdcQ.freshScratch(dir, "crawlnd_bands")
-      val q = CrawlIngest.startNearDup(
+      CdcQ.drainOnce(CrawlIngest.startNearDup(
         graft.streaming.CdcStream.fromParquetDir(s, inDir, d.schema),
-        "doc_id", "text", threshold = 0.5, corpusDir, bandsDir,
-        java.nio.file.Files.createTempDirectory("ckpt").toString)
-      q.awaitTermination()
+        "doc_id", "text", threshold = 0.5, corpusDir, bandsDir, _))
       val corpus = s.read.parquet(corpusDir)
       val nBands = s.read.parquet(bandsDir).count()
       corpus.select(col("doc_id"), col("source"), col("lang"),

@@ -35,19 +35,24 @@ object CdcStream {
       .option("latestFirst", "false")
       .parquet(dir)
 
-  /** Run chain + sink over every micro-batch until no input remains
-    * (Trigger.AvailableNow — processes all available data then stops,
-    * exactly-once per the checkpoint). Returns the finished query. */
-  def deliver(stream: DataFrame, chain: Changefeed, sink: GraftSink,
-              checkpointDir: String): StreamingQuery = {
-    val fn: (Dataset[Row], Long) => Unit =
-      (batch, _) => sink.write(chain.run(batch.toDF()))
+  /** The one AvailableNow `foreachBatch` tail behind every `deliver*`
+    * here and [[CrawlIngest]]: run `fn` over each micro-batch of `stream`
+    * until no input remains, exactly-once per `checkpointDir`. */
+  private[streaming] def startDrain(stream: DataFrame, checkpointDir: String)
+                                   (fn: (Dataset[Row], Long) => Unit): StreamingQuery =
     stream.writeStream
       .foreachBatch(fn)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
-  }
+
+  /** Run chain + sink over every micro-batch until no input remains
+    * (Trigger.AvailableNow — processes all available data then stops,
+    * exactly-once per the checkpoint). Returns the finished query. */
+  def deliver(stream: DataFrame, chain: Changefeed, sink: GraftSink,
+              checkpointDir: String): StreamingQuery =
+    startDrain(stream, checkpointDir)(
+      (batch, _) => sink.write(chain.run(batch.toDF())))
 
   /** [[deliver]] into a [[GraftSink.VersionedTable]] with EXACTLY-ONCE
     * commits: each micro-batch publishes one versioned commit carrying
@@ -60,17 +65,10 @@ object CdcStream {
   def deliverVersioned(stream: DataFrame, chain: Changefeed,
                        table: GraftSink.VersionedTable,
                        checkpointDir: String,
-                       watermarkCol: Option[String] = None): StreamingQuery = {
-    val fn: (Dataset[Row], Long) => Unit =
-      (batch, id) => {
-        table.commitBatch(chain.run(batch.toDF()), id, watermarkCol); ()
-      }
-    stream.writeStream
-      .foreachBatch(fn)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                       watermarkCol: Option[String] = None): StreamingQuery =
+    startDrain(stream, checkpointDir) { (batch, id) =>
+      table.commitBatch(chain.run(batch.toDF()), id, watermarkCol); ()
+    }
 
   /** [[deliverVersioned]] through the FILE-PRUNED bucketed merge —
     * the standing-deployment lakehouse loop: each micro-batch UPSERTS
@@ -86,19 +84,12 @@ object CdcStream {
                             checkpointDir: String,
                             keyCols: Seq[String], orderCols: Seq[String],
                             opCol: String = "op",
-                            numBuckets: Int = 64): StreamingQuery = {
-    val fn: (Dataset[Row], Long) => Unit =
-      (batch, id) => {
-        table.mergeBucketedBatch(chain.run(batch.toDF()), keyCols,
-          orderCols, opCol, numBuckets, batchId = id)
-        ()
-      }
-    stream.writeStream
-      .foreachBatch(fn)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                            numBuckets: Int = 64): StreamingQuery =
+    startDrain(stream, checkpointDir) { (batch, id) =>
+      table.mergeBucketedBatch(chain.run(batch.toDF()), keyCols,
+        orderCols, opCol, numBuckets, batchId = id)
+      ()
+    }
 
   /** [[deliver]] with a dead-letter quarantine (the RFC's "a bad
     * plugin must not crash the feed" at RUNTIME, complementing
@@ -110,8 +101,8 @@ object CdcStream {
     * the operator's explicit, auditable action. */
   def deliverWithDlq(stream: DataFrame, chain: Changefeed, sink: GraftSink,
                      dlq: String => GraftSink,
-                     checkpointDir: String): StreamingQuery = {
-    val fn: (Dataset[Row], Long) => Unit = (batch, id) => {
+                     checkpointDir: String): StreamingQuery =
+    startDrain(stream, checkpointDir) { (batch, id) =>
       val frame = batch.toDF()
       try sink.write(chain.run(frame))
       catch {
@@ -122,12 +113,6 @@ object CdcStream {
                 String.valueOf(e.getMessage).take(200))))
       }
     }
-    stream.writeStream
-      .foreachBatch(fn)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
 
   /** MID-STREAM schema evolution (A9's streaming half): a live feed
     * that receives a DDL event keeps running — no restart, no fixed
@@ -156,8 +141,8 @@ object CdcStream {
     * columns) — pinned batch-identical to the A9 splice by
     * `cdc_stream_schema_evolution`'s oracle. */
   def deliverEvolving(stream: DataFrame, sinkDir: String, dlqDir: String,
-                      checkpointDir: String): StreamingQuery = {
-    val fn: (Dataset[Row], Long) => Unit = (batch, id) => {
+                      checkpointDir: String): StreamingQuery =
+    startDrain(stream, checkpointDir) { (batch, id) =>
       val frame = batch.toDF()
       val ddlRows = frame.where(col("op") === "DDL")
         .select(
@@ -179,12 +164,6 @@ object CdcStream {
           .withColumn("__dlq_reason", lit(reason))
           .write.mode("overwrite").parquet(s"$dlqDir/ddl-batch-$id"))
     }
-    stream.writeStream
-      .foreachBatch(fn)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
 
   /** The shared per-micro-batch evolution step behind
     * [[deliverEvolving]] (in-feed op='DDL' rows) and
@@ -250,8 +229,8 @@ object CdcStream {
   def deliverEvolvingWire(wire: DataFrame,
                           payload: StructType, database: String, table: String,
                           sinkDir: String, dlqDir: String,
-                          checkpointDir: String): StreamingQuery = {
-    val fn: (Dataset[Row], Long) => Unit = (batch, id) => {
+                          checkpointDir: String): StreamingQuery =
+    startDrain(wire, checkpointDir) { (batch, id) =>
       val all = graft.cdc.Envelope
         .decodeAll(batch.toDF(), payload, database, table)
         .persist() // one classification pass feeds the three splits
@@ -287,12 +266,6 @@ object CdcStream {
             .write.mode("overwrite").parquet(s"$dlqDir/ddl-batch-$id"))
       } finally all.unpersist()
     }
-    wire.writeStream
-      .foreachBatch(fn)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
 
   /** Read an evolving sink back under its full DDL history: merged
     * schema across segments, renames/adds spliced. */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming crawl ingestion with cross-batch exact dedup — the
   * production loop that turns an endless stream of crawl flushes into
@@ -76,11 +76,7 @@ object CrawlIngest {
         case None => digests
       }))
     }
-    stream.writeStream
-      .foreachBatch(fn)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    CdcStream.startDrain(stream, checkpointDir)(fn)
   }
 
   /** [[start]]'s NEAR-dup sibling — the streaming form of
@@ -165,11 +161,7 @@ object CrawlIngest {
         case None => survivorBands
       }))
     }
-    stream.writeStream
-      .foreachBatch(fn)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    CdcStream.startDrain(stream, checkpointDir)(fn)
   }
 
   private def existingLedger(spark: org.apache.spark.sql.SparkSession,

@@ -13,16 +13,9 @@ object GraftProps extends Properties("graft") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(10)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    // same extensions as SparkSpec: whichever suite creates the
-    // one-per-JVM session must register the catalog resolution rule
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // same builder as SparkSpec: whichever suite creates the one-per-JVM
+  // session, its configs and extensions are the same
+  private lazy val spark: SparkSession = GraftSession.local(4)
 
   private val asciiText: Gen[String] =
     Gen.listOf(Gen.oneOf(Gen.alphaLowerChar, Gen.const(' ')))

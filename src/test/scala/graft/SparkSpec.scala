@@ -6,15 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared test harness: one session per JVM (getOrCreate), small
   * parallelism, UTC, nanos-as-long for the events table. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   /** Smallest driver-generated scale factor — fast enough for unit tests. */
   val sfDir = "/root/testdata/sf0.001"

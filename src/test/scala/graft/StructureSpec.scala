@@ -1,0 +1,58 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source guard over src/main/scala: sessions are built in one place and
+  * AvailableNow drains are started in a few named helpers, so the
+  * builder chain and the drain tail are not copied back into call
+  * sites. */
+class StructureSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala")
+
+  /** (path under src/main/scala, lines) of every Scala source. */
+  private lazy val sources: Seq[(String, IndexedSeq[String])] = {
+    assert(Files.isDirectory(root), s"run from the repo root: $root")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map((p: Path) => root.relativize(p).toString ->
+        Files.readAllLines(p).asScala.toIndexedSeq)
+    finally walk.close()
+  }
+
+  /** (file, enclosing def) of every line matching `pattern`; the
+    * enclosing def is the nearest `def` at or above the line. */
+  private def sites(pattern: String): Seq[(String, String)] = {
+    val hit = pattern.r
+    val defName = """\bdef\s+(\w+)""".r
+    sources.flatMap { case (file, lines) =>
+      lines.indices.filter(i => hit.findFirstIn(lines(i)).isDefined).map { i =>
+        val owner = (i to 0 by -1).iterator
+          .flatMap(j => defName.findFirstMatchIn(lines(j)).map(_.group(1)))
+          .nextOption().getOrElse("<none>")
+        file -> owner
+      }
+    }
+  }
+
+  test("SparkSession.builder appears only in GraftSession") {
+    val files = sites("""SparkSession\.builder""").map(_._1).distinct
+    assert(files === Seq("graft/GraftSession.scala"))
+  }
+
+  test("AvailableNow drains and temp checkpoints only in the drain helpers") {
+    val allowed = Set(
+      "graft/queries/Cdc.scala" -> "drainToMemory",
+      "graft/queries/Cdc.scala" -> "drainOnce",
+      "graft/streaming/CdcStream.scala" -> "startDrain",
+      "graft/Bench.scala" -> "streamSentinelOnce")
+    val triggers = sites("""\.trigger\(\s*[\w.]*Trigger\.AvailableNow\(\)""")
+    val checkpoints = sites("""createTempDirectory\([^)]*ckpt""")
+    assert(triggers.nonEmpty && checkpoints.nonEmpty)
+    assert((triggers ++ checkpoints).filterNot(allowed).isEmpty)
+  }
+}
