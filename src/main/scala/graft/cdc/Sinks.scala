@@ -1,7 +1,5 @@
 package graft.cdc
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -657,7 +655,7 @@ object GraftSink {
     * directory and then publishes ONE manifest file listing exactly
     * the data files that constitute version v (append = previous
     * manifest ∪ new files; overwrite = new files only). The manifest
-    * RENAME is the commit point:
+    * RENAME is the commit point; [[TableLog]] owns the log's format:
     *
     *  - '''snapshot isolation''': a reader resolves one manifest and
     *    sees exactly that version's files forever — data files are
@@ -677,11 +675,15 @@ object GraftSink {
     * writer; the manifest is |files|-sized driver metadata (the same
     * class as a Delta JSON commit). Readers plan from the manifest's
     * explicit file list, so stale/orphan files in the directory are
-    * never scanned. */
+    * never scanned. Each operation resolves the version once and reads
+    * each manifest it needs once. */
   final case class VersionedTable(path: String) extends GraftSink {
 
     /** GraftSink delivery = an append commit. */
     def write(df: DataFrame): Unit = { commit(df); () }
+
+    private def log(spark: org.apache.spark.sql.SparkSession): TableLog =
+      TableLog(spark, path)
 
     /** Commit `df` as the next version; returns the version published.
       * `overwrite` replaces the table content instead of appending.
@@ -702,62 +704,50 @@ object GraftSink {
     def commit(df: DataFrame, overwrite: Boolean = false,
                meta: Map[String, String] = Map.empty,
                beforePublish: () => Unit = () => ()): Long = {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(
-        df.sparkSession.sessionState.newHadoopConf())
-      var v = currentVersion(fs) + 1
+      val log = this.log(df.sparkSession)
+      commitOn(log, log.latest(), df, overwrite, meta, beforePublish)
+    }
+
+    /** [[commit]] on top of `prev`, the latest manifest as the caller
+      * resolved it. */
+    private def commitOn(log: TableLog, prev0: Manifest, df: DataFrame,
+                         overwrite: Boolean, meta: Map[String, String],
+                         beforePublish: () => Unit): Long = {
+      var prev = prev0
       // an append under a column-mapped table writes PHYSICAL names
       // (the stamped #schema stays logical); an overwrite materializes
       // the logical view and RESETS the map
       val renameMap =
-        if (overwrite) Map.empty[String, String] else renameOf(fs, v - 1)
+        if (overwrite) Map.empty[String, String] else prev.rename
       // gate BEFORE writing too: a refused schema (type clash,
       // suspected rename, held physical name) or a violated CHECK
       // must not leave orphan data files — the schema gate below
       // re-checks per publish attempt
       val allowDropAdd = meta.get("allowDropAdd").exists(_.toBoolean)
       val validatedChecks =
-        if (overwrite) Map.empty[String, String] else checksOf(fs, v - 1)
+        if (overwrite) Map.empty[String, String] else prev.checks
       if (!overwrite) {
-        schemaGate(fs, v - 1, df.schema, allowDropAdd = allowDropAdd)
-        validatedChecks.foreach { case (n, sqlTxt) =>
-          require(df.where(!expr(sqlTxt)).limit(1).count() == 0,
-            s"$path: CHECK constraint '$n' ($sqlTxt) violated by this " +
-              "commit's rows — nothing was written")
-        }
+        schemaGate(log, prev, df.schema, allowDropAdd = allowDropAdd)
+        requireChecks(df, validatedChecks,
+          "this commit's rows — nothing was written")
       }
-      // uuid-suffixed so two racing writers never share a data dir —
-      // the loser's retry re-publishes THESE files under the next v
-      val dataRel = s"_data/commit-$v-${java.util.UUID.randomUUID}"
-      val dataDir = new org.apache.hadoop.fs.Path(root, dataRel)
+      val dataRel = TableLog.newDataRel(prev.version + 1)
       toPhysical(df, renameMap).write
-        .mode(SaveMode.Overwrite).parquet(dataDir.toString)
-      val newFiles = statsLines(fs, fs.listStatus(dataDir).toSeq
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(f => s"$dataRel/${f.getPath.getName}"))
+        .mode(SaveMode.Overwrite).parquet(s"$path/$dataRel")
+      val newFiles = log.fileLines(dataRel)
       val kind = meta.getOrElse("kind",
         if (overwrite) "overwrite" else "append")
       beforePublish() // test seam: deterministic concurrent-commit injection
-      var committed = false
-      while (!committed) {
+      var published = false
+      while (!published) {
         // the gate re-checks per attempt: a lost race means a NEW
         // previous version, whose schema is the one that matters
-        schemaGate(fs, v - 1, df.schema, carried = !overwrite,
+        schemaGate(log, prev, df.schema, carried = !overwrite,
           allowDropAdd = allowDropAdd)
-        if (!overwrite) require(renameOf(fs, v - 1) == renameMap,
+        if (!overwrite) require(prev.rename == renameMap,
           s"$path: a concurrent RENAME landed while this commit was " +
             "writing — its files were translated under the old column " +
             "map; re-run against the new current version")
-        val base =
-          if (overwrite) Nil
-          else if (v == 1) Nil
-          else manifestRawLines(fs, v - 1) // stats ride along verbatim
-        // an append keeps the previous version's deletion vector live
-        // (its files are still listed); an overwrite starts clean
-        val dvCarry =
-          if (overwrite) None else dvMetaOf(fs, v - 1)
-        val checksCarry =
-          if (overwrite) Map.empty[String, String] else checksOf(fs, v - 1)
         // the checks guard mirrors the rename guard: the batch was
         // validated against `validatedChecks` BEFORE writing — a
         // concurrently-added constraint must not ride into the new
@@ -765,21 +755,24 @@ object GraftSink {
         // (ADVICE r17); the loud failure tells the caller to re-run
         // (which re-validates) rather than silently re-checking here
         // and masking the race
-        if (!overwrite) require(checksCarry == validatedChecks,
+        if (!overwrite) require(prev.checks == validatedChecks,
           s"$path: a concurrent ADD CONSTRAINT landed while this " +
             "commit was writing — its rows were never validated " +
             "against the new constraint; re-run against the new " +
             "current version")
-        val header = headerLines(meta - "allowDropAdd" + ("kind" -> kind) +
-          ("schema" -> df.schema.json) ++ dvCarry.map("dv" -> _) ++
-          (if (renameMap.nonEmpty)
-            Some("rename" -> encodeRename(renameMap)) else None) ++
-          (if (checksCarry.nonEmpty)
-            Some("checks" -> encodeChecks(checksCarry)) else None))
-        if (tryPublish(fs, v, header ++ base ++ newFiles)) committed = true
-        else v = currentVersion(fs) + 1
+        // an append keeps the previous version's deletion vector live
+        // (its files are still listed) and its stats lines verbatim;
+        // an overwrite starts clean
+        val carried =
+          if (overwrite) Map.empty[String, String]
+          else prev.carry("dv", "rename", "checks")
+        val header = TableLog.header(meta - "allowDropAdd" ++ carried +
+          ("kind" -> kind) + ("schema" -> df.schema.json))
+        val base = if (overwrite) Nil else prev.lines
+        published = log.publish(prev.version + 1, header ++ base ++ newFiles)
+        if (!published) prev = log.latest()
       }
-      v
+      prev.version + 1
     }
 
     /** Logical → physical column translation for a write under a
@@ -790,44 +783,14 @@ object GraftSink {
       else df.select(df.columns.toSeq.map(c =>
         col(c).as(rename.getOrElse(c, c))): _*)
 
-    /** Render `#k=v` header lines (sorted, line-safety enforced). */
-    private def headerLines(meta: Map[String, String]): Seq[String] =
-      meta.toSeq.sortBy(_._1).map { case (k, mv) =>
-        require(!k.contains("=") && !(k + mv).exists(_ == '\n'),
-          s"manifest meta must be line-safe: $k=$mv")
-        s"#$k=$mv"
+    /** Every standing CHECK must hold over `rows` (one limit-1
+      * aggregation per check). */
+    private def requireChecks(rows: DataFrame, checks: Map[String, String],
+                              what: String): Unit =
+      checks.foreach { case (n, sqlTxt) =>
+        require(rows.where(!expr(sqlTxt)).limit(1).count() == 0,
+          s"$path: CHECK constraint '$n' ($sqlTxt) violated by $what")
       }
-
-    /** One atomic manifest-publish attempt at version `v`:
-      * write-to-temp + rename-without-overwrite is the commit point.
-      * Returns false when another writer took `v` first. A successful
-      * publish refreshes `_last_checkpoint` (best-effort — it is a
-      * HINT: readers forward-probe from it and fall back to a full
-      * listing when it is absent or torn, so a crash between rename
-      * and hint write costs one extra probe, never correctness). */
-    private def tryPublish(fs: org.apache.hadoop.fs.FileSystem, v: Long,
-                           lines: Seq[String]): Boolean = {
-      val manifestDir = new org.apache.hadoop.fs.Path(path, "_manifests")
-      fs.mkdirs(manifestDir)
-      val tmp = new org.apache.hadoop.fs.Path(manifestDir,
-        s".v$v-${java.util.UUID.randomUUID}.tmp")
-      val out = fs.create(tmp, false)
-      try out.write(lines.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      val dest = new org.apache.hadoop.fs.Path(manifestDir, s"v$v.manifest")
-      if (!fs.exists(dest) && fs.rename(tmp, dest)) {
-        try {
-          val h = fs.create(new org.apache.hadoop.fs.Path(manifestDir,
-            VersionedTable.LastCheckpoint), true)
-          try h.write(v.toString
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally h.close()
-        } catch { case _: Exception => () } // a stale hint heals itself
-        true
-      }
-      else { fs.delete(tmp, false); false }
-    }
 
     /** All-nullable view of a schema (recursive) — stamped schemas are
       * applied to MIXED file sets where older files null-fill added
@@ -844,79 +807,49 @@ object GraftSink {
       case other => other
     }
 
-    /** The stamped schema of version `v`, when it carries one. */
-    private def versionSchema(fs: org.apache.hadoop.fs.FileSystem, v: Long)
+    /** The stamped schema of a version (read-side nullable), when it
+      * carries one. */
+    private def schemaOf(m: Manifest)
         : Option[org.apache.spark.sql.types.StructType] =
-      manifestMeta(fs, v).get("schema").map(j =>
-        asNullable(org.apache.spark.sql.types.DataType.fromJson(j))
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-
-    /** COLUMN-MAPPING name map of version `v` (`#rename=`, Delta's
-      * column-mapping idea): logical → PHYSICAL column name, listed
-      * only where they differ. Data files always store physical names
-      * — a file's physical name is fixed at first appearance and a
-      * rename edits only this map, so a rename is one manifest write
-      * that never touches a file; writes after a rename translate
-      * back to physical, reads translate forward to logical. */
-    private def renameOf(fs: org.apache.hadoop.fs.FileSystem,
-                         v: Long): Map[String, String] = {
-      if (v < 1) return Map.empty
-      val m = new org.apache.hadoop.fs.Path(path,
-        s"_manifests/v$v.manifest")
-      if (!fs.exists(m)) Map.empty
-      else manifestMeta(fs, v).get("rename").map(_.split(',')
-        .filter(_.nonEmpty).map { pair =>
-          val i = pair.indexOf(':')
-          pair.substring(0, i) -> pair.substring(i + 1)
-        }.toMap).getOrElse(Map.empty)
-    }
-
-    private def encodeRename(map: Map[String, String]): String =
-      map.toSeq.sorted.map { case (l, p) =>
-        require(!(l + p).exists(c => c == ':' || c == ',' ||
-          c == '=' || c == '\n'),
-          s"column names in a rename must be [:,=\\n]-free: $l -> $p")
-        s"$l:$p"
-      }.mkString(",")
+      m.schema.map(s =>
+        asNullable(s).asInstanceOf[org.apache.spark.sql.types.StructType])
 
     /** RENAME a column (lakehouse schema evolution's third verb beside
       * add/drop — A43's `suspected_rename` verdict made explicit):
       * publishes a new version with the SAME file lines, the schema
       * field renamed, and the `#rename=` column map updated — one
-      * manifest write, zero data moved at any table size. Per-version
+      * manifest write, zero data moved at any table size. Data files
+      * always store PHYSICAL names (Delta's column-mapping idea): a
+      * file's physical name is fixed at first appearance and a rename
+      * edits only the map, so writes after a rename translate back to
+      * physical and reads translate forward to logical. Per-version
       * time travel reads every version under ITS OWN names. Dropping
       * `from` and adding `to` instead would orphan the old files'
       * column (they'd read null); the map keeps them readable. */
     def renameColumn(spark: org.apache.spark.sql.SparkSession,
                      from: String, to: String): Long = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val v = currentVersion(fs)
-      require(v > 0, s"$path: no committed versions")
-      val schema = versionSchema(fs, v).getOrElse(throw
-        new IllegalArgumentException(s"$path: version $v stamped no " +
-          "schema — rename needs the column-mapping metadata"))
+      val log = this.log(spark)
+      val m = log.latest()
+      require(m.version > 0, s"$path: no committed versions")
+      val schema = schemaOf(m).getOrElse(throw
+        new IllegalArgumentException(s"$path: version ${m.version} " +
+          "stamped no schema — rename needs the column-mapping metadata"))
       require(schema.fieldNames.contains(from),
         s"$path: no column '$from' to rename")
       require(!schema.fieldNames.contains(to),
         s"$path: column '$to' already exists")
-      val prevMap = renameOf(fs, v)
-      val physical = prevMap.getOrElse(from, from)
-      val newMap = (prevMap - from + (to -> physical))
+      val physical = m.rename.getOrElse(from, from)
+      val newMap = (m.rename - from + (to -> physical))
         .filter { case (l, p) => l != p }
       val newSchema = org.apache.spark.sql.types.StructType(
         schema.fields.map(f =>
           if (f.name == from) f.copy(name = to) else f))
-      val meta = manifestMeta(fs, v)
-      val header = headerLines(Map(
-        "kind" -> "rename", "schema" -> newSchema.json) ++
-        (if (newMap.nonEmpty) Some("rename" -> encodeRename(newMap))
-         else None) ++
-        meta.get("dv").map("dv" -> _) ++
-        meta.get("checks").map("checks" -> _) ++
-        meta.get("buckets").map("buckets" -> _))
-      val newV = v + 1
-      if (!tryPublish(fs, newV, header ++ manifestRawLines(fs, v)))
+      val header = TableLog.header(m.carry("dv", "checks", "buckets") +
+        ("kind" -> "rename") + ("schema" -> newSchema.json) ++
+        (if (newMap.nonEmpty)
+          Some("rename" -> TableLog.encodeRename(newMap)) else None))
+      val newV = m.version + 1
+      if (!log.publish(newV, header ++ m.lines))
         throw new IllegalStateException(s"$path: concurrent commit took " +
           s"v$newV while this rename was publishing — re-run against " +
           "the new current version")
@@ -929,41 +862,31 @@ object GraftSink {
       scala.collection.concurrent.TrieMap
         .empty[Long, Map[String, org.apache.spark.sql.types.DataType]]
 
-    private def originTypes(fs: org.apache.hadoop.fs.FileSystem, v: Long)
-        : Map[String, org.apache.spark.sql.types.DataType] =
-      originTypeCache.getOrElseUpdate(v, {
-        val m = new org.apache.hadoop.fs.Path(path,
-          s"_manifests/v$v.manifest")
-        if (!fs.exists(m)) Map.empty
-        else versionSchema(fs, v).map(_.fields.map(f =>
-          f.name -> asNullable(f.dataType)).toMap).getOrElse(Map.empty)
-      })
-
-    /** BACKWARD schema-evolution gate against version `prevV`: columns
-      * the next schema shares with the previous schema — or with the
-      * stamped schema of ANY origin commit whose files the previous
-      * manifest still lists — must keep their type; adds (old files
-      * read null) and drops (readers stop projecting) evolve freely.
-      * Gating only against prevV would let drop-then-re-add-with-a-
-      * different-type pass while carried old files still hold the old
-      * physical type, corrupting their reads (ADVICE r16): a file's
-      * physical schema is its ORIGIN commit's schema, so each live
-      * origin is checked (one cached manifest-header read per origin).
-      * Unstamped/vacuumed versions skip — nothing to compare against. */
-    private def schemaGate(fs: org.apache.hadoop.fs.FileSystem, prevV: Long,
+    /** BACKWARD schema-evolution gate against `prev`: columns the next
+      * schema shares with the previous schema — or with the stamped
+      * schema of ANY origin commit whose files the previous manifest
+      * still lists — must keep their type; adds (old files read null)
+      * and drops (readers stop projecting) evolve freely. Gating only
+      * against prev would let drop-then-re-add-with-a-different-type
+      * pass while carried old files still hold the old physical type,
+      * corrupting their reads (ADVICE r16): a file's physical schema is
+      * its ORIGIN commit's schema, so each live origin is checked (one
+      * cached manifest read per origin). Unstamped/vacuumed origins
+      * skip — nothing to compare against. */
+    private def schemaGate(log: TableLog, prev: Manifest,
                            next: org.apache.spark.sql.types.StructType,
                            carried: Boolean = true,
                            allowDropAdd: Boolean = false)
         : Unit = {
-      if (prevV < 1) return
-      val m = new org.apache.hadoop.fs.Path(path,
-        s"_manifests/v$prevV.manifest")
-      if (!fs.exists(m)) return
-      val origins = manifestFiles(fs, prevV).flatMap(rel =>
-        "_data/commit-(\\d+)-".r.findFirstMatchIn(rel)
-          .map(_.group(1).toLong)).toSet + prevV
+      if (prev.version < 1) return
+      val origins =
+        prev.files.flatMap(TableLog.originVersion).toSet + prev.version
       for (ov <- origins.toSeq.sorted) {
-        val prevTypes = originTypes(fs, ov)
+        val prevTypes = originTypeCache.getOrElseUpdate(ov,
+          (if (ov == prev.version) Some(prev) else log.find(ov))
+            .flatMap(schemaOf)
+            .map(_.fields.map(f => f.name -> f.dataType).toMap)
+            .getOrElse(Map.empty))
         val clashes = next.fields.toSeq.flatMap(f =>
           prevTypes.get(f.name).filter(_ != asNullable(f.dataType)).map(ot =>
             s"${f.name}: ${ot.simpleString} -> ${f.dataType.simpleString}"))
@@ -975,13 +898,13 @@ object GraftSink {
       // the two rename-shaped guards only bind when the commit CARRIES
       // the previous files (an overwrite drops them — reshaping freely
       // is its point)
-      if (carried) versionSchema(fs, prevV).foreach { prev =>
+      if (carried) schemaOf(prev).foreach { prevSchema =>
         // column-mapping guard: a NEW logical column may not claim a
         // PHYSICAL name some renamed column still holds — the old
         // files' physical column is taken
-        val taken = renameOf(fs, prevV).values.toSet
+        val taken = prev.rename.values.toSet
         val newCols = next.fields.toSeq.filterNot(f =>
-          prev.fieldNames.contains(f.name))
+          prevSchema.fieldNames.contains(f.name))
         newCols.find(f => taken.contains(f.name)).foreach(f =>
           throw new IllegalArgumentException(s"$path: column " +
             s"'${f.name}' cannot be added — its physical name is held " +
@@ -997,7 +920,7 @@ object GraftSink {
         // had no override, forcing two commits); the held-physical-
         // name guard above stays binding either way — it protects
         // file bytes, not intent
-        val dropped = prev.fields.toSeq.filterNot(f =>
+        val dropped = prevSchema.fields.toSeq.filterNot(f =>
           next.fieldNames.contains(f.name))
         if (!allowDropAdd && dropped.size == 1 && newCols.size == 1 &&
           asNullable(dropped.head.dataType) ==
@@ -1010,176 +933,16 @@ object GraftSink {
       }
     }
 
-    /** Latest published version (0 = no commits yet). */
+    /** Latest published version (0 = no commits yet) — hint + forward
+      * probes, never a steady-state listing ([[TableLog.currentVersion]]). */
     def currentVersion(spark: org.apache.spark.sql.SparkSession): Long =
-      currentVersion(new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf()))
+      log(spark).currentVersion()
 
-    /** Version resolution is `_last_checkpoint` + forward probes, NOT
-      * a directory listing (Delta's `_last_checkpoint` design): at
-      * A77's one-version-per-flush cadence a standing table accrues
-      * thousands of manifests between vacuums, and on an object store
-      * a full LIST per read is the known commit-log scaling problem
-      * (VERDICT r16 ask 3). Our manifests are already self-contained
-      * (each carries the full file list), so the hint is all a
-      * checkpoint needs to carry; resolution costs O(1 + commits since
-      * the hint) existence probes. The listing survives only as the
-      * fallback for hint-less/torn states, counted in
-      * [[VersionedTable.fallbackLists]] so SinksSpec can pin that
-      * steady-state reads never list. */
-    private def currentVersion(fs: org.apache.hadoop.fs.FileSystem): Long = {
-      val dir = new org.apache.hadoop.fs.Path(path, "_manifests")
-      val hint: Long = try {
-        val hp = new org.apache.hadoop.fs.Path(dir,
-          VersionedTable.LastCheckpoint)
-        if (!fs.exists(hp)) -1L
-        else {
-          val in = fs.open(hp)
-          val s = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .mkString.trim finally in.close()
-          val h = s.toLong
-          // the hint is written AFTER the rename and vacuum retains
-          // the current version, so a valid hint is never ahead; a
-          // missing manifest means external surgery → full listing
-          if (h >= 1 && fs.exists(new org.apache.hadoop.fs.Path(dir,
-            s"v$h.manifest"))) h
-          else -1L
-        }
-      } catch { case _: Exception => -1L } // torn hint → full listing
-      if (hint < 0) {
-        VersionedTable.fallbackLists.incrementAndGet()
-        if (!fs.exists(dir)) 0L
-        else fs.listStatus(dir).toSeq
-          .map(_.getPath.getName)
-          .filter(n => n.startsWith("v") && n.endsWith(".manifest"))
-          .map(_.stripPrefix("v").stripSuffix(".manifest").toLong)
-          .foldLeft(0L)(math.max)
-      } else {
-        var v = hint
-        while (fs.exists(new org.apache.hadoop.fs.Path(dir,
-          s"v${v + 1}.manifest"))) v += 1
-        v
-      }
-    }
-
-    /** Raw manifest FILE LINES of version `v` — `rel` or
-      * `rel<TAB>stats-json` (per-file footer statistics, written at
-      * commit time and carried VERBATIM by merges/appends: a file is
-      * immutable, so its stats line is too). */
-    private def manifestRawLines(fs: org.apache.hadoop.fs.FileSystem,
-                                 v: Long): Seq[String] = {
-      val m = new org.apache.hadoop.fs.Path(path, s"_manifests/v$v.manifest")
-      require(fs.exists(m), s"$path: version $v was never committed " +
-        "(or its manifest was vacuumed)")
-      val in = fs.open(m)
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(l => l.nonEmpty && !l.startsWith("#")).toList
-      finally in.close()
-    }
-
-    /** The path part of a manifest file line (stats suffix dropped). */
-    private def stripStats(line: String): String = {
-      val i = line.indexOf('\t')
-      if (i < 0) line else line.substring(0, i)
-    }
-
-    private def manifestFiles(fs: org.apache.hadoop.fs.FileSystem,
-                              v: Long): Seq[String] =
-      manifestRawLines(fs, v).map(stripStats)
-
-    /** One manifest file line for a freshly written file: the relative
-      * path plus its footer statistics —
-      * `{"rows":N,"cols":{"c":[min,max],…}}` for top-level NUMERIC
-      * columns (min/max across row groups). This is Delta's per-file
-      * stats design: data skipping and row counts become manifest
-      * metadata, so reads prune files and OPTIMIZE sizes bins without
-      * touching data. One driver footer read per new file — the same
-      * metadata class as the directory listing the write already did. */
-    private def statsLine(fs: org.apache.hadoop.fs.FileSystem,
-                          rel: String): String = {
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(path, rel), fs.getConf))
-      try {
-        val blocks = rd.getFooter.getBlocks.asScala.toSeq
-        val rows = blocks.map(_.getRowCount).sum
-        val mins = scala.collection.mutable.Map.empty[String, BigDecimal]
-        val maxs = scala.collection.mutable.Map.empty[String, BigDecimal]
-        val bad = scala.collection.mutable.Set.empty[String]
-        for (b <- blocks; c <- b.getColumns.asScala) {
-          val name = c.getPath.toDotString
-          val st = c.getStatistics
-          // a row group with ABSENT statistics (st null or empty) makes
-          // the column's file-level range unknowable — the column must
-          // go stats-less for the whole file (kept, never pruned), not
-          // silently understate the range from the other groups' stats
-          // (readRange would prune a file that holds matching rows —
-          // ADVICE r16). All-null groups (stats present, no non-null
-          // value) contribute no range and are correctly skipped: nulls
-          // never match a range predicate.
-          if (!name.contains('.') && (st == null || st.isEmpty)) bad += name
-          else if (!name.contains('.') && st.hasNonNullValue) {
-            (st.genericGetMin, st.genericGetMax) match {
-              case (mn: java.lang.Number, mx: java.lang.Number)
-                  if !mn.isInstanceOf[java.lang.Byte] =>
-                // NaN/Infinity bounds are unusable (and must never
-                // crash a commit): such a column goes stats-less for
-                // the WHOLE file — readers keep it, correctness
-                // unaffected
-                try {
-                  val (dn, dx) = (BigDecimal(mn.toString),
-                    BigDecimal(mx.toString))
-                  mins(name) = mins.get(name).map(_.min(dn)).getOrElse(dn)
-                  maxs(name) = maxs.get(name).map(_.max(dx)).getOrElse(dx)
-                } catch {
-                  case _: NumberFormatException => bad += name
-                }
-              case _ => () // binary/boolean columns carry no range stats
-            }
-          }
-        }
-        val cols = (mins.keySet -- bad).toSeq.sorted.map(c =>
-          s""""$c":[${mins(c)},${maxs(c)}]""").mkString(",")
-        s"""$rel\t{"rows":$rows,"cols":{$cols}}"""
-      } finally rd.close()
-    }
-
-    /** [[statsLine]] over many fresh files — footer reads through a
-      * bounded pool (a bucketed merge can write task×bucket files;
-      * serial driver opens would dominate small merges). */
-    private def statsLines(fs: org.apache.hadoop.fs.FileSystem,
-                           rels: Seq[String]): Seq[String] = {
-      if (rels.size <= 4) rels.map(statsLine(fs, _))
-      else {
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(math.min(16, rels.size))
-        try rels.map(rel => pool.submit(
-            new java.util.concurrent.Callable[String] {
-              override def call(): String = statsLine(fs, rel)
-            })).map(_.get())
-        finally pool.shutdown()
-      }
-    }
-
-    /** Parse a line's stats range for `column` (None = no stats — the
-      * file may hold anything and must be kept). */
-    private def statsRange(line: String, column: String)
-        : Option[(BigDecimal, BigDecimal)] = {
-      val i = line.indexOf('\t')
-      if (i < 0) None
-      else ("\"" + java.util.regex.Pattern.quote(column) +
-        "\":\\[([^,\\]]+),([^\\]]+)\\]").r
-        .findFirstMatchIn(line.substring(i + 1))
-        .map(m => (BigDecimal(m.group(1)), BigDecimal(m.group(2))))
-    }
-
-    /** A line's stats row count (None = stats-less legacy line). */
-    private def statsRows(line: String): Option[Long] = {
-      val i = line.indexOf('\t')
-      if (i < 0) None
-      else "\"rows\":(\\d+)".r.findFirstMatchIn(line.substring(i + 1))
-        .map(_.group(1).toLong)
-    }
+    /** Retained manifests from `from` back to version 1, newest first
+      * (vacuumed versions skipped), read lazily. */
+    private def newestFirst(log: TableLog, from: Manifest): Iterator[Manifest] =
+      Iterator(from) ++
+        (from.version - 1 to 1L by -1L).iterator.flatMap(log.find)
 
     /** Conservative per-column numeric bounds implied by `cond`
       * (logical column → (lo, hi), open side = None): only TOP-LEVEL
@@ -1261,31 +1024,35 @@ object GraftSink {
       out.toMap
     }
 
-    /** Version `v`'s file list pruned by `cond`'s implied bounds
+    /** File paths of `m` whose stats range overlaps `bounds` (logical
+      * column → closed (lo, hi), open side = None); stats-less lines and
+      * columns are kept — soundness first. Manifest stats carry PHYSICAL
+      * names (they come from written files), so a renamed column's stats
+      * keep pruning. */
+    private def pruned(m: Manifest,
+                       bounds: Map[String, (Option[BigDecimal], Option[BigDecimal])])
+        : Seq[String] =
+      if (bounds.isEmpty) m.files
+      else m.lines.filter { l =>
+        bounds.forall { case (c, (lo, hi)) =>
+          TableLog.statsRange(l, m.rename.getOrElse(c, c)) match {
+            case Some((mn, mx)) => lo.forall(mx >= _) && hi.forall(mn <= _)
+            case None => true
+          }
+        }
+      }.map(TableLog.path)
+
+    /** Version `m`'s file list pruned by `cond`'s implied bounds
       * against the manifest footer stats — the [[readRange]] pruning
       * routed under an arbitrary predicate (VERDICT r17: the
       * deleteWhere/updateWhere position scans read EVERY file; a
       * range-expressible predicate on a stats-carried column prunes
-      * exactly like a range read). Stats-less lines and unbounded
-      * predicates keep everything — soundness first. The surviving
-      * census lands in [[VersionedTable.lastPredicateScanFiles]]
-      * (test seam — SinksSpec pins that a clustered predicate delete
-      * touches only its candidate files). */
-    private def pruneByPredicate(fs: org.apache.hadoop.fs.FileSystem,
-                                 v: Long, cond: Column): Seq[String] = {
-      val bounds = predicateBounds(cond)
-      val rename = renameOf(fs, v)
-      val out =
-        if (bounds.isEmpty) manifestFiles(fs, v)
-        else manifestRawLines(fs, v).filter { l =>
-          bounds.forall { case (c, (lo, hi)) =>
-            statsRange(l, rename.getOrElse(c, c)) match {
-              case Some((mn, mx)) =>
-                lo.forall(mx >= _) && hi.forall(mn <= _)
-              case None => true
-            }
-          }
-        }.map(stripStats)
+      * exactly like a range read). The surviving census lands in
+      * [[VersionedTable.lastPredicateScanFiles]] (test seam — SinksSpec
+      * pins that a clustered predicate delete touches only its
+      * candidate files). */
+    private def pruneByPredicate(m: Manifest, cond: Column): Seq[String] = {
+      val out = pruned(m, predicateBounds(cond))
       VersionedTable.lastPredicateScanFiles.set(out.size.toLong)
       out
     }
@@ -1300,62 +1067,32 @@ object GraftSink {
       * applies. */
     def readRange(spark: org.apache.spark.sql.SparkSession,
                   column: String, lo: Long, hi: Long): DataFrame = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val v = currentVersion(fs)
-      require(v > 0, s"$path: no committed versions")
-      val (blo, bhi) = (BigDecimal(lo), BigDecimal(hi))
-      // manifest stats carry PHYSICAL names (they come from written
-      // files); a renamed column's stats keep pruning
-      val rename = renameOf(fs, v)
-      val physCol = rename.getOrElse(column, column)
-      val keep = manifestRawLines(fs, v).filter { l =>
-        statsRange(l, physCol) match {
-          case Some((mn, mx)) => mx >= blo && mn <= bhi
-          case None => true
-        }
-      }.map(stripStats)
-      readFiles(spark, fs, keep, versionSchema(fs, v), dvSlicesOf(fs, v),
-        rename)
+      val m = log(spark).latest()
+      require(m.version > 0, s"$path: no committed versions")
+      val keep = pruned(m,
+        Map(column -> (Some(BigDecimal(lo)), Some(BigDecimal(hi)))))
+      readFiles(spark, keep, schemaOf(m), m.dv, m.rename)
         .where(col(column) >= lo && col(column) <= hi)
     }
 
     /** Manifest-header metadata of version `v` (the `#k=v` lines). */
     def manifestMeta(spark: org.apache.spark.sql.SparkSession,
-                     v: Long): Map[String, String] = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      manifestMeta(fs, v)
-    }
-
-    private def manifestMeta(fs: org.apache.hadoop.fs.FileSystem,
-                             v: Long): Map[String, String] = {
-      val m = new org.apache.hadoop.fs.Path(path, s"_manifests/v$v.manifest")
-      require(fs.exists(m), s"$path: version $v was never committed " +
-        "(or its manifest was vacuumed)")
-      val in = fs.open(m)
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.startsWith("#"))
-        .map { l =>
-          val i = l.indexOf('=')
-          l.substring(1, i) -> l.substring(i + 1)
-        }.toMap
-      finally in.close()
-    }
+                     v: Long): Map[String, String] =
+      log(spark).read(v).meta
 
     /** EXACTLY-ONCE streaming commit: publish `df` as the next version
       * with the micro-batch id in the manifest header — and SKIP the
       * commit entirely when any retained manifest already carries that
       * id (the foreachBatch redelivery after a crash between commit
-      * and checkpoint). The committed-ids scan is |versions| manifest
-      * headers on the driver — metadata-class. Single-writer per
-      * checkpoint, like any structured-streaming sink. Returns the
-      * published version, or None when the batch was already in. */
+      * and checkpoint). Single-writer per checkpoint, like any
+      * structured-streaming sink. Returns the published version, or
+      * None when the batch was already in. */
     def commitBatch(df: DataFrame, batchId: Long,
                     tsCol: Option[String] = None): Option[Long] = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-      if (batchSeen(fs, batchId)) None
+      val log = this.log(df.sparkSession)
+      val cur = log.latest()
+      val hi = batchHi(log, cur)
+      if (batchId <= hi) None
       else {
         // an empty micro-batch (or all-null tsCol) has no watermark:
         // commit it without the max_ts entry instead of NPE-ing the
@@ -1366,45 +1103,26 @@ object GraftSink {
           if (r.isNullAt(0)) None
           else Some("max_ts" -> r.getLong(0).toString)
         }
-        Some(commit(df, meta = Map("batch" -> batchId.toString,
-          "batch_hi" -> math.max(batchId, batchHi(fs)).toString) ++ wm))
+        Some(commitOn(log, cur, df, overwrite = false,
+          Map("batch" -> batchId.toString,
+            "batch_hi" -> math.max(batchId, hi).toString) ++ wm, () => ()))
       }
     }
 
-    /** Redelivery check in O(1) manifest reads, not O(|versions|):
-      * structured streaming's foreachBatch ids are MONOTONE per
-      * checkpoint (Delta leans on the same invariant in its `txn`
-      * action), so every batch commit carries a `#batch_hi`
-      * high-water mark and a redelivered id is simply `<= batch_hi`.
-      * Without the mark a 100k-batch stream would re-scan 100k
-      * manifest headers per commit — O(n²) over its life. The
-      * backscan below the newest mark only walks PLAIN commits that
-      * interleaved since the last batch commit (usually zero) and
-      * stops at the first marked manifest. */
-    private def batchSeen(fs: org.apache.hadoop.fs.FileSystem,
-                          batchId: Long): Boolean =
-      batchId <= batchHi(fs)
-
-    /** Highest batch id any retained commit carries (-1 = none). */
-    private def batchHi(fs: org.apache.hadoop.fs.FileSystem): Long = {
-      var kv = currentVersion(fs)
-      while (kv >= 1) {
-        val m = new org.apache.hadoop.fs.Path(path,
-          s"_manifests/v$kv.manifest")
-        // vacuumed manifests are skipped: a batch id old enough to
-        // have been vacuumed is also old enough to be past the
-        // checkpoint
-        if (fs.exists(m)) {
-          val meta = manifestMeta(fs, kv)
-          meta.get("batch_hi").orElse(meta.get("batch")) match {
-            case Some(b) => return b.toLong
-            case None => ()
-          }
-        }
-        kv -= 1
-      }
-      -1L
-    }
+    /** Highest batch id any retained commit carries (-1 = none); a
+      * redelivered id is simply `<= batchHi`. Redelivery is checked in
+      * O(1) manifest reads, not O(|versions|): structured streaming's
+      * foreachBatch ids are MONOTONE per checkpoint (Delta leans on the
+      * same invariant in its `txn` action), so every batch commit
+      * carries a `#batch_hi` high-water mark. Without the mark a
+      * 100k-batch stream would re-scan 100k manifest headers per commit
+      * — O(n²) over its life. The backscan below `cur` only walks PLAIN
+      * commits that interleaved since the last batch commit (usually
+      * zero) and stops at the first marked manifest; vacuumed manifests
+      * are skipped — a batch id old enough to have been vacuumed is
+      * also old enough to be past the checkpoint. */
+    private def batchHi(log: TableLog, cur: Manifest): Long =
+      newestFirst(log, cur).flatMap(_.batchHi).nextOption().getOrElse(-1L)
 
     /** Snapshot-isolated read of version `v` — exactly the files its
       * manifest lists, however the table has moved since. The read is
@@ -1413,12 +1131,12 @@ object GraftSink {
       * still carrying a since-dropped column stop projecting it —
       * per-version schema resolution, the lakehouse-evolution read. */
     def readVersion(spark: org.apache.spark.sql.SparkSession,
-                    v: Long): DataFrame = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      readFiles(spark, fs, manifestFiles(fs, v), versionSchema(fs, v),
-        dvSlicesOf(fs, v), renameOf(fs, v))
-    }
+                    v: Long): DataFrame =
+      readAt(spark, log(spark).read(v))
+
+    private def readAt(spark: org.apache.spark.sql.SparkSession,
+                       m: Manifest): DataFrame =
+      readFiles(spark, m.files, schemaOf(m), m.dv, m.rename)
 
     /** The row's data file as a MANIFEST-RELATIVE path — everything
       * after the table root's `/_data/` marker. Deletion vectors key
@@ -1430,32 +1148,11 @@ object GraftSink {
       concat(lit("_data/"),
         substring_index(col("_metadata.file_path"), "/_data/", -1))
 
-    /** The version's deletion-vector SLICES (manifest `#dv=`, comma-
-      * separated): each slice holds one key-bucket's dead positions
-      * (`__dvb=-1` = positions in unbucketed files), so a delete
-      * rewrites only the buckets it touches and a pruned read loads
-      * only its buckets' vectors. */
-    private def dvSlicesOf(fs: org.apache.hadoop.fs.FileSystem,
-                           v: Long): Seq[String] =
-      dvMetaOf(fs, v).toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
-
-    /** Raw `#dv=` header value of version `v`, carried verbatim by
-      * commits that keep the vector live. */
-    private def dvMetaOf(fs: org.apache.hadoop.fs.FileSystem,
-                         v: Long): Option[String] = {
-      if (v < 1) return None
-      val m = new org.apache.hadoop.fs.Path(path,
-        s"_manifests/v$v.manifest")
-      if (!fs.exists(m)) None else manifestMeta(fs, v).get("dv")
-    }
-
-    /** The key bucket a DV slice covers (-1 = unbucketed files). */
-    private def sliceBucket(slice: String): Long =
-      "__dvb=(-?\\d+)".r.findFirstMatchIn(slice)
-        .map(_.group(1).toLong).getOrElse(-1L)
-
     /** Dead positions (file: manifest-relative STRING, row_index: LONG)
-      * across `slices` (empty → typed empty relation). */
+      * across `slices` (empty → typed empty relation). Each slice holds
+      * one key-bucket's dead positions, so a delete rewrites only the
+      * buckets it touches and a pruned read loads only its buckets'
+      * vectors. */
     private def readDv(spark: org.apache.spark.sql.SparkSession,
                        slices: Seq[String]): DataFrame = {
       val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -1477,7 +1174,6 @@ object GraftSink {
       * bucket-pruned lookup loads 1/numBuckets of the vector exactly
       * as it reads 1/numBuckets of the data. */
     private def readFilesAddr(spark: org.apache.spark.sql.SparkSession,
-                              fs: org.apache.hadoop.fs.FileSystem,
                               rels: Seq[String],
                               schema: Option[org.apache.spark.sql.types.StructType],
                               dv: Seq[String],
@@ -1499,8 +1195,8 @@ object GraftSink {
           col(rename.getOrElse(f.name, f.name)).as(f.name)) ++
           Seq(col("__dv_file"), col("__dv_row")): _*)
       val relBuckets = rels.map(rel =>
-        pathBucket(rel).getOrElse(-1L)).toSet
-      val needed = dv.filter(s => relBuckets.contains(sliceBucket(s)))
+        TableLog.pathBucket(rel).getOrElse(-1L)).toSet
+      val needed = dv.filter(s => relBuckets.contains(TableLog.sliceBucket(s)))
       if (needed.isEmpty) base
       else base.join(readDv(spark, needed)
           .withColumnRenamed("file", "__dv_file")
@@ -1515,7 +1211,6 @@ object GraftSink {
       * (`_metadata` row addressing: parquet row order is as immutable
       * as the file, so positions are exact forever). */
     private def readFiles(spark: org.apache.spark.sql.SparkSession,
-                          fs: org.apache.hadoop.fs.FileSystem,
                           rels: Seq[String],
                           schema: Option[org.apache.spark.sql.types.StructType],
                           dv: Seq[String] = Nil,
@@ -1526,7 +1221,7 @@ object GraftSink {
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s))
           .getOrElse(spark.emptyDataFrame)
       else {
-        val addr = readFilesAddr(spark, fs, rels, schema, dv, rename)
+        val addr = readFilesAddr(spark, rels, schema, dv, rename)
         addr.select(addr.columns.toSeq
           .filterNot(c => c == "__dv_file" || c == "__dv_row")
           .map(col): _*)
@@ -1564,8 +1259,7 @@ object GraftSink {
     def deleteWhere(spark: org.apache.spark.sql.SparkSession,
                     cond: Column,
                     beforePublish: () => Unit = () => ()): (Long, Long) = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
+      val log = this.log(spark)
       // OCC retry: a lost publish race RE-DERIVES the positions
       // against the new current version (serial-equivalent for any
       // winner — the delete simply ran after it); metadata-only
@@ -1573,20 +1267,20 @@ object GraftSink {
       var attempts = 0
       while (attempts < 5) {
         attempts += 1
-        val v = currentVersion(fs)
-        require(v > 0, s"$path: no committed versions")
+        val m = log.latest()
+        require(m.version > 0, s"$path: no committed versions")
         // the position scan plans only files whose stats can hold a
         // match — on a range-clustered table a predicate erasure reads
         // its candidate files, not the table (VERDICT r17 ask 2)
-        val candidates = pruneByPredicate(fs, v, cond)
-        if (candidates.isEmpty) return (v, 0L) // stats exclude every file
-        val alive = readFilesAddr(spark, fs, candidates,
-          versionSchema(fs, v), dvSlicesOf(fs, v), renameOf(fs, v))
+        val candidates = pruneByPredicate(m, cond)
+        if (candidates.isEmpty) return (m.version, 0L) // stats exclude every file
+        val alive = readFilesAddr(spark, candidates, schemaOf(m), m.dv,
+          m.rename)
         val newDead = alive.where(cond)
           .select(col("__dv_file").as("file"),
             col("__dv_row").as("row_index"))
         if (attempts == 1) beforePublish()
-        publishDelete(spark, fs, v, newDead) match {
+        publishDelete(spark, log, m, newDead) match {
           case Some(r) => return r
           case None => () // content winner — loop re-derives
         }
@@ -1598,10 +1292,8 @@ object GraftSink {
 
     /** The DV slice bucket of a dead position — its file's `__bucket=`
       * (−1 for unbucketed files, which may hold any key). */
-    private def dvBucketCol(file: Column): Column = {
-      val b = regexp_extract(file, "__bucket=(\\d+)/", 1)
-      coalesce(when(b =!= "", b.cast("long")), lit(-1L))
-    }
+    private def dvBucketCol(file: Column): Column =
+      coalesce(TableLog.pathBucketCol(file), lit(-1L))
 
     /** Publish a position-kill commit (`kind` delete|update) on top of
       * version `base`, with OCC REBASE over METADATA-ONLY winners
@@ -1618,9 +1310,8 @@ object GraftSink {
       * `base`'s checks, so a concurrently-added constraint must force
       * the re-derive (which re-validates) — a delete can never violate
       * a row constraint, so it rebases over constraints freely. */
-    private def tryPublishPositions(fs: org.apache.hadoop.fs.FileSystem,
-                                    base0: Long, kind: String,
-                                    dvList: Seq[String],
+    private def tryPublishPositions(log: TableLog, base0: Manifest,
+                                    kind: String, dvList: Seq[String],
                                     extraFileLines: Seq[String],
                                     allowConstraintWinner: Boolean)
         : Option[Long] = {
@@ -1628,23 +1319,18 @@ object GraftSink {
       var attempts = 0
       while (attempts <= 8) {
         attempts += 1
-        val meta = manifestMeta(fs, base)
-        val header = headerLines(Map(
-          "kind" -> kind, "dv" -> dvList.mkString(",")) ++
-          meta.get("schema").map("schema" -> _) ++
-          meta.get("rename").map("rename" -> _) ++
-          meta.get("checks").map("checks" -> _))
-        if (tryPublish(fs, base + 1,
-          header ++ manifestRawLines(fs, base) ++ extraFileLines))
-          return Some(base + 1)
-        val wv = base + 1
-        val wMeta = manifestMeta(fs, wv)
-        val rebasable = wMeta.get("kind").exists(k =>
+        val header = TableLog.header(base.carry("schema", "rename", "checks") +
+          ("kind" -> kind) + ("dv" -> dvList.mkString(",")))
+        if (log.publish(base.version + 1,
+          header ++ base.lines ++ extraFileLines))
+          return Some(base.version + 1)
+        val winner = log.read(base.version + 1)
+        val rebasable = winner.kind.exists(k =>
           k == "rename" || (allowConstraintWinner && k == "constraint")) &&
-          manifestRawLines(fs, wv) == manifestRawLines(fs, base) &&
-          dvMetaOf(fs, wv) == dvMetaOf(fs, base)
+          winner.lines == base.lines &&
+          winner.meta.get("dv") == base.meta.get("dv")
         if (!rebasable) return None
-        base = wv
+        base = winner
       }
       None
     }
@@ -1659,19 +1345,18 @@ object GraftSink {
       * content commit won the publish race (slices cleaned up) — the
       * caller re-derives against the new current version. */
     private def publishDelete(spark: org.apache.spark.sql.SparkSession,
-                              fs: org.apache.hadoop.fs.FileSystem,
-                              v: Long, newDead: DataFrame)
-        : Option[(Long, Long)] = {
-      val dvOut = s"_dv/v${v + 1}-${java.util.UUID.randomUUID}"
+                              log: TableLog, base: Manifest,
+                              newDead: DataFrame): Option[(Long, Long)] = {
+      val dvOut = TableLog.newDvRel(base.version + 1)
       val (dvList, newSlices, prevTouched) =
-        writeDvSlices(spark, fs, v, newDead, dvOut)
-      tryPublishPositions(fs, v, "delete", dvList, Nil,
+        writeDvSlices(spark, log, base.dv, newDead, dvOut)
+      tryPublishPositions(log, base, "delete", dvList, Nil,
         allowConstraintWinner = true) match {
         case Some(newV) =>
-          Some((newV, sliceRecordCount(fs, newSlices) -
-            sliceRecordCount(fs, prevTouched)))
+          Some((newV, sliceRecordCount(log, newSlices) -
+            sliceRecordCount(log, prevTouched)))
         case None =>
-          fs.delete(new org.apache.hadoop.fs.Path(path, dvOut), true)
+          log.fs.delete(new org.apache.hadoop.fs.Path(path, dvOut), true)
           None
       }
     }
@@ -1681,10 +1366,9 @@ object GraftSink {
       * (the new #dv= slice list, the new slices, the prior touched
       * slices) — shared by delete and update publishes. */
     private def writeDvSlices(spark: org.apache.spark.sql.SparkSession,
-                              fs: org.apache.hadoop.fs.FileSystem,
-                              v: Long, newDead: DataFrame, dvOut: String)
+                              log: TableLog, prevSlices: Seq[String],
+                              newDead: DataFrame, dvOut: String)
         : (Seq[String], Seq[String], Seq[String]) = {
-      val prevSlices = dvSlicesOf(fs, v)
       val bucketed = newDead
         .withColumn("__dvb", dvBucketCol(col("file"))).persist()
       try {
@@ -1693,14 +1377,14 @@ object GraftSink {
         val touched = bucketed.select("__dvb").distinct()
           .collect().map(_.getLong(0)).toSet
         val (prevTouched, prevCarried) = prevSlices.partition(s =>
-          touched.contains(sliceBucket(s)))
+          touched.contains(TableLog.sliceBucket(s)))
         bucketed
           .unionByName(readDv(spark, prevTouched)
             .withColumn("__dvb", dvBucketCol(col("file"))))
           .repartition(col("__dvb"))
           .write.mode(SaveMode.Overwrite).partitionBy("__dvb")
           .parquet(s"$path/$dvOut")
-        val newSlices = fs.listStatus(
+        val newSlices = log.fs.listStatus(
             new org.apache.hadoop.fs.Path(path, dvOut)).toSeq
           .filter(_.isDirectory)
           .map(d => s"$dvOut/${d.getPath.getName}").sorted
@@ -1709,14 +1393,46 @@ object GraftSink {
     }
 
     /** Footer row counts across DV slice dirs — driver metadata. */
-    private def sliceRecordCount(fs: org.apache.hadoop.fs.FileSystem,
-                                 slices: Seq[String]): Long =
-      slices.map { s =>
-        footerRecordCount(fs, fs.listStatus(
-            new org.apache.hadoop.fs.Path(path, s)).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(f => s"$s/${f.getPath.getName}"))
-      }.sum
+    private def sliceRecordCount(log: TableLog, slices: Seq[String]): Long =
+      log.footerRows(slices.flatMap(log.parquetFiles))
+
+    /** The table's bucket spec as of `m` — the newest manifest at or
+      * below `m` carrying `#buckets=`, stopping at any layout reset (a
+      * full overwrite, or a restore to an unbucketed version — it would
+      * have stamped #buckets otherwise). An append/commitBatch version
+      * of a bucketed table carries no #buckets itself, but its reader
+      * still lives under the spec; [[restore]] republishes it so a later
+      * merge/lookup with a different numBuckets cannot silently
+      * mis-prune (ADVICE r16). Driver work is the headers back to the
+      * newest spec (vacuumed manifests skipped). */
+    private def bucketSpecAsOf(log: TableLog, m: Manifest): Option[Int] =
+      newestFirst(log, m).find(h => h.buckets.isDefined ||
+        h.kind.exists(k => k == "overwrite" || k == "restore"))
+        .flatMap(_.buckets)
+
+    /** Bucket spec is TABLE metadata (ADVICE r15): an operation passing
+      * a different count would silently mis-prune, so it fails loudly. */
+    private def requireBuckets(log: TableLog, m: Manifest, numBuckets: Int,
+                               misuse: String): Unit =
+      bucketSpecAsOf(log, m).foreach(b => require(b == numBuckets,
+        s"$path: table is bucketed into $b buckets (manifest #buckets); " +
+          s"$misuse — pass the table's spec"))
+
+    /** The requested keys as a one-partition frame typed like the
+      * table's key columns, and the buckets they hash to (|keys| rows,
+      * driver-side). */
+    private def keyBuckets(spark: org.apache.spark.sql.SparkSession,
+                           m: Manifest, keyCols: Seq[String],
+                           keys: Seq[Seq[Any]], numBuckets: Int)
+        : (DataFrame, Set[Long]) = {
+      val schema = schemaOf(m).getOrElse(readAt(spark, m).schema)
+      val keyDf = spark.createDataFrame(
+        spark.sparkContext.parallelize(
+          keys.map(org.apache.spark.sql.Row.fromSeq), 1),
+        org.apache.spark.sql.types.StructType(keyCols.map(schema(_))))
+      (keyDf, keyDf.select(bucketOf(keyCols, numBuckets).as("__b"))
+        .distinct().collect().map(_.getLong(0)).toSet)
+    }
 
     /** KEYED deletion-vector delete on a BUCKETED table — the GDPR
       * path at scale: the requested keys hash to their buckets
@@ -1731,38 +1447,26 @@ object GraftSink {
                    keyCols: Seq[String], keys: Seq[Seq[Any]],
                    numBuckets: Int = 64): (Long, Long) = {
       require(keys.nonEmpty, "deleteKeys needs at least one key")
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
+      val log = this.log(spark)
       // same OCC retry as deleteWhere: content winners re-derive
       var attempts = 0
       while (attempts < 5) {
         attempts += 1
-        val v = currentVersion(fs)
-        require(v > 0, s"$path: no committed versions")
-        bucketSpec(fs).foreach(b => require(b == numBuckets,
-          s"$path: table is bucketed into $b buckets (manifest " +
-            s"#buckets); deleteKeys with $numBuckets would prune the " +
-            "wrong buckets and silently miss rows — pass the table's " +
-            "spec"))
-        val schema = versionSchema(fs, v)
-        val keyDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            keys.map(org.apache.spark.sql.Row.fromSeq), 1),
-          org.apache.spark.sql.types.StructType(keyCols.map(c =>
-            read(spark).schema(c))))
-        val wanted = keyDf.select(bucketOf(keyCols, numBuckets).as("__b"))
-          .distinct().collect().map(_.getLong(0)).toSet
-        val rels = manifestRawLines(fs, v).map(stripStats).filter(rel =>
-          pathBucket(rel).forall(wanted.contains))
-        if (rels.isEmpty) return (v, 0L) // keys hash to empty buckets
+        val m = log.latest()
+        require(m.version > 0, s"$path: no committed versions")
+        requireBuckets(log, m, numBuckets, s"deleteKeys with $numBuckets " +
+          "would prune the wrong buckets and silently miss rows")
+        val (keyDf, wanted) = keyBuckets(spark, m, keyCols, keys, numBuckets)
+        val rels = m.files.filter(rel =>
+          TableLog.pathBucket(rel).forall(wanted.contains))
+        if (rels.isEmpty) return (m.version, 0L) // keys hash to empty buckets
         // readFilesAddr prunes the DV slices to the wanted buckets too
         // — the erasure loads 1/numBuckets of the vector, not all of it
-        val alive = readFilesAddr(spark, fs, rels, schema,
-          dvSlicesOf(fs, v), renameOf(fs, v))
+        val alive = readFilesAddr(spark, rels, schemaOf(m), m.dv, m.rename)
         val newDead = alive.join(broadcast(keyDf), keyCols, "left_semi")
           .select(col("__dv_file").as("file"),
             col("__dv_row").as("row_index"))
-        publishDelete(spark, fs, v, newDead) match {
+        publishDelete(spark, log, m, newDead) match {
           case Some(r) => return r
           case None => () // content winner — loop re-derives
         }
@@ -1792,8 +1496,7 @@ object GraftSink {
                     cond: Column, set: Map[String, Column],
                     beforePublish: () => Unit = () => ()): (Long, Long) = {
       require(set.nonEmpty, "updateWhere needs at least one SET column")
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      val log = this.log(spark)
       // same OCC retry as deleteWhere — a content winner re-derives
       // the matches against the new current version (which also
       // re-validates against its checks: allowConstraintWinner=false
@@ -1801,16 +1504,14 @@ object GraftSink {
       var attempts = 0
       while (attempts < 5) {
         attempts += 1
-        val v = currentVersion(fs)
-        require(v > 0, s"$path: no committed versions")
-        val schema = versionSchema(fs, v)
-        val rename = renameOf(fs, v)
+        val m = log.latest()
+        require(m.version > 0, s"$path: no committed versions")
         // stats-pruned match scan, same as deleteWhere: files whose
         // footer range excludes the predicate are never read
-        val candidates = pruneByPredicate(fs, v, cond)
-        if (candidates.isEmpty) return (v, 0L) // stats exclude every file
-        val alive = readFilesAddr(spark, fs, candidates,
-          schema, dvSlicesOf(fs, v), rename)
+        val candidates = pruneByPredicate(m, cond)
+        if (candidates.isEmpty) return (m.version, 0L) // stats exclude every file
+        val alive = readFilesAddr(spark, candidates, schemaOf(m), m.dv,
+          m.rename)
         val dataCols = alive.columns.toSeq
           .filterNot(c => c == "__dv_file" || c == "__dv_row")
         set.keys.foreach(k => require(dataCols.contains(k),
@@ -1821,32 +1522,25 @@ object GraftSink {
           val updated = pre.select(dataCols.map(c =>
             set.get(c).map(_.cast(pre.schema(c).dataType).as(c))
               .getOrElse(col(c))): _*)
-          checksOf(fs, v).foreach { case (n, sqlTxt) =>
-            require(updated.where(!expr(sqlTxt)).limit(1).count() == 0,
-              s"$path: CHECK constraint '$n' ($sqlTxt) violated by the " +
-                "updated rows")
-          }
-          val dataRel = s"_data/commit-${v + 1}-${java.util.UUID.randomUUID}"
-          val dataDir = new org.apache.hadoop.fs.Path(root, dataRel)
-          toPhysical(updated, rename).write
-            .mode(SaveMode.Overwrite).parquet(dataDir.toString)
-          val newFiles = statsLines(fs, fs.listStatus(dataDir).toSeq
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            .map(f => s"$dataRel/${f.getPath.getName}"))
-          val dvOut = s"_dv/v${v + 1}-${java.util.UUID.randomUUID}"
+          requireChecks(updated, m.checks, "the updated rows")
+          val dataRel = TableLog.newDataRel(m.version + 1)
+          toPhysical(updated, m.rename).write
+            .mode(SaveMode.Overwrite).parquet(s"$path/$dataRel")
+          val newFiles = log.fileLines(dataRel)
+          val dvOut = TableLog.newDvRel(m.version + 1)
           val newDead = matching.select(col("__dv_file").as("file"),
             col("__dv_row").as("row_index"))
           val (dvList, newSlices, prevTouched) =
-            writeDvSlices(spark, fs, v, newDead, dvOut)
+            writeDvSlices(spark, log, m.dv, newDead, dvOut)
           if (attempts == 1) beforePublish()
-          tryPublishPositions(fs, v, "update", dvList, newFiles,
+          tryPublishPositions(log, m, "update", dvList, newFiles,
             allowConstraintWinner = false) match {
             case Some(newV) =>
-              return (newV, sliceRecordCount(fs, newSlices) -
-                sliceRecordCount(fs, prevTouched))
-            case None =>
-              fs.delete(new org.apache.hadoop.fs.Path(path, dvOut), true)
-              fs.delete(dataDir, true) // content winner — re-derive
+              return (newV, sliceRecordCount(log, newSlices) -
+                sliceRecordCount(log, prevTouched))
+            case None => // content winner — re-derive
+              log.fs.delete(new org.apache.hadoop.fs.Path(path, dvOut), true)
+              log.fs.delete(new org.apache.hadoop.fs.Path(path, dataRel), true)
           }
         } finally matching.unpersist()
       }
@@ -1855,44 +1549,20 @@ object GraftSink {
         "re-run when the table quiesces")
     }
 
-    /** CHECK constraints of version `v` (`#checks=`, carried by every
-      * content commit; `name::sql` pairs joined by `;;`). */
-    private def checksOf(fs: org.apache.hadoop.fs.FileSystem,
-                         v: Long): Map[String, String] = {
-      if (v < 1) return Map.empty
-      val m = new org.apache.hadoop.fs.Path(path,
-        s"_manifests/v$v.manifest")
-      if (!fs.exists(m)) Map.empty
-      else manifestMeta(fs, v).get("checks").map(_.split(";;")
-        .filter(_.nonEmpty).map { pair =>
-          val i = pair.indexOf("::")
-          pair.substring(0, i) -> pair.substring(i + 2)
-        }.toMap).getOrElse(Map.empty)
-    }
-
-    private def encodeChecks(checks: Map[String, String]): String =
-      checks.toSeq.sorted.map { case (n, sqlTxt) =>
-        require(n.matches("[A-Za-z0-9_]+"),
-          s"constraint name must be [A-Za-z0-9_]+: $n")
-        require(!sqlTxt.contains(";;") && !sqlTxt.contains("\n"),
-          s"constraint SQL must be line-safe and ';;'-free: $sqlTxt")
-        s"$n::$sqlTxt"
-      }.mkString(";;")
-
     /** ADD a CHECK constraint (Delta's `ALTER TABLE ADD CONSTRAINT`):
       * validates the EXISTING content first (one short-circuited scan
       * — a constraint that does not hold today is refused), then
       * publishes a `#kind=constraint` version carrying the check in
-      * its header; every later append / merge / update validates its
-      * incoming rows against all standing checks BEFORE writing (one
-      * limit-1 aggregation per check per commit — batch-sized, and a
-      * violation leaves no orphan files). Overwrites reset constraints
-      * with the rest of the table metadata. */
+      * its header (`#checks=`, carried by every content commit); every
+      * later append / merge / update validates its incoming rows
+      * against all standing checks BEFORE writing (one limit-1
+      * aggregation per check per commit — batch-sized, and a violation
+      * leaves no orphan files). Overwrites reset constraints with the
+      * rest of the table metadata. */
     def addConstraint(spark: org.apache.spark.sql.SparkSession,
                       name: String, conditionSql: String,
                       beforePublish: () => Unit = () => ()): Long = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
+      val log = this.log(spark)
       // OCC retry (VERDICT r17 ask 3): a lost race re-reads the new
       // current version and RE-VALIDATES the standing content against
       // the constraint — the winner may have added rows this
@@ -1902,25 +1572,20 @@ object GraftSink {
       var attempts = 0
       while (attempts < 5) {
         attempts += 1
-        val v = currentVersion(fs)
-        require(v > 0, s"$path: no committed versions")
-        val prev = checksOf(fs, v)
-        require(!prev.contains(name),
+        val m = log.latest()
+        require(m.version > 0, s"$path: no committed versions")
+        require(!m.checks.contains(name),
           s"$path: constraint '$name' already exists")
-        require(readVersion(spark, v)
+        require(readAt(spark, m)
           .where(!expr(conditionSql)).limit(1).count() == 0,
           s"$path: existing rows violate CHECK '$name' ($conditionSql) " +
             "— a constraint must hold over the standing content")
-        val meta = manifestMeta(fs, v)
-        val header = headerLines(Map(
-          "kind" -> "constraint",
-          "checks" -> encodeChecks(prev + (name -> conditionSql))) ++
-          meta.get("schema").map("schema" -> _) ++
-          meta.get("dv").map("dv" -> _) ++
-          meta.get("rename").map("rename" -> _))
+        val header = TableLog.header(m.carry("schema", "dv", "rename") +
+          ("kind" -> "constraint") +
+          ("checks" -> TableLog.encodeChecks(m.checks + (name -> conditionSql))))
         if (attempts == 1) beforePublish()
-        if (tryPublish(fs, v + 1, header ++ manifestRawLines(fs, v)))
-          return v + 1
+        if (log.publish(m.version + 1, header ++ m.lines))
+          return m.version + 1
       }
       throw new IllegalStateException(s"$path: addConstraint lost the " +
         "publish race 5 times — a writer is committing continuously; " +
@@ -1929,25 +1594,15 @@ object GraftSink {
 
     /** DESCRIBE HISTORY: one row per retained version — (version,
       * kind, n_files, n_dv_slices, batch, restored_from) from the
-      * manifest headers. Driver work is |versions| header reads;
+      * manifest headers. Driver work is |versions| manifest reads;
       * vacuumed versions are skipped. */
     def history(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val v = currentVersion(fs)
-      val rows = (1L to v).flatMap { kv =>
-        val m = new org.apache.hadoop.fs.Path(path,
-          s"_manifests/v$kv.manifest")
-        if (!fs.exists(m)) None
-        else {
-          val meta = manifestMeta(fs, kv)
-          Some(org.apache.spark.sql.Row(kv,
-            meta.getOrElse("kind", null),
-            manifestFiles(fs, kv).size.toLong,
-            dvSlicesOf(fs, kv).size.toLong,
-            meta.get("batch").map(_.toLong).orNull,
-            meta.get("restored_from").map(_.toLong).orNull))
-        }
+      val log = this.log(spark)
+      val rows = (1L to log.currentVersion()).flatMap(log.find).map { m =>
+        org.apache.spark.sql.Row(m.version, m.kind.orNull,
+          m.lines.size.toLong, m.dv.size.toLong,
+          m.meta.get("batch").map(_.toLong).orNull,
+          m.meta.get("restored_from").map(_.toLong).orNull)
       }
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("version",
@@ -1968,11 +1623,9 @@ object GraftSink {
 
     /** The table at its latest version. */
     def read(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val v = currentVersion(fs)
-      require(v > 0, s"$path: no committed versions")
-      readVersion(spark, v)
+      val m = log(spark).latest()
+      require(m.version > 0, s"$path: no committed versions")
+      readAt(spark, m)
     }
 
     /** MERGE commit (the Delta `MERGE INTO` / warehouse-upsert shape):
@@ -1981,7 +1634,10 @@ object GraftSink {
       * wins (ordered by `orderCols`), a 'D' tombstone deletes, an
       * unmatched key inserts, and snapshot rows the batch never touched
       * carry over unchanged. The batch's `opCol` is consumed (the
-      * table stores post-images, not ops).
+      * table stores post-images, not ops). The batch's surviving rows
+      * are validated against the standing CHECK constraints before
+      * anything is written, and the constraints carry into the new
+      * version.
       *
       * Scale shape: ONE key-hash exchange on each side of one
       * anti-join — the same work Delta does when it rewrites matched
@@ -1993,22 +1649,30 @@ object GraftSink {
     def merge(batch: DataFrame, keyCols: Seq[String],
               orderCols: Seq[String], opCol: String = "op"): Long = {
       val spark = batch.sparkSession
+      val log = this.log(spark)
+      val cur = log.latest()
       val w = Window.partitionBy(keyCols.map(col): _*)
         .orderBy(orderCols.map(c => col(c).desc): _*)
       val latest = batch
         .withColumn("__rn", row_number().over(w))
         .where(col("__rn") === 1).drop("__rn")
+      val upserts = latest.where(col(opCol) =!= "D").drop(opCol)
+      requireChecks(upserts, cur.checks,
+        "this merge batch — nothing was written")
       val current =
-        if (currentVersion(spark) == 0L)
+        if (cur.version == 0L)
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(
-              latest.drop(opCol).schema.fields))
-        else read(spark)
+            org.apache.spark.sql.types.StructType(upserts.schema.fields))
+        else readAt(spark, cur)
       val merged = current
         .join(latest.select(keyCols.map(col): _*), keyCols, "left_anti")
-        .unionByName(latest.where(col(opCol) =!= "D").drop(opCol))
-      commit(merged, overwrite = true)
+        .unionByName(upserts)
+      // the merge publishes as an overwrite, which resets table
+      // metadata: the checks it validated ride in explicitly
+      commitOn(log, cur, merged, overwrite = true,
+        if (cur.checks.isEmpty) Map.empty
+        else Map("checks" -> TableLog.encodeChecks(cur.checks)), () => ())
     }
 
     /** Deterministic key-bucket of a row — shared by the bucketed
@@ -2016,11 +1680,6 @@ object GraftSink {
       * sessions, executors, and Spark versions). */
     private def bucketOf(keyCols: Seq[String], numBuckets: Int): Column =
       pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets.toLong))
-
-    /** Bucket id encoded in a manifest path, when the file was written
-      * by a bucketed commit. */
-    private def pathBucket(rel: String): Option[Long] =
-      "__bucket=(\\d+)/".r.findFirstMatchIn(rel).map(_.group(1).toLong)
 
     /** FILE-PRUNED merge (Delta's real MERGE shape): the table's data
       * files are hive-partitioned by a deterministic key bucket, so a
@@ -2061,15 +1720,23 @@ object GraftSink {
                       numBuckets: Int = 64,
                       meta: Map[String, String] = Map.empty,
                       beforePublish: () => Unit = () => (),
-                      maxRowsPerBucketFile: Long = 4L * 1024 * 1024): Long = {
-      val spark = batch.sparkSession
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      val v = currentVersion(fs)
-      bucketSpec(fs).foreach(b => require(b == numBuckets,
-        s"$path: table is bucketed into $b buckets (manifest #buckets); " +
-          s"mergeBucketed called with $numBuckets would silently " +
-          "mis-prune carried files — pass the table's spec"))
+                      maxRowsPerBucketFile: Long =
+                        VersionedTable.MaxRowsPerBucketFile): Long = {
+      val log = this.log(batch.sparkSession)
+      mergeBucketedOn(log, log.latest(), batch, keyCols, orderCols, opCol,
+        numBuckets, meta, beforePublish, maxRowsPerBucketFile)
+    }
+
+    /** [[mergeBucketed]] on top of `cur`, the latest manifest as the
+      * caller resolved it. */
+    private def mergeBucketedOn(log: TableLog, cur: Manifest,
+                                batch: DataFrame, keyCols: Seq[String],
+                                orderCols: Seq[String], opCol: String,
+                                numBuckets: Int, meta: Map[String, String],
+                                beforePublish: () => Unit,
+                                maxRowsPerBucketFile: Long): Long = {
+      requireBuckets(log, cur, numBuckets, s"mergeBucketed called with " +
+        s"$numBuckets would silently mis-prune carried files")
       val w = Window.partitionBy(keyCols.map(col): _*)
         .orderBy(orderCols.map(c => col(c).desc): _*)
       // Materialize the batch's latest-per-key ONCE: it is consumed by
@@ -2085,35 +1752,27 @@ object GraftSink {
       val touched = latest
         .select(bucketOf(keyCols, numBuckets).as("__b")).distinct()
         .collect().map(_.getLong(0)).toSet // ≤ numBuckets rows
-      val (touchedLines, carried) =
-        if (v == 0) (Seq.empty[String], Seq.empty[String])
-        else manifestRawLines(fs, v).partition(l =>
-          pathBucket(stripStats(l)).forall(touched.contains))
-      val touchedFiles = touchedLines.map(stripStats)
+      def inTouched(line: String): Boolean =
+        TableLog.pathBucket(TableLog.path(line)).forall(touched.contains)
+      val (touchedLines, carried) = cur.lines.partition(inTouched)
+      val touchedFiles = touchedLines.map(TableLog.path)
       val outSchema = org.apache.spark.sql.types.StructType(
         latest.drop(opCol).schema.fields)
-      schemaGate(fs, v, outSchema)
-      val standingChecks = checksOf(fs, v)
-      standingChecks.foreach { case (n, sqlTxt) =>
-        require(latest.where(col(opCol) =!= "D").drop(opCol)
-          .where(!expr(sqlTxt)).limit(1).count() == 0,
-          s"$path: CHECK constraint '$n' ($sqlTxt) violated by this " +
-            "merge batch — nothing was written")
-      }
-      val renameMap = renameOf(fs, v)
-      val current = readFiles(spark, fs, touchedFiles,
+      schemaGate(log, cur, outSchema)
+      requireChecks(latest.where(col(opCol) =!= "D").drop(opCol),
+        cur.checks, "this merge batch — nothing was written")
+      val current = readFiles(batch.sparkSession, touchedFiles,
         Some(asNullable(outSchema)
           .asInstanceOf[org.apache.spark.sql.types.StructType]),
-        dvSlicesOf(fs, v), renameMap)
+        cur.dv, cur.rename)
       val merged = current
         .join(latest.select(keyCols.map(col): _*), keyCols, "left_anti")
         .unionByName(latest.where(col(opCol) =!= "D").drop(opCol))
         .withColumn("__bucket", bucketOf(keyCols, numBuckets))
       // write the rewrite hive-partitioned by bucket, then publish
       // carried ∪ new manifests with optimistic disjoint-merge rebase
-      var newV = v + 1
-      val dataRel = s"_data/commit-$newV-${java.util.UUID.randomUUID}"
-      val dataDir = new org.apache.hadoop.fs.Path(root, dataRel)
+      var newV = cur.version + 1
+      val dataRel = TableLog.newDataRel(newV)
       // Cluster the rewrite by bucket before writing: the anti-join
       // leaves `merged` hash-partitioned on keyCols (Spark's Murmur3),
       // which is UNCORRELATED with bucketOf's xxhash64 — so a
@@ -2133,58 +1792,47 @@ object GraftSink {
       // file per bucket (SinksSpec pins both). Manifest pruning is
       // per-file by path bucket, so multi-file buckets carry/rewrite
       // exactly like single-file ones.
-      toPhysical(merged.repartition(numBuckets, col("__bucket")), renameMap)
+      toPhysical(merged.repartition(numBuckets, col("__bucket")), cur.rename)
         .write.mode(SaveMode.Overwrite)
         .option("maxRecordsPerFile", maxRowsPerBucketFile)
-        .partitionBy("__bucket").parquet(dataDir.toString)
-      val newFiles = statsLines(fs, for {
-        d <- fs.listStatus(dataDir).toSeq if d.isDirectory
-        f <- fs.listStatus(d.getPath)
-        if f.isFile && f.getPath.getName.endsWith(".parquet")
-      } yield s"$dataRel/${d.getPath.getName}/${f.getPath.getName}")
+        .partitionBy("__bucket").parquet(s"$path/$dataRel")
+      val newFiles = log.fileLines(dataRel)
       // carried files keep their deleted positions — their buckets'
       // DV slices carry verbatim; the rewritten (touched) buckets'
       // rows were DV-filtered above, so THEIR slices are DROPPED from
       // the new version (a merge physically ages the vector out,
       // bucket by bucket — the unbucketed −1 slice too: unbucketed
       // files always join the rewrite)
-      val dvCarry = dvSlicesOf(fs, v).filterNot { s =>
-        val b = sliceBucket(s); b == -1L || touched.contains(b)
+      val dvCarry = cur.dv.filterNot { s =>
+        val b = TableLog.sliceBucket(s); b == -1L || touched.contains(b)
       }
-      val header = headerLines(meta +
+      val header = TableLog.header(meta ++ cur.carry("rename", "checks") +
         ("kind" -> "merge") +
         ("buckets" -> numBuckets.toString) +
         ("touched" -> touched.toSeq.sorted.mkString(",")) +
         ("schema" -> outSchema.json) ++
-        (if (dvCarry.nonEmpty) Some("dv" -> dvCarry.mkString(","))
-         else None) ++
-        (if (renameMap.nonEmpty)
-          Some("rename" -> encodeRename(renameMap)) else None) ++
-        (if (standingChecks.nonEmpty)
-          Some("checks" -> encodeChecks(standingChecks)) else None))
+        (if (dvCarry.nonEmpty) Some("dv" -> dvCarry.mkString(",")) else None))
       beforePublish()
       var carriedNow = carried
       var attempts = 0
-      while (!tryPublish(fs, newV, header ++ carriedNow ++ newFiles)) {
+      while (!log.publish(newV, header ++ carriedNow ++ newFiles)) {
         attempts += 1
         // inspect the winner that took newV: rebase only when its
         // merge provably did not touch our buckets (serial-equivalent)
-        val wMeta = manifestMeta(fs, newV)
-        val wTouched = wMeta.get("touched").map(
-          _.split(',').filter(_.nonEmpty).map(_.toLong).toSet)
+        val winner = log.read(newV)
         val rebasable = attempts <= 8 &&
-          wMeta.get("kind").contains("merge") &&
-          wMeta.get("buckets").contains(numBuckets.toString) &&
-          wTouched.exists(_.intersect(touched).isEmpty) &&
-          touchedFiles.forall(rel => pathBucket(rel).isDefined)
+          winner.kind.contains("merge") &&
+          winner.buckets.contains(numBuckets) &&
+          winner.touched.exists(_.intersect(touched).isEmpty) &&
+          touchedFiles.forall(rel => TableLog.pathBucket(rel).isDefined)
         if (!rebasable)
           throw new IllegalStateException(s"$path: concurrent commit took " +
             s"v$newV while this merge was writing, and its changes are " +
             "not a disjoint-bucket merge (or rebase attempts exhausted) " +
             "— re-run the merge against the new current version (the " +
             "carried file list is stale)")
-        carriedNow = manifestRawLines(fs, newV).filterNot(l =>
-          pathBucket(stripStats(l)).exists(touched.contains))
+        carriedNow = winner.lines.filterNot(l =>
+          TableLog.pathBucket(TableLog.path(l)).exists(touched.contains))
         newV += 1
       }
       newV
@@ -2202,12 +1850,14 @@ object GraftSink {
                            orderCols: Seq[String], opCol: String = "op",
                            numBuckets: Int = 64,
                            batchId: Long): Option[Long] = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-      if (batchSeen(fs, batchId)) None
-      else Some(mergeBucketed(batch, keyCols, orderCols, opCol,
-        numBuckets, meta = Map("batch" -> batchId.toString,
-          "batch_hi" -> math.max(batchId, batchHi(fs)).toString)))
+      val log = this.log(batch.sparkSession)
+      val cur = log.latest()
+      val hi = batchHi(log, cur)
+      if (batchId <= hi) None
+      else Some(mergeBucketedOn(log, cur, batch, keyCols, orderCols, opCol,
+        numBuckets, Map("batch" -> batchId.toString,
+          "batch_hi" -> math.max(batchId, hi).toString), () => (),
+        VersionedTable.MaxRowsPerBucketFile))
     }
 
     /** RESTORE (Delta's `RESTORE TABLE … TO VERSION`): republish
@@ -2220,65 +1870,24 @@ object GraftSink {
       * reverted arbitrarily — same class as an overwrite). */
     def restore(spark: org.apache.spark.sql.SparkSession,
                 v: Long): Long = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val cur = currentVersion(fs)
+      val log = this.log(spark)
+      val cur = log.currentVersion()
       require(v >= 1 && v <= cur,
         s"$path: cannot restore to v$v (current is v$cur)")
-      val meta = manifestMeta(fs, v)
+      val m = log.read(v)
       // bucket spec resolved AS OF v, not from v's own header alone:
       // an append/commitBatch version of a bucketed table carries no
       // #buckets itself, but its reader still lives under the spec —
       // a restore must republish that guard (ADVICE r16)
-      val header = headerLines(Map(
-        "kind" -> "restore", "restored_from" -> v.toString) ++
-        meta.get("schema").map("schema" -> _) ++
-        meta.get("dv").map("dv" -> _) ++
-        meta.get("rename").map("rename" -> _) ++
-        meta.get("checks").map("checks" -> _) ++
-        bucketSpecAsOf(fs, v).map(b => "buckets" -> b.toString))
+      val header = TableLog.header(m.carry("schema", "dv", "rename", "checks") +
+        ("kind" -> "restore") + ("restored_from" -> v.toString) ++
+        bucketSpecAsOf(log, m).map(b => "buckets" -> b.toString))
       val newV = cur + 1
-      if (!tryPublish(fs, newV, header ++ manifestRawLines(fs, v)))
+      if (!log.publish(newV, header ++ m.lines))
         throw new IllegalStateException(s"$path: concurrent commit took " +
           s"v$newV while this restore was publishing — re-check and " +
           "re-run against the new current version")
       newV
-    }
-
-    /** The table's persisted bucket spec: the newest manifest carrying
-      * `#buckets=` below any layout reset (a full overwrite, or a
-      * restore to an unbucketed version). Driver work is |versions|
-      * header reads (vacuumed manifests skipped). */
-    private def bucketSpec(fs: org.apache.hadoop.fs.FileSystem)
-        : Option[Int] = bucketSpecAsOf(fs, currentVersion(fs))
-
-    /** [[bucketSpec]] as of version `v` — the spec a reader of that
-      * version lives under. [[restore]] stamps this (not just the
-      * target manifest's own header): restoring to an append commit of
-      * a bucketed table must keep the spec guard alive, or a later
-      * merge/lookup with a different numBuckets would silently
-      * mis-prune (ADVICE r16). */
-    private def bucketSpecAsOf(fs: org.apache.hadoop.fs.FileSystem,
-                               v: Long): Option[Int] = {
-      var kv = v
-      while (kv >= 1) {
-        val m = new org.apache.hadoop.fs.Path(path,
-          s"_manifests/v$kv.manifest")
-        if (fs.exists(m)) {
-          val meta = manifestMeta(fs, kv)
-          meta.get("buckets") match {
-            case Some(b) => return Some(b.toInt)
-            case None =>
-              // a full overwrite (or a restore to an unbucketed
-              // version — it would have stamped #buckets otherwise)
-              // replaced the whole layout — nothing older is live
-              if (meta.get("kind").exists(k =>
-                k == "overwrite" || k == "restore")) return None
-          }
-        }
-        kv -= 1
-      }
-      None
     }
 
     /** Time travel by EVENT TIME (`AS OF TIMESTAMP` with deterministic
@@ -2291,35 +1900,24 @@ object GraftSink {
       * Versions without a watermark (plain commits) are skipped.
       * Driver work is |versions| manifest headers. */
     def readAsOfTs(spark: org.apache.spark.sql.SparkSession,
-                   tsUs: Long): DataFrame = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      readVersion(spark, resolveAsOfTs(fs, tsUs).getOrElse(
+                   tsUs: Long): DataFrame =
+      readAt(spark, resolveAsOfTs(log(spark), tsUs).getOrElse(
         throw new IllegalArgumentException(
           s"$path: no version has watermark <= $tsUs")))
-    }
 
     /** Public form of the event-time AS OF resolution — the version a
       * `TIMESTAMP AS OF` read serves ([[graft.sources.GraftCatalog]]
       * routes SQL time travel through this). */
     def versionAsOfTs(spark: org.apache.spark.sql.SparkSession,
-                      tsUs: Long): Long = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      resolveAsOfTs(fs, tsUs).getOrElse(
+                      tsUs: Long): Long =
+      resolveAsOfTs(log(spark), tsUs).getOrElse(
         throw new IllegalArgumentException(
-          s"$path: no version has watermark <= $tsUs"))
-    }
+          s"$path: no version has watermark <= $tsUs")).version
 
-    /** Highest version whose `#max_ts` watermark ≤ `tsUs` (None when
-      * no watermarked version qualifies). |versions| header reads. */
-    private def resolveAsOfTs(fs: org.apache.hadoop.fs.FileSystem,
-                              tsUs: Long): Option[Long] =
-      (1L to currentVersion(fs)).reverse.find { kv =>
-        fs.exists(new org.apache.hadoop.fs.Path(path,
-          s"_manifests/v$kv.manifest")) &&
-          manifestMeta(fs, kv).get("max_ts").exists(_.toLong <= tsUs)
-      }
+    /** Highest retained manifest whose `#max_ts` watermark ≤ `tsUs`
+      * (None when no watermarked version qualifies). */
+    private def resolveAsOfTs(log: TableLog, tsUs: Long): Option[Manifest] =
+      newestFirst(log, log.latest()).find(_.maxTs.exists(_ <= tsUs))
 
     /** [[commit]] stamping the data's max `tsCol` as the version's
       * event-time watermark (one cheap extra aggregate over the batch
@@ -2347,33 +1945,23 @@ object GraftSink {
                keyCols: Seq[String], keys: Seq[Seq[Any]],
                numBuckets: Int = 64): DataFrame = {
       require(keys.nonEmpty, "lookup needs at least one key")
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val v = currentVersion(fs)
-      require(v > 0, s"$path: no committed versions")
-      bucketSpec(fs).foreach(b => require(b == numBuckets,
-        s"$path: table is bucketed into $b buckets (manifest #buckets); " +
-          s"lookup with $numBuckets would prune the wrong buckets and " +
-          "silently miss rows — pass the table's spec"))
-      val keyDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          keys.map(org.apache.spark.sql.Row.fromSeq), 1),
-        org.apache.spark.sql.types.StructType(keyCols.map(c =>
-          read(spark).schema(c))))
-      val wanted = keyDf.select(bucketOf(keyCols, numBuckets).as("__b"))
-        .distinct().collect().map(_.getLong(0)).toSet
-      val files = manifestFiles(fs, v).filter(rel =>
-        pathBucket(rel).forall(wanted.contains))
-      if (files.isEmpty) return read(spark).limit(0)
-      readFiles(spark, fs, files, versionSchema(fs, v), dvSlicesOf(fs, v),
-        renameOf(fs, v))
+      val log = this.log(spark)
+      val m = log.latest()
+      require(m.version > 0, s"$path: no committed versions")
+      requireBuckets(log, m, numBuckets, s"lookup with $numBuckets would " +
+        "prune the wrong buckets and silently miss rows")
+      val (keyDf, wanted) = keyBuckets(spark, m, keyCols, keys, numBuckets)
+      val files = m.files.filter(rel =>
+        TableLog.pathBucket(rel).forall(wanted.contains))
+      if (files.isEmpty) return readAt(spark, m).limit(0)
+      readFiles(spark, files, schemaOf(m), m.dv, m.rename)
         .join(broadcast(keyDf), keyCols, "left_semi")
     }
 
     /** CHANGE DATA FEED between versions (Delta's `table_changes`):
       * rows that entered/changed/left the table in (fromV, toV], each
       * tagged `_change_type` + `_commit_version`. Versions are
-      * classified INDIVIDUALLY by their manifest's `#kind`:
+      * classified INDIVIDUALLY by [[TableLog.change]]:
       *
       *  - an APPEND version never scans old data and never shuffles:
       *    its manifest is a superset of its parent's, so the file-set
@@ -2383,13 +1971,16 @@ object GraftSink {
       *  - a MERGE version diffs ONLY its removed ∪ added files — the
       *    rewritten buckets; files the merge carried verbatim are
       *    byte-identical on both sides and provably changeless, so
-      *    they are never read (the r15 fallback re-diffed the whole
-      *    table; per-version work is now O(|touched buckets|));
-      *  - an OPTIMIZE version is a content-identical republish —
-      *    zero changes, zero reads;
-      *  - an OVERWRITE (or unstamped non-superset) version falls back
-      *    to the keyed full-snapshot diff — inherent: an overwrite
-      *    carries no row-level lineage. */
+      *    they are never read (per-version work is O(|touched
+      *    buckets|));
+      *  - OPTIMIZE, constraint and rename versions republish the same
+      *    content — zero changes, zero reads;
+      *  - a DELETE version reads back the positions fresh in its
+      *    deletion vector; an UPDATE version serves its added files as
+      *    post-images (and the fresh positions as pre-images on demand);
+      *  - a RESTORE or OVERWRITE (or unstamped non-superset) version
+      *    falls back to the keyed diff of the buckets it moved —
+      *    inherent: it carries no row-level lineage. */
     def changes(spark: org.apache.spark.sql.SparkSession,
                 fromV: Long, toV: Long,
                 keyCols: Seq[String] = Nil): DataFrame =
@@ -2405,16 +1996,17 @@ object GraftSink {
                 keyCols: Seq[String],
                 emitPreimages: Boolean): DataFrame = {
       require(fromV < toV, s"empty version range ($fromV, $toV]")
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      // set algebra on RAW manifest lines: files are immutable and
-      // carried verbatim (stats suffix included), so line identity is
-      // file identity; paths are stripped only at read time
-      val sets = (fromV to toV)
-        .map(v => v -> (if (v == 0) Set.empty[String]
-                        else manifestRawLines(fs, v).toSet)).toMap
-      def kindOf(v: Long): Option[String] =
-        if (v == 0) None else manifestMeta(fs, v).get("kind")
+      val log = this.log(spark)
+      changesOver(spark, (fromV to toV).map(log.readOrEmpty), keyCols,
+        emitPreimages)
+    }
+
+    /** The change feed across consecutive manifests `ms` (the first is
+      * the range's exclusive start). */
+    private def changesOver(spark: org.apache.spark.sql.SparkSession,
+                            ms: Seq[Manifest], keyCols: Seq[String],
+                            emitPreimages: Boolean): DataFrame = {
+      val (fromV, end) = (ms.head.version, ms.last)
       // every per-version frame is built under ITS version's logical
       // names; a range crossing a renameColumn version must still
       // union — physical names are stable, so each frame projects to
@@ -2422,10 +2014,9 @@ object GraftSink {
       // composition (Delta column mapping serves the whole range
       // under one set of names; ADVICE r17 — the raw unionByName
       // threw AnalysisException across a rename boundary)
-      val endInv = renameOf(fs, toV).map(_.swap) // physical -> logical
-      val endSchema = versionSchema(fs, toV)
-      def toEndNames(df: DataFrame, v: Long): DataFrame = {
-        val rn = renameOf(fs, v)
+      val endInv = end.rename.map(_.swap) // physical -> logical
+      val endSchema = schemaOf(end)
+      def toEndNames(df: DataFrame, rn: Map[String, String]): DataFrame = {
         val renamed =
           if (rn.map(_.swap) == endInv) df
           else df.select(df.columns.toSeq.map { c =>
@@ -2454,96 +2045,73 @@ object GraftSink {
               Seq(col("_change_type"), col("_commit_version")): _*)
         }
       }
-      (fromV + 1 to toV).flatMap { v =>
-        val added = (sets(v) -- sets(v - 1)).toSeq.sorted.map(stripStats)
-        val removed = (sets(v - 1) -- sets(v)).toSeq.sorted.map(stripStats)
-        val kind = kindOf(v)
-        (if (kind.contains("optimize")) None // content-identical republish
-        else if (kind.contains("restore")) {
-          // a restore can share (or superset) its parent's file lines
-          // while REVERTING content (dv included) — never file-level;
-          // always the keyed diff, each side under its own vector
-          require(keyCols.nonEmpty,
-            s"($fromV, $toV] crosses a restore commit: the keyed diff " +
-              "needs keyCols")
-          Some(keyedDiff(readVersion(spark, v - 1), readVersion(spark, v),
-            keyCols, v, emitPreimages))
-        }
-        else if (kind.contains("delete"))
-          // a DV delete changes no files: the change set is exactly
-          // the positions fresh in this version's vector, read back
-          // and tagged delete
-          freshPositionRows(spark, fs, v, "delete", Set.empty)
-        else if (kind.contains("update")) {
-          // an UPDATE version = added files (the post-images) + fresh
-          // dead positions (the pre-images, by construction the same
-          // keys); preimages emit only when asked — the keyedDiff
-          // convention
-          val post = readFiles(spark, fs, added, versionSchema(fs, v),
-              Nil, renameOf(fs, v))
-            .withColumn("_change_type", lit("update_postimage"))
-            .withColumn("_commit_version", lit(v))
-          val pre = if (!emitPreimages) None
-            else freshPositionRows(spark, fs, v, "update_preimage",
-              added.toSet)
-          Some(pre.map(post.unionByName(_)).getOrElse(post))
-        } else if (sets(v - 1).subsetOf(sets(v))) {
-          if (added.isEmpty) None
-          else Some(readFiles(spark, fs, added, versionSchema(fs, v),
-              Nil, renameOf(fs, v))
-            .withColumn("_change_type", lit("insert"))
-            .withColumn("_commit_version", lit(v)))
-        } else {
-          require(keyCols.nonEmpty,
-            s"($fromV, $toV] crosses an overwrite commit: the keyed diff " +
-              "fallback needs keyCols")
-          val schema = versionSchema(fs, v)
-          val (before, after) =
-            if (kind.contains("merge"))
-              // file-pruned: only the rewritten buckets' files move —
-              // each side under ITS version's deletion vector
-              // both sides read under v's schema + column map
-              // (physical names never change, so v's map covers the
-              // before files too)
-              (readFiles(spark, fs, removed, schema,
-                dvSlicesOf(fs, v - 1), renameOf(fs, v)),
-                readFiles(spark, fs, added, schema,
-                  dvSlicesOf(fs, v), renameOf(fs, v)))
-            else (readVersion(spark, v - 1), readVersion(spark, v))
-          Some(keyedDiff(before, after, keyCols, v, emitPreimages))
-        }).map(toEndNames(_, v))
+      def tagged(df: DataFrame, tag: String, v: Long): DataFrame =
+        df.withColumn("_change_type", lit(tag))
+          .withColumn("_commit_version", lit(v))
+      ms.zip(ms.tail).flatMap { case (prev, cur) =>
+        val v = cur.version
+        (TableLog.change(prev, cur) match {
+          case VersionChange.Unchanged => None
+          case VersionChange.Inserted(lines) =>
+            if (lines.isEmpty) None
+            else Some(tagged(readFiles(spark, lines.map(TableLog.path),
+              schemaOf(cur), Nil, cur.rename), "insert", v))
+          case VersionChange.DvDelete(slices) =>
+            freshPositionRows(spark, cur, slices, "delete", Set.empty)
+          case VersionChange.Update(posts, slices) =>
+            // post-images are the added files; the fresh dead positions
+            // are the pre-images (by construction the same keys), which
+            // emit only when asked — the keyedDiff convention
+            val postRels = posts.map(TableLog.path)
+            val post = tagged(readFiles(spark, postRels, schemaOf(cur), Nil,
+              cur.rename), "update_postimage", v)
+            val pre = if (!emitPreimages) None
+              else freshPositionRows(spark, cur, slices, "update_preimage",
+                postRels.toSet)
+            Some(pre.map(post.unionByName(_)).getOrElse(post))
+          case VersionChange.KeyedRewrite(kind, groups) =>
+            require(keyCols.nonEmpty,
+              s"($fromV, ${end.version}] crosses $kind version $v: the " +
+                "keyed diff needs keyCols")
+            // a merge carries its parent's column map, so the merge
+            // version's schema and names read both sides; a restore or
+            // overwrite may carry another physical layout (optimize
+            // resets the map), so its before side reads under the
+            // parent version. Buckets the version left identical hold
+            // the same rows on both sides and are never read.
+            val under = if (kind == "merge") cur else prev
+            if (groups.isEmpty) None
+            else Some(keyedDiff(
+              readFiles(spark, groups.flatMap(_.removed).map(TableLog.path),
+                schemaOf(under), prev.dv, under.rename),
+              readFiles(spark, groups.flatMap(_.added).map(TableLog.path),
+                schemaOf(cur), cur.dv, cur.rename),
+              keyCols, v, emitPreimages))
+        }).map(toEndNames(_, cur.rename))
       }.reduceOption(_ unionByName _).getOrElse(spark.emptyDataFrame)
     }
 
-    /** The rows at positions FRESH in version v's deletion vector,
-      * tagged `tag` — the CDF leg of delete versions and the preimage
-      * leg of update versions. Slices are carried verbatim, so fresh
-      * positions live ONLY in the slices NEW in v (list-level diff),
-      * minus the previous content of those buckets' slices — and only
-      * THOSE buckets' data files are read back (row-address
-      * semi-join). `exclude` drops rels that cannot hold fresh
-      * positions (an update version's own added files). None = the
-      * version recorded no fresh positions. */
+    /** The rows at the positions of `slices` (fresh in version `cur`'s
+      * deletion vector), tagged `tag` — the CDF leg of delete versions
+      * and the preimage leg of update versions: each slice's positions
+      * minus the previous content of its bucket's slices, read back from
+      * ONLY those buckets' data files (row-address semi-join).
+      * `exclude` drops rels that cannot hold fresh positions (an update
+      * version's own added files). None = no fresh positions. */
     private def freshPositionRows(spark: org.apache.spark.sql.SparkSession,
-                                  fs: org.apache.hadoop.fs.FileSystem,
-                                  v: Long, tag: String,
-                                  exclude: Set[String])
-        : Option[DataFrame] = {
-      val prevSet = dvSlicesOf(fs, v - 1).toSet
-      val newSlices = dvSlicesOf(fs, v).filterNot(prevSet.contains)
-      if (newSlices.isEmpty) None
+                                  cur: Manifest,
+                                  slices: Seq[VersionChange.FreshSlice],
+                                  tag: String, exclude: Set[String])
+        : Option[DataFrame] =
+      if (slices.isEmpty) None
       else {
-        val newBuckets = newSlices.map(sliceBucket).toSet
-        val oldTouched = prevSet.toSeq.filter(s =>
-          newBuckets.contains(sliceBucket(s)))
-        val fresh = readDv(spark, newSlices).join(
-          readDv(spark, oldTouched), Seq("file", "row_index"),
-          "left_anti")
-        val rels = manifestFiles(fs, v).filter(rel =>
-          !exclude.contains(rel) &&
-            newBuckets.contains(pathBucket(rel).getOrElse(-1L)))
-        val addr = readFilesAddr(spark, fs, rels, versionSchema(fs, v),
-          Nil, renameOf(fs, v))
+        val newBuckets = slices.map(s => TableLog.sliceBucket(s.slice)).toSet
+        val fresh = readDv(spark, slices.map(_.slice)).join(
+          readDv(spark, slices.flatMap(_.previous).distinct),
+          Seq("file", "row_index"), "left_anti")
+        val rels = cur.files.filter(rel => !exclude.contains(rel) &&
+          newBuckets.contains(TableLog.pathBucket(rel).getOrElse(-1L)))
+        val addr = readFilesAddr(spark, rels, schemaOf(cur), Nil, cur.rename)
         val cols = addr.columns.toSeq
           .filterNot(c => c == "__dv_file" || c == "__dv_row")
         Some(addr
@@ -2553,9 +2121,8 @@ object GraftSink {
             Seq("__dv_file", "__dv_row"), "left_semi")
           .select(cols.map(col): _*)
           .withColumn("_change_type", lit(tag))
-          .withColumn("_commit_version", lit(v)))
+          .withColumn("_commit_version", lit(cur.version)))
       }
-    }
 
     /** Full-outer keyed diff of two relations, tagged insert /
       * update_postimage / delete (plus `update_preimage` when asked —
@@ -2612,13 +2179,19 @@ object GraftSink {
     def changesAsOfTs(spark: org.apache.spark.sql.SparkSession,
                       fromTsUs: Long, toTsUs: Long,
                       keyCols: Seq[String] = Nil): DataFrame = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val fromV = resolveAsOfTs(fs, fromTsUs).getOrElse(0L)
-      val toV = resolveAsOfTs(fs, toTsUs).getOrElse(
+      val log = this.log(spark)
+      val retained = newestFirst(log, log.latest()).toVector
+      def asOf(tsUs: Long): Option[Manifest] =
+        retained.find(_.maxTs.exists(_ <= tsUs))
+      val fromV = asOf(fromTsUs).map(_.version).getOrElse(0L)
+      val toV = asOf(toTsUs).getOrElse(
         throw new IllegalArgumentException(
-          s"$path: no version has watermark <= $toTsUs"))
-      changes(spark, fromV, toV, keyCols)
+          s"$path: no version has watermark <= $toTsUs")).version
+      require(fromV < toV, s"empty version range ($fromV, $toV]")
+      val byVersion = retained.map(m => m.version -> m).toMap
+      changesOver(spark, (fromV to toV).map(v =>
+        byVersion.getOrElse(v, log.readOrEmpty(v))), keyCols,
+        emitPreimages = false)
     }
 
     /** OPTIMIZE: republish the CURRENT content bin-packed into
@@ -2633,15 +2206,15 @@ object GraftSink {
       * rewrite silently destroyed the `__bucket=` layout, forfeiting
       * [[lookup]] pruning and O(|touched|) merges): when the table is
       * bucketed, each row keeps the bucket its FILE PATH encodes
-      * (scan-local `input_file_name` parse — the bucket is a pure
-      * function of the key, so no key re-hash is even needed), the
-      * rewrite repartitions BY BUCKET (each bucket bin-packs inside
-      * one task; `maxRecordsPerFile` splits oversized ones), and the
-      * hive layout + `#buckets` spec republish intact. Rows from
-      * unbucketed plain-commit files keep a null bucket (hive default
-      * partition — still may-hold-any-key, same as before) unless
-      * `keyCols` is passed, in which case they are ASSIGNED buckets:
-      * optimize then converges a mixed table to fully-bucketed.
+      * (scan-local path parse — the bucket is a pure function of the
+      * key, so no key re-hash is even needed), the rewrite
+      * repartitions BY BUCKET (each bucket bin-packs inside one task;
+      * `maxRecordsPerFile` splits oversized ones), and the hive layout
+      * + `#buckets` spec republish intact. Rows from unbucketed
+      * plain-commit files keep a null bucket (hive default partition —
+      * still may-hold-any-key, same as before) unless `keyCols` is
+      * passed, in which case they are ASSIGNED buckets: optimize then
+      * converges a mixed table to fully-bucketed.
       *
       * Sizing reads NO data: the unbucketed path takes the row count
       * from parquet FOOTER statistics (|files| driver metadata reads,
@@ -2652,71 +2225,43 @@ object GraftSink {
     def optimize(spark: org.apache.spark.sql.SparkSession,
                  targetRecordsPerFile: Long,
                  keyCols: Seq[String] = Nil): (Long, Int, Int) = {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      val v = currentVersion(fs)
-      require(v > 0, s"$path: nothing to optimize")
-      val before = manifestFiles(fs, v)
-      val spec = bucketSpec(fs).filter(_ =>
-        before.exists(rel => pathBucket(rel).isDefined))
-      val newV = spec match {
+      val log = this.log(spark)
+      val m = log.latest()
+      require(m.version > 0, s"$path: nothing to optimize")
+      val dataRel = TableLog.newDataRel(m.version + 1)
+      val spec = bucketSpecAsOf(log, m).filter(_ =>
+        m.files.exists(rel => TableLog.pathBucket(rel).isDefined))
+      val (schema, meta) = spec match {
         case None =>
-          // row count from manifest stats (free); footer reads only
-          // for stats-less legacy lines
-          val n = manifestRawLines(fs, v).map(l =>
-            statsRows(l).getOrElse(
-              footerRecordCount(fs, Seq(stripStats(l))))).sum
           val files = math.max(1, math.ceil(
-            n.toDouble / targetRecordsPerFile).toInt)
-          publishRewrite(spark, readVersion(spark, v).repartition(files),
-            v + 1, Map("kind" -> "optimize"))
+            log.rowCount(m).toDouble / targetRecordsPerFile).toInt)
+          val current = readAt(spark, m)
+          current.repartition(files).write.mode(SaveMode.Overwrite)
+            .parquet(s"$path/$dataRel")
+          (current.schema, Map.empty[String, String])
         case Some(nb) =>
           // the bucket is derived from the row's FILE PATH via
           // _metadata (input_file_name would not survive the DV
-          // anti-join below — metadata columns bind at the scan)
-          val rels = manifestFiles(fs, v)
-          val schema = versionSchema(fs, v)
+          // anti-join below — metadata columns bind at the scan);
           // optimize rewrites EVERY file with logical names, so the
           // rename map resets (no old physical files survive)
-          val alive = readFilesAddr(spark, fs, rels, schema,
-            dvSlicesOf(fs, v), renameOf(fs, v))
-          val pathB = regexp_extract(col("__dv_file"),
-            "__bucket=(\\d+)/", 1)
-          val fromPath = when(pathB =!= "", pathB.cast("long"))
+          val alive = readFilesAddr(spark, m.files, schemaOf(m), m.dv,
+            m.rename)
+          val fromPath = TableLog.pathBucketCol(col("__dv_file"))
           val bucket =
             if (keyCols.isEmpty) fromPath
             else coalesce(fromPath, bucketOf(keyCols, nb))
           val current = alive.withColumn("__bucket", bucket)
             .drop("__dv_file", "__dv_row")
-          val packed = current.repartition(col("__bucket"))
-          val outSchema = org.apache.spark.sql.types.StructType(
-            current.drop("__bucket").schema.fields)
-          val dataRel = s"_data/commit-${v + 1}-${java.util.UUID.randomUUID}"
-          val dataDir = new org.apache.hadoop.fs.Path(root, dataRel)
-          packed.write.mode(SaveMode.Overwrite)
+          current.repartition(col("__bucket")).write.mode(SaveMode.Overwrite)
             .partitionBy("__bucket")
             .option("maxRecordsPerFile", targetRecordsPerFile)
-            .parquet(dataDir.toString)
-          val newFiles = statsLines(fs, for {
-            d <- fs.listStatus(dataDir).toSeq if d.isDirectory
-            f <- fs.listStatus(d.getPath)
-            if f.isFile && f.getPath.getName.endsWith(".parquet")
-          } yield s"$dataRel/${d.getPath.getName}/${f.getPath.getName}")
-          val nv = v + 1
-          val header = headerLines(Map(
-            "kind" -> "optimize",
-            "buckets" -> nb.toString,
-            "schema" -> outSchema.json))
-          // an optimize rewrite holds the WHOLE table content, so a
-          // concurrent append/merge landing first makes this rewrite
-          // stale — fail loudly rather than drop the winner's rows
-          if (!tryPublish(fs, nv, header ++ newFiles))
-            throw new IllegalStateException(s"$path: concurrent commit " +
-              s"took v$nv while optimize was writing — re-run optimize " +
-              "against the new current version")
-          nv
+            .parquet(s"$path/$dataRel")
+          (current.drop("__bucket").schema, Map("buckets" -> nb.toString))
       }
-      (newV, before.size, manifestFiles(fs, newV).size)
+      val (newV, filesAfter) =
+        publishRewrite(log, m.version + 1, dataRel, schema, meta)
+      (newV, m.files.size, filesAfter)
     }
 
     /** OPTIMIZE ZORDER BY (Delta's multi-dimensional clustering):
@@ -2747,15 +2292,13 @@ object GraftSink {
                        targetRecordsPerFile: Long): (Long, Int, Int) = {
       require(zorderCols.nonEmpty && zorderCols.size <= 4,
         "zorder takes 1-4 columns (more dilutes every dimension)")
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val v = currentVersion(fs)
-      require(v > 0, s"$path: nothing to optimize")
-      require(bucketSpec(fs).isEmpty,
+      val log = this.log(spark)
+      val m = log.latest()
+      require(m.version > 0, s"$path: nothing to optimize")
+      require(bucketSpecAsOf(log, m).isEmpty,
         s"$path: table is bucketed — __bucket= is already its physical " +
           "clustering; zorder and bucket layouts are alternatives")
-      val before = manifestRawLines(fs, v)
-      val current = readVersion(spark, v)
+      val current = readAt(spark, m)
       val bits = 8
       val probs = (1 until (1 << bits)).map(_.toDouble / (1 << bits)).toArray
       // ONE quantile pass for ALL zorder columns (the Array[String]
@@ -2779,64 +2322,47 @@ object GraftSink {
       } yield shiftleft(
         shiftright(bucketIds(ci), i).bitwiseAND(lit(1L)),
         i * d + (d - 1 - ci))).reduce(_ + _)
-      val n = before.map(l => statsRows(l).getOrElse(
-        footerRecordCount(fs, Seq(stripStats(l))))).sum
       val files = math.max(1, math.ceil(
-        n.toDouble / targetRecordsPerFile).toInt)
+        log.rowCount(m).toDouble / targetRecordsPerFile).toInt)
       val packed = current.withColumn("__z", z)
         .repartitionByRange(files, col("__z"))
         .drop("__z")
-      val newV = publishRewrite(spark, packed, v + 1,
-        Map("kind" -> "optimize"))
-      (newV, before.size, manifestFiles(fs, newV).size)
+      val dataRel = TableLog.newDataRel(m.version + 1)
+      packed.write.mode(SaveMode.Overwrite).parquet(s"$path/$dataRel")
+      val (newV, filesAfter) = publishRewrite(log, m.version + 1, dataRel,
+        packed.schema, Map.empty)
+      (newV, m.files.size, filesAfter)
     }
 
-    /** Publish a whole-table REWRITE (optimize / zorder) at exactly
-      * version `nv`: the rewrite holds the WHOLE table content, so a
-      * concurrent append/merge landing first makes it stale — one
-      * tryPublish, loud failure on a lost race. Routing rewrites
-      * through [[commit]]'s overwrite path would be silently wrong:
-      * its retry loop republishes the stale rewrite at the next
-      * version, dropping the winner's rows (ADVICE r16) — the exact
-      * hazard the bucketed optimize path already fails loudly on. */
-    private def publishRewrite(spark: org.apache.spark.sql.SparkSession,
-                               df: DataFrame, nv: Long,
-                               meta: Map[String, String]): Long = {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      val dataRel = s"_data/commit-$nv-${java.util.UUID.randomUUID}"
-      val dataDir = new org.apache.hadoop.fs.Path(root, dataRel)
-      df.write.mode(SaveMode.Overwrite).parquet(dataDir.toString)
-      val newFiles = statsLines(fs, fs.listStatus(dataDir).toSeq
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(f => s"$dataRel/${f.getPath.getName}"))
-      val header = headerLines(meta + ("schema" -> df.schema.json))
-      if (!tryPublish(fs, nv, header ++ newFiles))
+    /** Publish a whole-table REWRITE (optimize / zorder) written under
+      * `dataRel` at exactly version `nv`; returns (nv, files written).
+      * The rewrite holds the WHOLE table content, so a concurrent
+      * append/merge landing first makes it stale — one publish, loud
+      * failure on a lost race. Routing rewrites through [[commit]]'s
+      * overwrite path would be silently wrong: its retry loop
+      * republishes the stale rewrite at the next version, dropping the
+      * winner's rows (ADVICE r16). */
+    private def publishRewrite(log: TableLog, nv: Long, dataRel: String,
+                               schema: org.apache.spark.sql.types.StructType,
+                               meta: Map[String, String]): (Long, Int) = {
+      val newFiles = log.fileLines(dataRel)
+      val header = TableLog.header(meta + ("kind" -> "optimize") +
+        ("schema" -> schema.json))
+      if (!log.publish(nv, header ++ newFiles))
         throw new IllegalStateException(s"$path: concurrent commit took " +
-          s"v$nv while this rewrite was writing — re-run against the " +
-          "new current version")
-      nv
+          s"v$nv while optimize was writing — re-run optimize against " +
+          "the new current version")
+      (nv, newFiles.size)
     }
-
-    /** Exact row count from parquet footers — |files| driver-side
-      * metadata reads (block row counts only, no column I/O). */
-    private def footerRecordCount(fs: org.apache.hadoop.fs.FileSystem,
-                                  rels: Seq[String]): Long =
-      rels.map { rel =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(path, rel), fs.getConf))
-        try rd.getRecordCount finally rd.close()
-      }.sum
 
     /** VACUUM: retire time travel below a horizon — keep the newest
       * `retainLast` versions, delete every older manifest and every
       * data file no retained manifest references. Reading a vacuumed
-      * version fails LOUDLY (its manifest is gone — the require in
-      * manifestFiles), retained versions read byte-identically, and
-      * uncommitted orphan data dirs (a writer that died before its
-      * rename) are reclaimed too. Driver work is manifest-sized.
-      * Returns (dataFilesDeleted, manifestsDeleted). */
+      * version fails LOUDLY (its manifest is gone), retained versions
+      * read byte-identically, and uncommitted orphan data dirs (a
+      * writer that died before its rename) are reclaimed too. Driver
+      * work is manifest-sized. Returns (dataFilesDeleted,
+      * manifestsDeleted). */
     def vacuum(spark: org.apache.spark.sql.SparkSession,
                retainLast: Int): (Int, Int) =
       vacuum(spark, retainLast, None)
@@ -2854,17 +2380,18 @@ object GraftSink {
                retainLast: Int,
                syncpoint: Option[(String, String)]): (Int, Int) = {
       require(retainLast >= 1, "must retain at least the latest version")
+      val log = this.log(spark)
+      val fs = log.fs
       val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      val v = currentVersion(fs)
+      val v = log.currentVersion()
       val pinFloor = syncpoint.flatMap { case (sp, name) =>
         if (Syncpoint.current(spark, sp) == 0L) None
         else Syncpoint.resolve(spark, sp)._2.get(name)
       }
       val horizon = math.max(1L, math.min(v - retainLast + 1,
         pinFloor.getOrElse(Long.MaxValue)))
-      val keep = (horizon to v)
-        .flatMap(kv => manifestFiles(fs, kv)).toSet
+      val retained = (horizon to v).map(log.read)
+      val keep = retained.flatMap(_.files).toSet
       // every file under _data/ not referenced by a retained manifest
       // (recursive: bucketed commits nest files under __bucket=k/)
       val dataRoot = new org.apache.hadoop.fs.Path(root, "_data")
@@ -2893,7 +2420,7 @@ object GraftSink {
       // manifests reference, reclaim the rest (a delete rewrites only
       // its touched buckets' slices and merges drop rewritten
       // buckets' slices, so slices age out per bucket)
-      val keepDv = (horizon to v).flatMap(kv => dvSlicesOf(fs, kv)).toSet
+      val keepDv = retained.flatMap(_.dv).toSet
       val dvRoot = new org.apache.hadoop.fs.Path(root, "_dv")
       if (fs.exists(dvRoot)) {
         for (d <- fs.listStatus(dvRoot)) {
@@ -2909,27 +2436,24 @@ object GraftSink {
           }
         }
       }
-      var manifestsDeleted = 0
-      for (kv <- 1L until horizon) {
-        val m = new org.apache.hadoop.fs.Path(root,
-          s"_manifests/v$kv.manifest")
-        if (fs.exists(m)) { fs.delete(m, false); manifestsDeleted += 1 }
-      }
+      val manifestsDeleted = (1L until horizon).count(log.retire)
       (dataDeleted, manifestsDeleted)
     }
   }
 
   object VersionedTable {
-    /** Hint file under `_manifests/` naming the last published
-      * version (Delta's `_last_checkpoint`) — readers forward-probe
-      * from it instead of listing the directory. */
-    val LastCheckpoint = "_last_checkpoint"
+    /** Name of the hint file in the manifest directory that holds the
+      * last published version — readers forward-probe from it instead of
+      * listing the directory. */
+    val LastCheckpoint: String = TableLog.LastCheckpoint
 
-    /** Count of hint-less full `_manifests/` listings — a test seam:
-      * SinksSpec pins that steady-state reads resolve the version from
-      * the hint alone (zero listings), the object-store scaling law. */
-    private[graft] val fallbackLists =
-      new java.util.concurrent.atomic.AtomicLong(0L)
+    /** Count of hint-less full manifest-directory listings — a test
+      * seam: SinksSpec pins that steady-state reads resolve the version
+      * from the hint alone (zero listings), the object-store scaling
+      * law. Counts every table-log reader, the change-feed stream
+      * included. */
+    private[graft] val fallbackLists: java.util.concurrent.atomic.AtomicLong =
+      TableLog.fallbackLists
 
     /** File census of the last predicate position scan (deleteWhere /
       * updateWhere after stats pruning) — a test seam: SinksSpec pins
@@ -2937,6 +2461,9 @@ object GraftSink {
       * candidate files, the 100 TB erasure law. −1 = no scan yet. */
     private[graft] val lastPredicateScanFiles =
       new java.util.concurrent.atomic.AtomicLong(-1L)
+
+    /** Default row cap of one bucketed-merge rewrite file. */
+    private val MaxRowsPerBucketFile: Long = 4L * 1024 * 1024
   }
 
   /** CROSS-TABLE SYNCPOINT (A40's consistent snapshot composed onto
@@ -2961,15 +2488,10 @@ object GraftSink {
     * Vacuum discipline: retain at least as many table versions as the
     * oldest syncpoint any reader may still resolve. */
   object Syncpoint {
-    private def fsOf(spark: org.apache.spark.sql.SparkSession,
-                     path: String): org.apache.hadoop.fs.FileSystem =
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-
     /** Latest published syncpoint number (0 = none yet). */
     def current(spark: org.apache.spark.sql.SparkSession,
                 path: String): Long = {
-      val fs = fsOf(spark, path)
+      val fs = TableLog.fileSystem(spark, path)
       val dir = new org.apache.hadoop.fs.Path(path)
       if (!fs.exists(dir)) 0L
       else fs.listStatus(dir).toSeq
@@ -2990,7 +2512,7 @@ object GraftSink {
     def publish(spark: org.apache.spark.sql.SparkSession,
                 path: String, pins: Map[String, Long]): Long = {
       require(pins.nonEmpty, "a syncpoint must pin at least one table")
-      val fs = fsOf(spark, path)
+      val fs = TableLog.fileSystem(spark, path)
       val dir = new org.apache.hadoop.fs.Path(path)
       fs.mkdirs(dir)
       var merged =
@@ -3003,19 +2525,13 @@ object GraftSink {
         }
       var n = current(spark, path) + 1
       while (true) {
-        val tmp = new org.apache.hadoop.fs.Path(dir,
-          s".sp-$n-${java.util.UUID.randomUUID}.tmp")
-        val out = fs.create(tmp, false)
-        try out.write(merged.toSeq.sorted.map { case (t, v) =>
+        val content = merged.toSeq.sorted.map { case (t, v) =>
           require(!t.contains("=") && !t.contains("\n"),
             s"table name must be line-safe: $t")
           s"$t=$v"
-        }.mkString("\n").getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        val dest = new org.apache.hadoop.fs.Path(dir, s"sp-$n.syncpoint")
-        if (!fs.exists(dest) && fs.rename(tmp, dest)) return n
-        fs.delete(tmp, false)
+        }.mkString("\n")
+        if (TableLog.publishFile(fs, dir, s"sp-$n.syncpoint", content))
+          return n
         // lost race: the winner's transaction also fully committed
         // its tables — converge on the per-table max and retry
         val winner = resolve(spark, path)._2
@@ -3032,7 +2548,7 @@ object GraftSink {
                 path: String): (Long, Map[String, Long]) = {
       val n = current(spark, path)
       require(n > 0, s"$path: no syncpoint published yet")
-      val fs = fsOf(spark, path)
+      val fs = TableLog.fileSystem(spark, path)
       val in = fs.open(new org.apache.hadoop.fs.Path(path,
         s"sp-$n.syncpoint"))
       val pins = try scala.io.Source.fromInputStream(in, "UTF-8")

@@ -1,0 +1,498 @@
+package graft.cdc
+
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.{regexp_extract, when}
+import org.apache.spark.sql.types.{DataType, StructType}
+
+/** The table log of a [[GraftSink.VersionedTable]]: the only code that
+  * knows its on-disk format. The log is both the table's commit point
+  * and the offset log of its change feed
+  * ([[graft.sources.TableCdfSource]]).
+  *
+  * Layout under the table root:
+  *  - `_manifests/v<N>.manifest`: version N. Header lines `#k=v`
+  *    (`kind`, `schema`, `dv`, `rename`, `checks`, `buckets`,
+  *    `touched`, `batch`, `batch_hi`, `max_ts`, `restored_from`), then
+  *    one line per data file: `rel` or `rel<TAB>{"rows":N,"cols":{"c":
+  *    [min,max],…}}` (per-file footer statistics, carried verbatim —
+  *    a file is immutable, so its line is too; line identity is file
+  *    identity).
+  *  - `_manifests/_last_checkpoint`: the last published version, a
+  *    hint readers forward-probe from.
+  *  - `_data/commit-<N>-<uuid>/[__bucket=<b>/]part-*.parquet`: data
+  *    files, bucketed by key when a bucketed merge or optimize wrote
+  *    them.
+  *  - `_dv/v<N>-<uuid>/__dvb=<b>/`: deletion-vector slices, one key
+  *    bucket's dead (file, row_index) positions each (−1 = positions in
+  *    unbucketed files).
+  *
+  * A version is published by writing the manifest to a temp name and
+  * renaming it without overwrite: a lost race leaves the slot to the
+  * winner, a crash before the rename leaves only invisible orphans. */
+private[graft] final class TableLog(val fs: FileSystem, root: String) {
+
+  private val dir = new Path(root, TableLog.ManifestDir)
+
+  private def manifestPath(v: Long): Path = new Path(dir, s"v$v.manifest")
+
+  /** Latest published version (0 = no commits yet). Resolution is
+    * `_last_checkpoint` + forward probes, NOT a directory listing
+    * (Delta's `_last_checkpoint` design): at one version per flush a
+    * standing table accrues thousands of manifests between vacuums,
+    * and on an object store a full LIST per read is the known
+    * commit-log scaling problem. Manifests are self-contained (each
+    * carries the full file list), so the hint is all a checkpoint needs
+    * to carry; resolution costs O(1 + commits since the hint) existence
+    * probes. The listing survives only as the fallback for hint-less or
+    * torn states, counted in [[TableLog.fallbackLists]] so tests can pin
+    * that steady-state reads never list. */
+  def currentVersion(): Long = {
+    val hint: Long = try {
+      val hp = new Path(dir, TableLog.LastCheckpoint)
+      if (!fs.exists(hp)) -1L
+      else {
+        val in = fs.open(hp)
+        val h = try scala.io.Source.fromInputStream(in, "UTF-8")
+          .mkString.trim.toLong finally in.close()
+        // the hint is written AFTER the rename and vacuum retains the
+        // current version, so a valid hint is never ahead; a missing
+        // manifest means external surgery → full listing
+        if (h >= 1 && fs.exists(manifestPath(h))) h else -1L
+      }
+    } catch { case _: Exception => -1L } // torn hint → full listing
+    if (hint < 0) {
+      TableLog.fallbackLists.incrementAndGet()
+      if (!fs.exists(dir)) 0L
+      else fs.listStatus(dir).toSeq
+        .map(_.getPath.getName)
+        .filter(n => n.startsWith("v") && n.endsWith(".manifest"))
+        .map(_.stripPrefix("v").stripSuffix(".manifest").toLong)
+        .foldLeft(0L)(math.max)
+    } else {
+      var v = hint
+      while (fs.exists(manifestPath(v + 1))) v += 1
+      v
+    }
+  }
+
+  /** Version `v`'s manifest in one read; None when `v` was never
+    * committed or its manifest was vacuumed. */
+  def find(v: Long): Option[Manifest] =
+    if (v < 1) None
+    else try {
+      val in = fs.open(manifestPath(v))
+      try Some(Manifest.parse(v,
+        scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList))
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** Version `v`'s manifest; fails loudly when it is not retained. */
+  def read(v: Long): Manifest = {
+    val m = find(v)
+    require(m.isDefined, s"$root: version $v was never committed " +
+      "(or its manifest was vacuumed)")
+    m.get
+  }
+
+  /** [[read]], with version 0 as the empty table. */
+  def readOrEmpty(v: Long): Manifest =
+    if (v == 0) Manifest.empty else read(v)
+
+  /** The latest manifest (the empty version 0 before the first commit). */
+  def latest(): Manifest = readOrEmpty(currentVersion())
+
+  /** One atomic publish attempt of version `v`; false when another
+    * writer took `v` first. A successful publish refreshes
+    * `_last_checkpoint` best-effort — it is a HINT, so a crash between
+    * rename and hint write costs one extra probe, never correctness. */
+  def publish(v: Long, lines: Seq[String]): Boolean = {
+    fs.mkdirs(dir)
+    val won = TableLog.publishFile(fs, dir, s"v$v.manifest",
+      lines.mkString("\n"))
+    if (won) {
+      try {
+        val h = fs.create(new Path(dir, TableLog.LastCheckpoint), true)
+        try h.write(v.toString.getBytes(UTF_8)) finally h.close()
+      } catch { case _: Exception => () } // a stale hint heals itself
+    }
+    won
+  }
+
+  /** Delete version `v`'s manifest (vacuum); false when it was gone. */
+  def retire(v: Long): Boolean = fs.delete(manifestPath(v), false)
+
+  /** Every parquet file under `rel`, as root-relative paths. */
+  def parquetFiles(rel: String): Seq[String] =
+    fs.listStatus(new Path(root, rel)).toSeq.flatMap { st =>
+      val r = s"$rel/${st.getPath.getName}"
+      if (st.isDirectory) parquetFiles(r)
+      else if (r.endsWith(".parquet")) Seq(r) else Nil
+    }
+
+  /** Manifest file lines for the freshly written files under `rel` —
+    * footer reads through a bounded pool (a bucketed merge can write
+    * task×bucket files; serial driver opens would dominate small
+    * merges). */
+  def fileLines(rel: String): Seq[String] = {
+    val rels = parquetFiles(rel)
+    if (rels.size <= 4) rels.map(statsLine)
+    else {
+      val pool = java.util.concurrent.Executors
+        .newFixedThreadPool(math.min(16, rels.size))
+      try rels.map(r => pool.submit(
+          new java.util.concurrent.Callable[String] {
+            override def call(): String = statsLine(r)
+          })).map(_.get())
+      finally pool.shutdown()
+    }
+  }
+
+  /** One manifest file line for a freshly written file: the relative
+    * path plus its footer statistics — `{"rows":N,"cols":{"c":[min,max],
+    * …}}` for top-level NUMERIC columns (min/max across row groups).
+    * This is Delta's per-file stats design: data skipping and row counts
+    * become manifest metadata, so reads prune files and OPTIMIZE sizes
+    * bins without touching data. */
+  private def statsLine(rel: String): String = {
+    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new Path(root, rel), fs.getConf))
+    try {
+      val blocks = rd.getFooter.getBlocks.asScala.toSeq
+      val rows = blocks.map(_.getRowCount).sum
+      val mins = scala.collection.mutable.Map.empty[String, BigDecimal]
+      val maxs = scala.collection.mutable.Map.empty[String, BigDecimal]
+      val bad = scala.collection.mutable.Set.empty[String]
+      for (b <- blocks; c <- b.getColumns.asScala) {
+        val name = c.getPath.toDotString
+        val st = c.getStatistics
+        // a row group with ABSENT statistics (st null or empty) makes
+        // the column's file-level range unknowable — the column must go
+        // stats-less for the whole file (kept, never pruned), not
+        // silently understate the range from the other groups' stats
+        // (a range read would prune a file that holds matching rows).
+        // All-null groups (stats present, no non-null value) contribute
+        // no range and are correctly skipped: nulls never match a range
+        // predicate.
+        if (!name.contains('.') && (st == null || st.isEmpty)) bad += name
+        else if (!name.contains('.') && st.hasNonNullValue) {
+          (st.genericGetMin, st.genericGetMax) match {
+            case (mn: java.lang.Number, mx: java.lang.Number)
+                if !mn.isInstanceOf[java.lang.Byte] =>
+              // NaN/Infinity bounds are unusable (and must never crash
+              // a commit): such a column goes stats-less for the WHOLE
+              // file — readers keep it, correctness unaffected
+              try {
+                val (dn, dx) = (BigDecimal(mn.toString),
+                  BigDecimal(mx.toString))
+                mins(name) = mins.get(name).map(_.min(dn)).getOrElse(dn)
+                maxs(name) = maxs.get(name).map(_.max(dx)).getOrElse(dx)
+              } catch {
+                case _: NumberFormatException => bad += name
+              }
+            case _ => () // binary/boolean columns carry no range stats
+          }
+        }
+      }
+      val cols = (mins.keySet -- bad).toSeq.sorted.map(c =>
+        s""""$c":[${mins(c)},${maxs(c)}]""").mkString(",")
+      s"""$rel\t{"rows":$rows,"cols":{$cols}}"""
+    } finally rd.close()
+  }
+
+  /** Exact row count from parquet footers — |files| driver-side
+    * metadata reads (block row counts only, no column I/O). */
+  def footerRows(rels: Seq[String]): Long =
+    rels.map { rel =>
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new Path(root, rel), fs.getConf))
+      try rd.getRecordCount finally rd.close()
+    }.sum
+
+  /** Row count of a version from its manifest stats (free); footer
+    * reads only for stats-less legacy lines. */
+  def rowCount(m: Manifest): Long =
+    m.lines.map(l => TableLog.statsRows(l)
+      .getOrElse(footerRows(Seq(TableLog.path(l))))).sum
+}
+
+private[graft] object TableLog {
+  val ManifestDir = "_manifests"
+
+  /** Hint file under the manifest directory naming the last published
+    * version (Delta's `_last_checkpoint`). */
+  val LastCheckpoint = "_last_checkpoint"
+
+  /** Count of hint-less full manifest-directory listings (test seam). */
+  val fallbackLists = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  def apply(spark: SparkSession, root: String): TableLog =
+    new TableLog(fileSystem(spark, root), root)
+
+  def fileSystem(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** Whether `dir` holds a table log. */
+  def isTable(fs: FileSystem, dir: Path): Boolean =
+    fs.exists(new Path(dir, ManifestDir))
+
+  /** Write `content` to a temp file in `dir` and rename it to `name`
+    * without overwrite — the commit point shared by table versions and
+    * syncpoints. False (temp file removed) when `name` already exists. */
+  def publishFile(fs: FileSystem, dir: Path, name: String,
+                  content: String): Boolean = {
+    val stem = name.substring(0, name.lastIndexOf('.'))
+    val tmp = new Path(dir, s".$stem-${java.util.UUID.randomUUID}.tmp")
+    val out = fs.create(tmp, false)
+    try out.write(content.getBytes(UTF_8)) finally out.close()
+    val dest = new Path(dir, name)
+    if (!fs.exists(dest) && fs.rename(tmp, dest)) true
+    else { fs.delete(tmp, false); false }
+  }
+
+  /** Fresh directory for version `v`'s data files — uuid-suffixed so
+    * two racing writers never share one (the loser's retry republishes
+    * its files under the next version). */
+  def newDataRel(v: Long): String =
+    s"_data/commit-$v-${java.util.UUID.randomUUID}"
+
+  /** Fresh directory for version `v`'s deletion-vector slices. */
+  def newDvRel(v: Long): String = s"_dv/v$v-${java.util.UUID.randomUUID}"
+
+  /** The version whose commit first wrote data file `rel`. */
+  def originVersion(rel: String): Option[Long] =
+    "_data/commit-(\\d+)-".r.findFirstMatchIn(rel).map(_.group(1).toLong)
+
+  /** Render `#k=v` header lines (sorted, line-safety enforced). */
+  def header(meta: Map[String, String]): Seq[String] =
+    meta.toSeq.sortBy(_._1).map { case (k, mv) =>
+      require(!k.contains("=") && !(k + mv).exists(_ == '\n'),
+        s"manifest meta must be line-safe: $k=$mv")
+      s"#$k=$mv"
+    }
+
+  def encodeRename(map: Map[String, String]): String =
+    map.toSeq.sorted.map { case (l, p) =>
+      require(!(l + p).exists(c => c == ':' || c == ',' ||
+        c == '=' || c == '\n'),
+        s"column names in a rename must be [:,=\\n]-free: $l -> $p")
+      s"$l:$p"
+    }.mkString(",")
+
+  def encodeChecks(checks: Map[String, String]): String =
+    checks.toSeq.sorted.map { case (n, sqlTxt) =>
+      require(n.matches("[A-Za-z0-9_]+"),
+        s"constraint name must be [A-Za-z0-9_]+: $n")
+      require(!sqlTxt.contains(";;") && !sqlTxt.contains("\n"),
+        s"constraint SQL must be line-safe and ';;'-free: $sqlTxt")
+      s"$n::$sqlTxt"
+    }.mkString(";;")
+
+  /** The path part of a manifest file line (stats suffix dropped). */
+  def path(line: String): String = {
+    val i = line.indexOf('\t')
+    if (i < 0) line else line.substring(0, i)
+  }
+
+  /** A line's stats row count (None = stats-less legacy line). */
+  def statsRows(line: String): Option[Long] = {
+    val i = line.indexOf('\t')
+    if (i < 0) None
+    else "\"rows\":(\\d+)".r.findFirstMatchIn(line.substring(i + 1))
+      .map(_.group(1).toLong)
+  }
+
+  /** A line's stats range for `column` (None = no stats — the file may
+    * hold anything and must be kept). */
+  def statsRange(line: String, column: String)
+      : Option[(BigDecimal, BigDecimal)] = {
+    val i = line.indexOf('\t')
+    if (i < 0) None
+    else ("\"" + java.util.regex.Pattern.quote(column) +
+      "\":\\[([^,\\]]+),([^\\]]+)\\]").r
+      .findFirstMatchIn(line.substring(i + 1))
+      .map(m => (BigDecimal(m.group(1)), BigDecimal(m.group(2))))
+  }
+
+  /** Key bucket of a data file, when a bucketed commit wrote it. */
+  def pathBucket(rel: String): Option[Long] =
+    "__bucket=(\\d+)/".r.findFirstMatchIn(rel).map(_.group(1).toLong)
+
+  /** [[pathBucket]] as a column over a file path (null = unbucketed). */
+  def pathBucketCol(file: Column): Column = {
+    val b = regexp_extract(file, "__bucket=(\\d+)/", 1)
+    when(b =!= "", b.cast("long"))
+  }
+
+  /** The key bucket a DV slice covers (-1 = unbucketed files). */
+  def sliceBucket(slice: String): Long =
+    "__dvb=(-?\\d+)".r.findFirstMatchIn(slice)
+      .map(_.group(1).toLong).getOrElse(-1L)
+
+  /** What version `cur` changed relative to its parent `prev` — the one
+    * classification behind both the batch change feed
+    * ([[GraftSink.VersionedTable.changes]]) and the streaming one
+    * ([[graft.sources.TableCdfSource]]). Set algebra runs on RAW lines:
+    * files are immutable and carried verbatim, so line identity is file
+    * identity. */
+  def change(prev: Manifest, cur: Manifest): VersionChange = {
+    import VersionChange._
+    val (prevSet, curSet) = (prev.lines.toSet, cur.lines.toSet)
+    val added = (curSet -- prevSet).toSeq.sorted
+    // slices are carried verbatim, so fresh positions live only in the
+    // slices new in `cur`, minus what their bucket's previous slices
+    // already held
+    def fresh: Seq[FreshSlice] = {
+      val old = prev.dv.toSet
+      cur.dv.filterNot(old.contains).map(s => FreshSlice(s,
+        prev.dv.filter(o => sliceBucket(o) == sliceBucket(s))))
+    }
+    def rewrite(kind: String, removed: Seq[String],
+                addedLines: Seq[String]): VersionChange =
+      // nothing removed and no vectors: pure inserts, no keying needed
+      // (a first-commit overwrite, a restore from empty)
+      if (removed.isEmpty && prev.dv.isEmpty && cur.dv.isEmpty)
+        Inserted(addedLines)
+      else if ((removed ++ addedLines).forall(l =>
+        pathBucket(path(l)).isDefined)) {
+        // the bucket is a pure function of the key, so a key's
+        // before/after rows share a bucket; a bucket whose files AND
+        // slices match on both sides is provably changeless
+        val rem = removed.groupBy(l => pathBucket(path(l)).get)
+        val add = addedLines.groupBy(l => pathBucket(path(l)).get)
+        KeyedRewrite(kind, (rem.keySet ++ add.keySet).toSeq.sorted.flatMap {
+          b =>
+            val g = RewriteGroup(rem.getOrElse(b, Nil), add.getOrElse(b, Nil),
+              prev.dv.filter(sliceBucket(_) == b),
+              cur.dv.filter(sliceBucket(_) == b))
+            if (g.removed.toSet == g.added.toSet && g.beforeDv == g.afterDv)
+              None
+            else Some(g)
+        })
+      } else
+        KeyedRewrite(kind,
+          Seq(RewriteGroup(removed, addedLines, prev.dv, cur.dv)))
+    cur.kind match {
+      case Some("optimize" | "constraint" | "rename") => Unchanged
+      case Some("delete") => DvDelete(fresh)
+      case Some("update") => Update(added, fresh)
+      case k if !k.contains("restore") && prevSet.subsetOf(curSet) =>
+        Inserted(added)
+      // a merge diffs ONLY its removed ∪ added files — the rewritten
+      // buckets; carried files are byte-identical on both sides
+      case Some("merge") =>
+        rewrite("merge", (prevSet -- curSet).toSeq.sorted, added)
+      // a restore can share its parent's lines while REVERTING content
+      // (vector included), and an overwrite carries no row-level
+      // lineage: both diff whole versions
+      case k =>
+        rewrite(k.getOrElse("overwrite"), prev.lines.sorted, cur.lines.sorted)
+    }
+  }
+}
+
+/** One version's manifest, parsed in one read: the `#k=v` header map
+  * and the raw file lines. */
+private[graft] final case class Manifest(version: Long,
+                                         meta: Map[String, String],
+                                         lines: Seq[String]) {
+  def kind: Option[String] = meta.get("kind")
+
+  /** The commit's stamped Spark schema, when it carries one. */
+  lazy val schema: Option[StructType] =
+    meta.get("schema").map(DataType.fromJson(_).asInstanceOf[StructType])
+
+  /** Deletion-vector slice dirs (`#dv=`, comma-separated). */
+  lazy val dv: Seq[String] =
+    meta.get("dv").toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
+
+  /** COLUMN-MAPPING name map (`#rename=`): logical → PHYSICAL column
+    * name, listed only where they differ. */
+  lazy val rename: Map[String, String] = pairs("rename", ",", ":")
+
+  /** CHECK constraints (`#checks=`): name → SQL condition. */
+  lazy val checks: Map[String, String] = pairs("checks", ";;", "::")
+
+  /** The bucket spec a bucketed merge or optimize stamped. */
+  def buckets: Option[Int] = meta.get("buckets").map(_.toInt)
+
+  /** The buckets a bucketed merge rewrote. */
+  def touched: Option[Set[Long]] = meta.get("touched")
+    .map(_.split(',').filter(_.nonEmpty).map(_.toLong).toSet)
+
+  /** Highest streaming batch id this commit accounts for. */
+  def batchHi: Option[Long] =
+    meta.get("batch_hi").orElse(meta.get("batch")).map(_.toLong)
+
+  /** Event-time watermark of the commit's data. */
+  def maxTs: Option[Long] = meta.get("max_ts").map(_.toLong)
+
+  /** Data file paths, in manifest order. */
+  lazy val files: Seq[String] = lines.map(TableLog.path)
+
+  /** The header entries named by `keys`, for republishing them. */
+  def carry(keys: String*): Map[String, String] =
+    meta.filter { case (k, _) => keys.contains(k) }
+
+  private def pairs(key: String, sep: String,
+                    kv: String): Map[String, String] =
+    meta.get(key).map(_.split(java.util.regex.Pattern.quote(sep))
+      .filter(_.nonEmpty).map { pair =>
+        val i = pair.indexOf(kv)
+        pair.substring(0, i) -> pair.substring(i + kv.length)
+      }.toMap).getOrElse(Map.empty)
+}
+
+private[graft] object Manifest {
+  val empty: Manifest = Manifest(0L, Map.empty, Nil)
+
+  def parse(version: Long, raw: Seq[String]): Manifest = {
+    val (head, body) = raw.filter(_.nonEmpty).partition(_.startsWith("#"))
+    Manifest(version, head.map { l =>
+      val i = l.indexOf('=')
+      l.substring(1, i) -> l.substring(i + 1)
+    }.toMap, body)
+  }
+}
+
+/** What one version changed relative to its parent (see
+  * [[TableLog.change]]). Lines are raw manifest lines. */
+private[graft] sealed trait VersionChange
+
+private[graft] object VersionChange {
+  /** optimize / constraint / rename: the same rows republished. */
+  case object Unchanged extends VersionChange
+
+  /** Files the version added, all rows inserts. */
+  final case class Inserted(lines: Seq[String]) extends VersionChange
+
+  /** A DV delete: the version's fresh slices. */
+  final case class DvDelete(slices: Seq[FreshSlice]) extends VersionChange
+
+  /** An update: the post-image files it added and the fresh slices
+    * that kill the pre-images. */
+  final case class Update(posts: Seq[String], slices: Seq[FreshSlice])
+      extends VersionChange
+
+  /** A keyed rewrite (merge, restore, overwrite): the diff of removed
+    * against added rows, one group per touched bucket when every file is
+    * bucket-aligned, else one group. */
+  final case class KeyedRewrite(kind: String, groups: Seq[RewriteGroup])
+      extends VersionChange
+
+  /** A slice new in the version, with its bucket's previous slices
+    * (whose positions were already dead). */
+  final case class FreshSlice(slice: String, previous: Seq[String])
+
+  /** One bucket (or the whole version) of a keyed rewrite: each side's
+    * file lines and deletion-vector slices. */
+  final case class RewriteGroup(removed: Seq[String], added: Seq[String],
+                                beforeDv: Seq[String],
+                                afterDv: Seq[String])
+}

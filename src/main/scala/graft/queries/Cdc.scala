@@ -792,9 +792,7 @@ object Cdc {
     // beyond-LSO records leave no trace in the table.
     "cdc_txn_e2e" -> ((s, dir) => {
       val (visible, _) = txnProducedTopic(s, dir)
-      val path = roundtripPath(dir, "txne2e")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "txne2e")
       val table = GraftSink.VersionedTable(path)
       table.merge(
         visible.select(col("key"), col("commit_ts_us"), col("seq"),
@@ -1640,10 +1638,7 @@ object Cdc {
     // oracle re-states each version's content from the commit-boundary
     // ts arithmetic alone.
     "cdc_table_versions" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tableversions")
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(root, true) // deterministic rebuild per run
+      val path = clearedScratch(dir, "tableversions") // deterministic rebuild per run
       val log = changelog(s, dir)
       val t1 = 1704844800000000L // 2024-01-10
       val t2 = 1705708800000000L // 2024-01-20
@@ -1673,9 +1668,7 @@ object Cdc {
     // merges converge to the full-feed state (A28's upsert law, now
     // through the versioned-table commit protocol).
     "cdc_table_merge" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tablemerge")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tablemerge")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L // 2024-01-10
       val t2 = 1705708800000000L // 2024-01-20
@@ -1703,9 +1696,7 @@ object Cdc {
     // oracle re-derives each as-of's cumulative content from ts
     // arithmetic.
     "cdc_table_asof_ts" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tableasof")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tableasof")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val t2 = 1705708800000000L
@@ -1735,9 +1726,7 @@ object Cdc {
     // 100 TB upsert answer; SinksSpec pins the carried-files claim).
     // Same snapshot oracle: pruning must not change the answer.
     "cdc_table_merge_bucketed" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tablemergebucketed")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tablemergebucketed")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val t2 = 1705708800000000L
@@ -1763,9 +1752,7 @@ object Cdc {
     // version that introduced it. Oracle re-derives the version
     // attribution from the slice boundaries.
     "cdc_table_cdf" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tablecdf")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tablecdf")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val t2 = 1705708800000000L
@@ -1791,9 +1778,7 @@ object Cdc {
     // snapshots and the three-way classification in SQL; seq equality
     // is the change test (no two events share a seq).
     "cdc_table_cdf_diff" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tablecdfdiff")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tablecdfdiff")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val t2 = 1705708800000000L
@@ -1818,9 +1803,7 @@ object Cdc {
     // moved between the t1- and t2-snapshots, v3 = between t2 and the
     // full feed; seq equality is the change test.
     "cdc_table_cdf_merge" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tablecdfmerge")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tablecdfmerge")
       val log = changelog(s, dir).select(col("key"), col("commit_ts_us"),
         col("seq"), col("op"), col("event_type"), col("value"))
       val t1 = 1704844800000000L
@@ -1846,9 +1829,7 @@ object Cdc {
     // is still listed). Oracle: the snapshot with the SET applied as
     // a CASE.
     "cdc_table_update" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tableupdate")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tableupdate")
       val log = changelog(s, dir)
       val table = GraftSink.VersionedTable(path)
       table.mergeBucketed(log, Seq("key"),
@@ -1877,9 +1858,7 @@ object Cdc {
     // Delta's full CDF shape for an UPDATE, file-pruned on both legs.
     // Oracle: each matched snapshot row twice, before and after.
     "cdc_table_update_cdf" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tableupdatecdf")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tableupdatecdf")
       val log = changelog(s, dir)
       val table = GraftSink.VersionedTable(path)
       table.mergeBucketed(log, Seq("key"),
@@ -1899,9 +1878,7 @@ object Cdc {
     // from fresh slices), one partition each. Oracle: the v1 insert
     // snapshot plus the update's before/after pairs.
     "cdc_stream_table_cdf_update" -> ((s, dir) => {
-      val path = roundtripPath(dir, "streamtablecdfupd")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "streamtablecdfupd")
       val log = changelog(s, dir)
       val table = GraftSink.VersionedTable(path)
       table.mergeBucketed(log, Seq("key"),
@@ -1924,9 +1901,7 @@ object Cdc {
     // is refused whole (the refused witness) and leaves no orphan
     // files. Oracle: the full-feed profile with both witnesses TRUE.
     "cdc_table_constraints" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tableconstraints")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tableconstraints")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val table = GraftSink.VersionedTable(path)
@@ -1953,9 +1928,7 @@ object Cdc {
     // manifest headers alone (driver metadata, no data reads).
     // Oracle: the literal expected history of the five-step script.
     "cdc_table_history" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tablehistory")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tablehistory")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val table = GraftSink.VersionedTable(path)
@@ -1979,9 +1952,7 @@ object Cdc {
     // torn_invisible witness pins that A's newer version exists but
     // is not read. Oracle: the ≤t2 slice profile.
     "cdc_table_syncpoint" -> ((s, dir) => {
-      val base = roundtripPath(dir, "tablesyncpoint")
-      val root = new org.apache.hadoop.fs.Path(base)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val base = clearedScratch(dir, "tablesyncpoint")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val t2 = 1705708800000000L
@@ -2020,9 +1991,7 @@ object Cdc {
     // sums prove old files' data flows through the map (a drop+add
     // would have nulled it; the gate refuses that shape outright).
     "cdc_table_rename" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tablerename")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tablerename")
       val log = changelog(s, dir).select(col("key"), col("commit_ts_us"),
         col("seq"), col("event_type"), col("value"))
       val t1 = 1704844800000000L
@@ -2054,9 +2023,7 @@ object Cdc {
     // (cumulative slices ≤ t2) with the version witness pinning that
     // the rollback moved FORWARD (linear history, never a reset).
     "cdc_table_restore" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tablerestore")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tablerestore")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val t2 = 1705708800000000L
@@ -2086,9 +2053,7 @@ object Cdc {
     // carries exactly the deltas (retractions included) that close
     // the loop.
     "cdc_table_ivm" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tableivm")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tableivm")
       val log = changelog(s, dir).select(col("key"), col("commit_ts_us"),
         col("seq"), col("op"), col("event_type"), col("value"))
       val t1 = 1704844800000000L
@@ -2122,9 +2087,7 @@ object Cdc {
     // (oracle = the same snapshot SQL; Delta-style optimistic
     // concurrency instead of the r14 single-writer fail).
     "cdc_table_merge_racing" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tablemergerace")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tablemergerace")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val table = GraftSink.VersionedTable(path)
@@ -2157,9 +2120,7 @@ object Cdc {
     // count from slice arithmetic (n_event_type collapses to 0 at v3
     // BECAUSE the column left the schema, not the files).
     "cdc_table_schema_evolution" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tableschemaevo")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tableschemaevo")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val t2 = 1705708800000000L
@@ -2198,9 +2159,7 @@ object Cdc {
     // data) and then runs the file-pruned feed between them. Grades
     // the composition of the r15 as-of rule with the CDF.
     "cdc_table_cdf_asof" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tablecdfasof")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tablecdfasof")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val t2 = 1705708800000000L
@@ -2226,9 +2185,7 @@ object Cdc {
     // LSO snapshot, same as cdc_txn_e2e.
     "cdc_txn_e2e_bucketed" -> ((s, dir) => {
       val (visible, _) = txnProducedTopic(s, dir)
-      val path = roundtripPath(dir, "txne2ebucketed")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "txne2ebucketed")
       val table = GraftSink.VersionedTable(path)
       val batch = visible.select(col("key"), col("commit_ts_us"),
         col("seq"), col("op"), col("event_type"), col("value"))
@@ -2259,9 +2216,7 @@ object Cdc {
       val ev = Tables.events(s, dir)
       val inDir = streamSliceDir(s, ev, dir, slices = 3,
         tag = "vtable_in")
-      val path = roundtripPath(dir, "streamtable")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "streamtable")
       val table = GraftSink.VersionedTable(path)
       drainOnce(CdcStream.deliverVersioned(
         CdcStream.fromParquetDir(s, inDir, ev.schema),
@@ -2289,9 +2244,7 @@ object Cdc {
     // pruned_scan witness pins that the plan read STRICTLY fewer files
     // than the table holds (SinksSpec pins exact file censuses).
     "cdc_table_skipping" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tableskipping")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tableskipping")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val t2 = 1705708800000000L
@@ -2322,9 +2275,7 @@ object Cdc {
     // the bucketed merge would rewrite whole buckets. The oracle is
     // the snapshot minus the predicate.
     "cdc_table_delete_vectors" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tabledv")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tabledv")
       val log = changelog(s, dir)
       val table = GraftSink.VersionedTable(path)
       table.merge(log, Seq("key"), Seq("commit_ts_us", "seq"))
@@ -2351,9 +2302,7 @@ object Cdc {
     // reads ONLY those rows back (semi-join on row address) and tags
     // them delete. Oracle: the snapshot rows the predicate matched.
     "cdc_table_dv_cdf" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tabledvcdf")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tabledvcdf")
       val log = changelog(s, dir)
       val table = GraftSink.VersionedTable(path)
       table.merge(log, Seq("key"), Seq("commit_ts_us", "seq"))
@@ -2372,9 +2321,7 @@ object Cdc {
     // pruned_scan witness pins strictly-fewer files, SinksSpec pins
     // the exact census). Oracle: the snapshot restricted to the keys.
     "cdc_table_lookup" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tablelookup")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tablelookup")
       val log = changelog(s, dir)
       val table = GraftSink.VersionedTable(path)
       table.mergeBucketed(log, Seq("key"),
@@ -2399,9 +2346,7 @@ object Cdc {
     // from a 100 TB table scans ~3/16 of it and rewrites NOTHING
     // (files_unchanged witness). Oracle: snapshot minus the keys.
     "cdc_table_delete_keys" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tabledvkeys")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tabledvkeys")
       val log = changelog(s, dir)
       val table = GraftSink.VersionedTable(path)
       table.mergeBucketed(log, Seq("key"),
@@ -2432,9 +2377,7 @@ object Cdc {
     // layout must never change an answer). The multi-dimensional
     // companion to cdc_table_skipping's slice-clustered case.
     "cdc_table_zorder" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tablezorder")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tablezorder")
       val log = changelog(s, dir).select(col("key"), col("commit_ts_us"),
         col("seq"), col("event_type"), col("value"))
       val t1 = 1704844800000000L
@@ -2477,9 +2420,7 @@ object Cdc {
     // oracle re-derives the slice→version attribution from ts
     // arithmetic alone.
     "cdc_stream_table_cdf" -> ((s, dir) => {
-      val path = roundtripPath(dir, "streamtablecdf")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "streamtablecdf")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val t2 = 1705708800000000L
@@ -2510,9 +2451,7 @@ object Cdc {
     // files are never planned — SinksSpec census). Oracle: the batch
     // CDF SQL with the v1 insert leg unioned in.
     "cdc_stream_table_cdf_merge" -> ((s, dir) => {
-      val path = roundtripPath(dir, "streamtablecdfmerge")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "streamtablecdfmerge")
       val log = changelog(s, dir).select(col("key"), col("commit_ts_us"),
         col("seq"), col("op"), col("event_type"), col("value"))
       val t1 = 1704844800000000L
@@ -2540,9 +2479,7 @@ object Cdc {
     // each reading back exactly the positions its bucket's vector
     // added. Oracle: the snapshot rows the predicate matched.
     "cdc_stream_table_cdf_dv" -> ((s, dir) => {
-      val path = roundtripPath(dir, "streamtablecdfdv")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "streamtablecdfdv")
       val log = changelog(s, dir)
       val table = GraftSink.VersionedTable(path)
       table.mergeBucketed(log, Seq("key"),
@@ -2568,9 +2505,7 @@ object Cdc {
     // census). The un-deleted rows re-enter tagged insert at the
     // restore version — the loud r17 failure is gone.
     "cdc_stream_table_cdf_restore" -> ((s, dir) => {
-      val path = roundtripPath(dir, "streamtablecdfrestore")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "streamtablecdfrestore")
       val log = changelog(s, dir)
       val table = GraftSink.VersionedTable(path)
       table.mergeBucketed(log, Seq("key"),
@@ -2597,9 +2532,7 @@ object Cdc {
     // v2 as exactly the slice-2 inserts (keyed by the unique event
     // seq), never re-emitting the carried rows.
     "cdc_stream_table_cdf_overwrite" -> ((s, dir) => {
-      val path = roundtripPath(dir, "streamtablecdfoverwrite")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "streamtablecdfoverwrite")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val t2 = 1705708800000000L
@@ -2624,9 +2557,7 @@ object Cdc {
     // The region census per version proves which rows really carried
     // the column (nulls elsewhere are fills, not data).
     "cdc_table_cdf_evolution" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tablecdfevolution")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tablecdfevolution")
       val log = changelog(s, dir).select(col("key"), col("commit_ts_us"),
         col("seq"), col("event_type"), col("value"))
       val t1 = 1704844800000000L
@@ -2657,9 +2588,7 @@ object Cdc {
     // clustered table a retention erasure scans the expiring slice,
     // not the table. Oracle: the rows below the cutoff.
     "cdc_table_delete_pruned" -> ((s, dir) => {
-      val path = roundtripPath(dir, "tabledeletepruned")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "tabledeletepruned")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val t2 = 1705708800000000L
@@ -2689,9 +2618,7 @@ object Cdc {
     // the clamp the pinned manifest goes dark and readAt throws at
     // read time — the r17 edge.
     "cdc_table_vacuum_pin" -> ((s, dir) => {
-      val base = roundtripPath(dir, "tablevacuumpin")
-      val root = new org.apache.hadoop.fs.Path(base)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val base = clearedScratch(dir, "tablevacuumpin")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val t2 = 1705708800000000L
@@ -2725,9 +2652,7 @@ object Cdc {
     // map; zero row-by-row readers), and `VERSION AS OF 1` grades the
     // SQL time-travel surface (the v1_rows witness = slice-1 count).
     "cdc_sql_catalog" -> ((s, dir) => {
-      val base = roundtripPath(dir, "sqlcatalog")
-      val root = new org.apache.hadoop.fs.Path(base)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val base = clearedScratch(dir, "sqlcatalog")
       val log = changelog(s, dir)
       val t1 = 1704844800000000L
       val t2 = 1705708800000000L
@@ -2766,9 +2691,7 @@ object Cdc {
       val ev = Tables.events(s, dir)
       val inDir = streamSliceDir(s, ev, dir, slices = 3,
         tag = "vtablemerge_in")
-      val path = roundtripPath(dir, "streamtablemerge")
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+      val path = clearedScratch(dir, "streamtablemerge")
       val table = GraftSink.VersionedTable(path)
       drainOnce(CdcStream.deliverVersionedMerge(
         CdcStream.fromParquetDir(s, inDir, ev.schema),
@@ -3394,13 +3317,6 @@ object Cdc {
     sys.props("java.io.tmpdir") + "/graft_rt_" + tag + "_" +
       dir.replaceAll("[^A-Za-z0-9.]", "_")
 
-  /** Run `body` with shuffle (= state-store) partitions sized to the
-    * harness's tiny local streams, restoring the session setting after.
-    * Stateful streaming cost here is per-batch state-store COMMITS
-    * (partitions × stores × micro-batches), so 32 partitions over a
-    * 100k-row feed is pure checkpoint-I/O overhead; a real deployment
-    * sizes this to executor count × throughput, which is exactly what
-    * this knob expresses. */
   /** Scale-adaptive admission for the AvailableNow topic drains: a
     * CONSTANT maxOffsetsPerTrigger makes the trigger count O(|log|) as
     * the feed grows (8192 was already 13 triggers at sf0.1, and every
@@ -3422,17 +3338,20 @@ object Cdc {
     * metadata across the cluster), while the footer record count is a
     * driver-side metadata read of the same number — identical to
     * count() by construction (no filter, footer row counts are exact). */
-  private def eventsRowCount(s: SparkSession, dir: String): Long = {
+  private[graft] def eventsRowCount(s: SparkSession, dir: String): Long = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = s.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
     val fs = p.getFileSystem(conf)
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).toSeq.filter(st =>
-          st.isFile && st.getPath.getName.endsWith(".parquet"))
-      else Seq(fs.getFileStatus(p))
+    // recursive: a hive-partitioned feed nests its files in key=value
+    // dirs; names Spark's reader skips (`_*`, `.*`) are skipped here too
+    val it = fs.listFiles(p, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter { st =>
+        val n = st.getPath.getName
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }.toSeq
     files.map { st =>
       val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
       try r.getRecordCount finally r.close()
@@ -3454,6 +3373,13 @@ object Cdc {
     if (df.rdd.getNumPartitions >= cores) df else df.repartition(cores)
   }
 
+  /** Run `body` with shuffle (= state-store) partitions sized to the
+    * harness's tiny local streams, restoring the session setting after.
+    * Stateful streaming cost here is per-batch state-store COMMITS
+    * (partitions × stores × micro-batches), so 32 partitions over a
+    * 100k-row feed is pure checkpoint-I/O overhead; a real deployment
+    * sizes this to executor count × throughput, which is exactly what
+    * this knob expresses. */
   private[queries] def withStreamPartitions[T](s: SparkSession, n: Int = 8)
                                               (body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
@@ -3528,13 +3454,19 @@ object Cdc {
     finally { server.stop(0); pool.shutdown() }
   }
 
-  /** [[roundtripPath]] recursively deleted and re-created — for
-    * append-mode sinks that must start empty every run. */
-  private[graft] def freshScratch(dir: String, tag: String): String = {
-    import java.nio.file.{Files, Paths}
+  /** [[roundtripPath]] recursively deleted, NOT re-created — for sinks
+    * that write with `ErrorIfExists` or build their own layout. */
+  private def clearedScratch(dir: String, tag: String): String = {
     val out = roundtripPath(dir, tag)
-    deleteTree(Paths.get(out))
-    Files.createDirectories(Paths.get(out))
+    deleteTree(java.nio.file.Paths.get(out))
+    out
+  }
+
+  /** [[clearedScratch]] re-created empty — for append-mode sinks that
+    * must start empty every run. */
+  private[graft] def freshScratch(dir: String, tag: String): String = {
+    val out = clearedScratch(dir, tag)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     out
   }
 

@@ -2,8 +2,6 @@ package graft.sources
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
@@ -19,6 +17,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
+
+import graft.cdc.{TableLog, VersionChange}
 
 /** Streaming CHANGE-DATA-FEED source over a
   * [[graft.cdc.GraftSink.VersionedTable]] (the table-side analog of
@@ -55,9 +55,12 @@ import org.apache.spark.util.SerializableConfiguration
   *    freshly dead rows, tagged `delete`.
   *  - `#kind=optimize` versions are content-identical republishes —
   *    skipped (zero files, zero rows).
-  *  - An OVERWRITE or RESTORE version FAILS LOUDLY: it carries no
-  *    row-level lineage — that is batch [[graft.cdc.GraftSink
-  *    .VersionedTable.changes]] keyed-full-diff territory.
+  *  - A RESTORE or OVERWRITE version carries no row-level lineage: it
+  *    serves as the keyed diff of the buckets it moved, like a merge
+  *    (requires `keyCols`).
+  *  - Versions are classified by [[graft.cdc.TableLog.change]], the
+  *    rule the batch [[graft.cdc.GraftSink.VersionedTable.changes]]
+  *    uses, so the stream and the batch feed serve the same rows.
   *  - `maxVersionsPerTrigger` bounds each micro-batch (admission
   *    control); AvailableNow freezes the end version at trigger start
   *    so the drain terminates under a live writer.
@@ -215,6 +218,8 @@ private[graft] class CdfMicroBatchStream(schema: StructType, path: String,
   private val conf: Configuration =
     SparkSession.active.sessionState.newHadoopConf()
 
+  private val log = new TableLog(new Path(path).getFileSystem(conf), path)
+
   /** AvailableNow fixed point: the end version frozen at trigger
     * start so the drain terminates under a live writer. */
   @volatile private var fixedEnd: Option[Long] = None
@@ -223,159 +228,38 @@ private[graft] class CdfMicroBatchStream(schema: StructType, path: String,
   override def prepareForTriggerAvailableNow(): Unit =
     fixedEnd = Some(currentVersion())
 
-  /** Latest PUBLISHED version — `_last_checkpoint` hint + forward
-    * existence probes (the VersionedTable resolution law: the hint is
-    * written after each publish, so it is never ahead, and a stale
-    * hint only costs extra probes); the full `_manifests/` listing
-    * survives as the hint-less fallback. The manifest rename is
-    * atomic, so every version ≤ this is fully readable. */
+  /** Latest PUBLISHED version ([[TableLog.currentVersion]]). The
+    * manifest rename is atomic, so every version ≤ this is fully
+    * readable. */
   private def currentVersion(): Long = {
-    val dir = new Path(path, "_manifests")
-    val fs = dir.getFileSystem(conf)
-    val hint: Long = try {
-      val hp = new Path(dir, "_last_checkpoint")
-      if (!fs.exists(hp)) -1L
-      else {
-        val in = fs.open(hp)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim finally in.close()
-        val h = s.toLong
-        if (h >= 1 && fs.exists(new Path(dir, s"v$h.manifest"))) h else -1L
-      }
-    } catch { case _: Exception => -1L }
-    val out =
-      if (hint >= 0) {
-        var v = hint
-        while (fs.exists(new Path(dir, s"v${v + 1}.manifest"))) v += 1
-        v
-      }
-      else if (!fs.exists(dir)) 0L
-      else fs.listStatus(dir).toSeq
-        .map(_.getPath.getName)
-        .filter(n => n.startsWith("v") && n.endsWith(".manifest"))
-        .map(_.stripPrefix("v").stripSuffix(".manifest").toLong)
-        .foldLeft(0L)(math.max)
-    lastSeen = out
-    out
+    lastSeen = log.currentVersion()
+    lastSeen
   }
 
-  private def manifestLines(v: Long): Seq[String] = {
-    val m = new Path(path, s"_manifests/v$v.manifest")
-    val fs = m.getFileSystem(conf)
-    require(fs.exists(m), s"$path: version $v was never committed " +
-      "(or its manifest was vacuumed under this consumer)")
-    val in = fs.open(m)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    finally in.close()
-  }
-
-  private def files(v: Long): Set[String] =
-    if (v == 0) Set.empty
-    else manifestLines(v).filter(l => l.nonEmpty && !l.startsWith("#")).toSet
-
-  private def kind(v: Long): Option[String] =
-    manifestLines(v).find(_.startsWith("#kind="))
-      .map(_.stripPrefix("#kind="))
-
-  /** The version's deletion-vector slice list (`#dv=`, comma-sep). */
-  private def dvOf(v: Long): Seq[String] =
-    if (v == 0) Nil
-    else manifestLines(v).find(_.startsWith("#dv="))
-      .toSeq.flatMap(_.stripPrefix("#dv=").split(','))
-      .filter(_.nonEmpty)
-
-  /** The version's logical → physical column map (`#rename=`). */
-  private def renameOf(v: Long): Map[String, String] =
-    if (v == 0) Map.empty
-    else manifestLines(v).find(_.startsWith("#rename="))
-      .map(_.stripPrefix("#rename=").split(',').filter(_.nonEmpty)
-        .map { pair =>
-          val i = pair.indexOf(':')
-          pair.substring(0, i) -> pair.substring(i + 1)
-        }.toMap).getOrElse(Map.empty)
-
-  /** A manifest line is `rel` or `rel<TAB>stats-json` — line identity
-    * is file identity; the stats drop only to build read paths. */
-  private def stripStats(line: String): String = {
-    val i = line.indexOf('\t')
-    if (i < 0) line else line.substring(0, i)
-  }
-
-  /** A line's stats row count (None = stats-less legacy line). */
-  private def statsRows(line: String): Option[Long] = {
-    val i = line.indexOf('\t')
-    if (i < 0) None
-    else "\"rows\":(\\d+)".r.findFirstMatchIn(line.substring(i + 1))
-      .map(_.group(1).toLong)
-  }
-
-  /** Keyed-diff partitions for one merge/restore version: one
-    * partition per touched bucket when every file is bucket-aligned
-    * (a key's before/after rows then share a bucket), the whole
-    * version otherwise — in BOTH cases sub-split into key-hash
-    * chunks whenever a side's manifest-stats row count exceeds
-    * `maxChunkRows`, so reader key-state is bounded at any input
-    * size (the r17 OOM-class hazard: one bucket — or one unbucketed
-    * version — materialized whole in one executor map; chunk count
-    * now scales with the input, partitions ∝ rows / maxChunkRows,
-    * SinksSpec-pinned). A bucket whose file list AND vector slices
-    * are identical on both sides is provably changeless — never
-    * planned (the restore case: only buckets the rolled-back
-    * versions actually moved are diffed). Stats-less legacy lines
-    * count as a full chunk each — splitting over-eagerly is cheap,
+  /** Keyed-diff partitions for one merge/restore/overwrite version:
+    * one per [[VersionChange.RewriteGroup]] (a touched bucket, or the
+    * whole version when its files are not bucket-aligned), each
+    * sub-split into key-hash chunks whenever a side's manifest-stats
+    * row count exceeds `maxChunkRows`, so reader key-state is bounded
+    * at any input size (the r17 OOM-class hazard: one bucket — or one
+    * unbucketed version — materialized whole in one executor map;
+    * chunk count scales with the input, partitions ∝ rows /
+    * maxChunkRows, SinksSpec-pinned). Stats-less legacy lines count as
+    * a full chunk each — splitting over-eagerly is cheap,
     * under-splitting is the OOM. */
-  private def keyedDiffPartitions(removedRaw: Seq[String],
-                                  addedRaw: Seq[String],
-                                  beforeDv: Seq[String],
-                                  afterDv: Seq[String],
-                                  v: Long, rn: Map[String, String],
-                                  kindStr: String)
+  private def keyedDiffPartitions(v: Long, rn: Map[String, String],
+                                  groups: Seq[VersionChange.RewriteGroup])
       : Seq[InputPartition] = {
-    // nothing removed and no vectors: the diff is pure inserts — the
-    // per-file append partitions, no keying needed (a first-commit
-    // overwrite / restore-from-empty)
-    if (removedRaw.isEmpty && beforeDv.isEmpty && afterDv.isEmpty)
-      return addedRaw.sorted.map(l => CdfInputPartition(
-        s"$path/${stripStats(l)}", v, rn): InputPartition)
-    require(keyCols.nonEmpty,
-      s"$path: version $v is a $kindStr commit — serving its keyed " +
-        "diff needs the keyCols option (TableCdfSource.stream(..., " +
-        "keyCols = ...))")
     def rowsOf(lines: Seq[String]): Long =
-      lines.map(l => statsRows(l).getOrElse(maxChunkRows)).sum
-    def chunksFor(rem: Seq[String], add: Seq[String]): Int = {
-      val rows = math.max(rowsOf(rem), rowsOf(add))
-      math.max(1L, (rows + maxChunkRows - 1) / maxChunkRows).toInt
-    }
-    def emit(rem: Seq[String], add: Seq[String], bdv: Seq[String],
-             adv: Seq[String]): Seq[InputPartition] = {
-      val n = chunksFor(rem, add)
+      lines.map(l => TableLog.statsRows(l).getOrElse(maxChunkRows)).sum
+    groups.flatMap { g =>
+      val rows = math.max(rowsOf(g.removed), rowsOf(g.added))
+      val n = math.max(1L, (rows + maxChunkRows - 1) / maxChunkRows).toInt
       (0 until n).map(c => CdfMergePartition(path,
-        rem.map(stripStats).sorted, add.map(stripStats).sorted,
-        bdv, adv, v, rn, c, n): InputPartition)
+        g.removed.map(TableLog.path).sorted, g.added.map(TableLog.path).sorted,
+        g.beforeDv, g.afterDv, v, rn, c, n): InputPartition)
     }
-    val allBucketed = (removedRaw ++ addedRaw)
-      .forall(l => pathBucket(stripStats(l)).isDefined)
-    if (allBucketed) {
-      val remByB = removedRaw.groupBy(l => pathBucket(stripStats(l)).get)
-      val addByB = addedRaw.groupBy(l => pathBucket(stripStats(l)).get)
-      (remByB.keySet ++ addByB.keySet).toSeq.sorted.flatMap { b =>
-        val rem = remByB.getOrElse(b, Nil)
-        val add = addByB.getOrElse(b, Nil)
-        val bdv = beforeDv.filter(sl => sliceBucket(sl) == b)
-        val adv = afterDv.filter(sl => sliceBucket(sl) == b)
-        if (rem.toSet == add.toSet && bdv == adv) Nil // changeless
-        else emit(rem, add, bdv, adv)
-      }
-    } else emit(removedRaw, addedRaw, beforeDv, afterDv)
   }
-
-  private def pathBucket(rel: String): Option[Long] =
-    "__bucket=(\\d+)/".r.findFirstMatchIn(rel).map(_.group(1).toLong)
-
-  private def sliceBucket(slice: String): Long =
-    "__dvb=(-?\\d+)".r.findFirstMatchIn(slice)
-      .map(_.group(1).toLong).getOrElse(-1L)
 
   /** Consumption begins at `startingVersion` (Delta's
     * startingVersion option) — the offset below it is the initial
@@ -388,34 +272,33 @@ private[graft] class CdfMicroBatchStream(schema: StructType, path: String,
 
   /** Incremental BYTE weight of version `v` — the size of what a
     * micro-batch containing it will actually read (added files;
-    * both diff sides for merge/restore; fresh slices for deletes;
-    * zero for optimize). Driver metadata (one getFileStatus per
-    * file, cached — a version's manifest is immutable). */
+    * both diff sides of the moved buckets for merge/restore/overwrite;
+    * fresh slices for deletes; zero for optimize). Driver metadata
+    * (one getFileStatus per file, cached — a version's manifest is
+    * immutable). */
   private val versionBytesCache =
     scala.collection.concurrent.TrieMap.empty[Long, Long]
   private def versionBytes(v: Long): Long =
     versionBytesCache.getOrElseUpdate(v, {
-      val fs = new Path(path).getFileSystem(conf)
       def sizeOfRel(rel: String): Long =
-        try fs.getFileStatus(new Path(path, rel)).getLen
+        try log.fs.getFileStatus(new Path(path, rel)).getLen
         catch { case _: Exception => 0L }
       def sizeOfSlice(sl: String): Long = {
         val dir = new Path(path, sl)
-        if (!fs.exists(dir)) 0L
-        else fs.listStatus(dir).filter(_.isFile).map(_.getLen).sum
+        if (!log.fs.exists(dir)) 0L
+        else log.fs.listStatus(dir).filter(_.isFile).map(_.getLen).sum
       }
-      val prev = files(v - 1)
-      val cur = files(v)
-      val k = kind(v)
-      if (k.contains("optimize")) 0L
-      else if (k.contains("delete"))
-        dvOf(v).filterNot(dvOf(v - 1).toSet).map(sizeOfSlice).sum
-      else if (k.contains("restore"))
-        (prev ++ cur).toSeq.map(stripStats).distinct.map(sizeOfRel).sum
-      else if (k.contains("merge"))
-        ((prev -- cur) ++ (cur -- prev)).toSeq
-          .map(stripStats).map(sizeOfRel).sum
-      else (cur -- prev).toSeq.map(stripStats).map(sizeOfRel).sum
+      def sizeOfLines(lines: Seq[String]): Long =
+        lines.map(TableLog.path).distinct.map(sizeOfRel).sum
+      TableLog.change(log.readOrEmpty(v - 1), log.read(v)) match {
+        case VersionChange.Unchanged => 0L
+        case VersionChange.Inserted(lines) => sizeOfLines(lines)
+        case VersionChange.DvDelete(slices) =>
+          slices.map(s => sizeOfSlice(s.slice)).sum
+        case VersionChange.Update(posts, _) => sizeOfLines(posts)
+        case VersionChange.KeyedRewrite(_, groups) =>
+          sizeOfLines(groups.flatMap(g => g.removed ++ g.added))
+      }
     })
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
@@ -456,86 +339,40 @@ private[graft] class CdfMicroBatchStream(schema: StructType, path: String,
 
   override def commit(end: Offset): Unit = ()
 
+  /** Each version of (start, end] read once and classified by
+    * [[TableLog.change]]: appends become one partition per added file,
+    * DV deletes one per fresh slice, updates their post-image files
+    * (plus their fresh slices as pre-images with `preimages`), and
+    * keyed rewrites one partition per moved bucket (or key-hash chunk);
+    * optimize, constraint and rename versions plan nothing. */
   override def planInputPartitions(start: Offset,
                                    end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[CdfOffset].version
     val e = end.asInstanceOf[CdfOffset].version
-    (s + 1 to e).flatMap { v =>
-      val prev = files(v - 1)
-      val cur = files(v)
-      val k = kind(v)
-      if (k.contains("optimize")) Nil // content-identical republish
-      else if (k.contains("delete")) {
-        // a DV delete changes no files: fresh slices (list-level diff
-        // — carried slices are verbatim) are the change set, one
-        // partition per touched bucket
-        val prevDv = dvOf(v - 1)
-        val prevSet = prevDv.toSet
-        dvOf(v).filterNot(prevSet.contains).map { sl =>
-          val b = sliceBucket(sl)
-          CdfDeletePartition(path, Seq(sl),
-            prevDv.filter(o => sliceBucket(o) == b), v,
-            renameOf(v)): InputPartition
-        }
+    val ms = if (e > s) (s to e).map(log.readOrEmpty) else Nil
+    ms.zip(ms.drop(1)).flatMap { case (prev, cur) =>
+      val (v, rn) = (cur.version, cur.rename)
+      def fileParts(lines: Seq[String], tag: String): Seq[InputPartition] =
+        lines.map(l =>
+          CdfInputPartition(s"$path/${TableLog.path(l)}", v, rn, tag))
+      def deleteParts(slices: Seq[VersionChange.FreshSlice],
+                      tag: String): Seq[InputPartition] =
+        slices.map(f =>
+          CdfDeletePartition(path, Seq(f.slice), f.previous, v, rn, tag))
+      TableLog.change(prev, cur) match {
+        case VersionChange.Unchanged => Nil
+        case VersionChange.Inserted(lines) => fileParts(lines, "insert")
+        case VersionChange.DvDelete(slices) => deleteParts(slices, "delete")
+        case VersionChange.Update(posts, slices) =>
+          fileParts(posts, "update_postimage") ++
+            (if (preimages) deleteParts(slices, "update_preimage") else Nil)
+        case VersionChange.KeyedRewrite(kind, groups) =>
+          require(keyCols.nonEmpty,
+            s"$path: version $v is a $kind commit — serving its keyed " +
+              "diff needs the keyCols option (TableCdfSource.stream(..., " +
+              "keyCols = ...))")
+          keyedDiffPartitions(v, rn, groups)
       }
-      else if (k.contains("restore") || k.contains("overwrite")) {
-        // a restore — and an overwrite (the batch changes() already
-        // serves it this way; the stream failing loudly on it was an
-        // r17 inconsistency) — is a merge-shaped keyed diff between
-        // the previous and new content (each side under its own
-        // vector), exactly the machinery merge versions use; buckets
-        // whose files AND slices carried verbatim are provably
-        // changeless and never planned, so a restore that reverts one
-        // delete reads one bucket, not the table
-        keyedDiffPartitions(prev.toSeq.sorted, cur.toSeq.sorted,
-          dvOf(v - 1), dvOf(v), v, renameOf(v), k.get)
-      }
-      else if (k.contains("update")) {
-        // an UPDATE version: added files are the post-images; the
-        // fresh DV slices are the pre-images (emitted only with the
-        // preimages option — the CDF convention)
-        val rn = renameOf(v)
-        val posts = (cur -- prev).toSeq.sorted.map { line =>
-          CdfInputPartition(s"$path/${stripStats(line)}", v, rn,
-            "update_postimage"): InputPartition
-        }
-        val pres = if (!preimages) Nil else {
-          val prevDv = dvOf(v - 1)
-          val prevSet = prevDv.toSet
-          dvOf(v).filterNot(prevSet.contains).map { sl =>
-            val b = sliceBucket(sl)
-            CdfDeletePartition(path, Seq(sl),
-              prevDv.filter(o => sliceBucket(o) == b), v, rn,
-              "update_preimage"): InputPartition
-          }
-        }
-        posts ++ pres
-      }
-      else if (prev.subsetOf(cur)) {
-        (cur -- prev).toSeq.sorted.map { line =>
-          CdfInputPartition(s"$path/${stripStats(line)}", v,
-            renameOf(v)): InputPartition
-        }
-      }
-      else if (k.contains("merge")) {
-        require(keyCols.nonEmpty,
-          s"$path: version $v is a merge commit — serving its keyed " +
-            "diff needs the keyCols option (TableCdfSource.stream(..., " +
-            "keyCols = ...))")
-        // per-bucket decomposition (the bucket is a pure function of
-        // the key, so a key's before/after rows share a bucket) with
-        // key-hash chunking on top; an unbucketed merge — files that
-        // may hold any key — serves as ONE key-hash-chunked diff over
-        // the version (parallel and memory-bounded, where the r17
-        // fallback collapsed it into one unbounded partition)
-        keyedDiffPartitions((prev -- cur).toSeq.sorted,
-          (cur -- prev).toSeq.sorted, dvOf(v - 1), dvOf(v), v,
-          renameOf(v), "merge")
-      }
-      else throw new IllegalArgumentException(
-        s"$path: version $v is not an append (kind=${k.getOrElse("?")}) " +
-          "— it carries no row-level lineage; use VersionedTable.changes " +
-          "for overwrite ranges")
     }.toArray
   }
 

@@ -566,4 +566,13 @@ class CdcStreamSpec extends SparkSpec {
     assert(expected > 0, "generator parameters produced no matches")
     assert(spark.table("ssj_gen").count() === expected)
   }
+
+  test("eventsRowCount sums the footers of a hive-partitioned events " +
+    "feed, nested files included") {
+    val dir = tmp("events-partitioned")
+    spark.read.parquet(s"$sfDir/events.parquet")
+      .write.partitionBy("event_type").parquet(s"$dir/events.parquet")
+    assert(graft.queries.Cdc.eventsRowCount(spark, dir) ===
+      Tables.events(spark, dir).count())
+  }
 }

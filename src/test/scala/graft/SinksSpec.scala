@@ -2100,6 +2100,67 @@ class SinksSpec extends SparkSpec {
       === graft.sources.CdfOffset(3))
   }
 
+  test("VersionedTable.merge validates its batch against the standing " +
+    "CHECK constraints and carries them into the new version") {
+    import spark.implicits._
+    val path = tmp("vtable-merge-checks")
+    val vt = GraftSink.VersionedTable(path)
+    def batch(key: Long, qty: Long): DataFrame =
+      Seq((key, key, "I", qty)).toDF("key", "seq", "op", "qty")
+    vt.commit(Seq((1L, 1L, 10L)).toDF("key", "seq", "qty")) // v1
+    vt.addConstraint(spark, "qty_pos", "qty > 0") // v2
+    val e = intercept[IllegalArgumentException](
+      vt.merge(batch(2L, -1L), Seq("key"), Seq("seq")))
+    assert(e.getMessage.contains("qty_pos"))
+    assert(vt.currentVersion(spark) === 2L) // nothing published
+    val v3 = vt.merge(batch(2L, 5L), Seq("key"), Seq("seq"))
+    assert(vt.manifestMeta(spark, v3)("checks").contains("qty_pos"))
+    assert(vt.read(spark).count() === 2L)
+    // the carried check keeps binding later commits
+    val e2 = intercept[IllegalArgumentException](
+      vt.commit(Seq((3L, 3L, -2L)).toDF("key", "seq", "qty")))
+    assert(e2.getMessage.contains("qty_pos"))
+  }
+
+  test("TableCdfSource drained from version 1 equals the batch " +
+    "changes() row for row across every version kind") {
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.Trigger
+    val path = tmp("vtable-cdf-every-kind")
+    val vt = GraftSink.VersionedTable(path)
+    def upserts(rows: (Long, Long, String, String)*): DataFrame =
+      rows.toSeq.toDF("key", "seq", "op", "tag")
+    vt.commit((0L until 40L).map(k => (k, 0L, s"a$k"))
+      .toDF("key", "seq", "tag")) // v1: append
+    vt.mergeBucketed(upserts((0L until 10L).map(k => (k, 1L, "U", s"b$k")) ++
+      Seq((10L, 1L, "D", ""), (100L, 1L, "I", "new")): _*),
+      Seq("key"), Seq("seq"), numBuckets = 4) // v2: bucketed merge
+    vt.deleteWhere(spark, col("key") < 5L) // v3: DV delete
+    vt.updateWhere(spark, col("key") === 20L,
+      Map("tag" -> lit("upd"))) // v4: update
+    vt.addConstraint(spark, "seq_nonneg", "seq >= 0") // v5: constraint
+    vt.optimize(spark, 1000L, keyCols = Seq("key")) // v6: optimize
+    vt.restore(spark, 3L) // v7: restore
+    val v8 = vt.commit((0L until 30L).map(k => (k, 2L, s"o$k"))
+      .toDF("key", "seq", "tag"), overwrite = true) // v8: overwrite
+    assert(vt.history(spark).select("kind").as[String].collect().toSeq ===
+      Seq("append", "merge", "delete", "update", "constraint", "optimize",
+        "restore", "overwrite"))
+    val qn = "cdf_every_kind_sink"
+    val q = graft.sources.TableCdfSource
+      .stream(spark, path, vt.read(spark).schema, keyCols = Seq("key"))
+      .writeStream.format("memory").queryName(qn)
+      .option("checkpointLocation", tmp("ckpt-every-kind"))
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val oracle = vt.changes(spark, 0L, v8, Seq("key"))
+    val streamed = spark.table(qn).select(oracle.columns.map(col).toSeq: _*)
+    assertSameRows(streamed, oracle)
+    // every content-changing kind contributed rows
+    assert(oracle.select("_commit_version").distinct().as[Long]
+      .collect().sorted.toSeq === Seq(1L, 2L, 3L, 4L, 7L, 8L))
+  }
+
   test("runTo delivers the plugin-chain output to the sink") {
     val path = tmp("sink-chain")
     Changefeed(Seq(

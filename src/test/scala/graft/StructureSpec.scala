@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guard over src/main/scala: sessions are built in one place and
-  * AvailableNow drains are started in a few named helpers, so the
-  * builder chain and the drain tail are not copied back into call
-  * sites. */
+/** Source guard over src/main/scala: sessions are built in one place,
+  * AvailableNow drains are started in a few named helpers, and the
+  * VersionedTable log format is known to one module, so the builder
+  * chain, the drain tail and the manifest parsing are not copied back
+  * into call sites. */
 class StructureSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -54,5 +55,13 @@ class StructureSpec extends AnyFunSuite {
     val checkpoints = sites("""createTempDirectory\([^)]*ckpt""")
     assert(triggers.nonEmpty && checkpoints.nonEmpty)
     assert((triggers ++ checkpoints).filterNot(allowed).isEmpty)
+  }
+
+  test("the table-log format is spelled only in TableLog") {
+    val literals = Seq("_manifests", ".manifest\"", "_last_checkpoint",
+      "\"#kind=\"", "\"#dv=\"", "\"#rename=\"", "__bucket=(", "__dvb=(")
+    val files = literals.flatMap(l =>
+      sites(java.util.regex.Pattern.quote(l))).map(_._1).distinct
+    assert(files === Seq("graft/cdc/TableLog.scala"))
   }
 }
