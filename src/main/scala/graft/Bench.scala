@@ -54,19 +54,17 @@ object Bench {
     // zero-I/O GenSource stream drained AvailableNow in exactly 3
     // micro-batches through a stateful 64-group aggregation — same
     // triggers, same state rows, every invocation, every round.
-    def streamSentinelOnce(): Unit = {
-      val ckpt = java.nio.file.Files.createTempDirectory("bench_ss").toString
-      val q = spark.readStream.format("graft.sources.GenSource")
-        .option("rows", 600000).option("users", 9973).option("slices", cpus)
-        .option("rowsPerBatch", 200000).load()
-        .groupBy(pmod(col("user_id"), lit(64L)).as("g"))
-        .agg(count(lit(1)).as("n"), sum(col("value_e2")).as("s"))
-        .writeStream.format("noop").outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    def streamSentinelOnce(): Unit =
+      graft.queries.Cdc.drainOnce(ckpt =>
+        spark.readStream.format("graft.sources.GenSource")
+          .option("rows", 600000).option("users", 9973).option("slices", cpus)
+          .option("rowsPerBatch", 200000).load()
+          .groupBy(pmod(col("user_id"), lit(64L)).as("g"))
+          .agg(count(lit(1)).as("n"), sum(col("value_e2")).as("s"))
+          .writeStream.format("noop").outputMode("update")
+          .option("checkpointLocation", ckpt)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start())
     val streamSentinels = scala.collection.mutable.ArrayBuffer.empty[Double]
     def streamSentinelPass(): Unit =
       streamSentinels += (1 to 2).map { _ =>

@@ -48,9 +48,12 @@ object GraftSink {
   }
 
   /** In-memory sink: materializes into a cached temp view (test /
-    * interactive target). */
+    * interactive target). A write replaces the view and uncaches the
+    * frame it held, so one write per micro-batch pins one frame. */
   final case class Memory(viewName: String) extends GraftSink {
     def write(df: DataFrame): Unit = {
+      val catalog = df.sparkSession.catalog
+      if (catalog.tableExists(viewName)) catalog.uncacheTable(viewName)
       df.cache().count() // force materialization once
       df.createOrReplaceTempView(viewName)
     }

@@ -259,7 +259,7 @@ object MinHash {
     * a fixed flush plan the greedy therefore unrolls into `slices`
     * nested accept CTEs (acc_0..acc_{slices-1}), each anti-joining the
     * verified cross-flush near-dup relation against the union of the
-    * earlier accept sets. Flush membership mirrors streamSliceDir's
+    * earlier accept sets. Flush membership mirrors FlushFeed.stage's
     * integer-division rank bounds; in-batch exact dedup (min-id per
     * distinct text) and the band/verify scheme reuse the
     * [[minhashOracleSql]] constants, so the engines cannot drift.

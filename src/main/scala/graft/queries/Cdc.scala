@@ -3103,32 +3103,8 @@ object Cdc {
       // timeout fires during batch execution; AvailableNow schedules no
       // trailing no-data batch — observed: the tail purchases of the
       // final data flush stay buffered without it)
-      def appendFlush(idx: Int, ts: Long): Unit = {
-        import java.nio.file.{Files, Paths, StandardCopyOption}
-        import java.nio.file.attribute.FileTime
-        val staging = Files.createTempDirectory(s"sentinel-$idx")
-        sentinelPair(idx, ts).coalesce(1)
-          .write.mode("overwrite").parquet(staging.toString)
-        val listing = Files.list(staging)
-        val part = try listing
-          .filter(_.toString.endsWith(".parquet")).findFirst().get()
-        finally listing.close()
-        val dst = Paths.get(inDir, f"flush-$idx%03d.parquet")
-        Files.move(part, dst, StandardCopyOption.ATOMIC_MOVE)
-        // arrival order is mtime order: place this flush strictly
-        // after everything already in the dir (streamSliceDir pins
-        // slice mtimes explicitly, so "now" is not necessarily last)
-        val dirList = Files.list(Paths.get(inDir))
-        val maxExisting = try dirList
-          .filter(p => p != dst && p.toString.endsWith(".parquet"))
-          .mapToLong(p => Files.getLastModifiedTime(p).toMillis)
-          .max.orElse(0L)
-        finally dirList.close()
-        Files.setLastModifiedTime(dst, FileTime.fromMillis(
-          math.max(System.currentTimeMillis(), maxExisting + 1000L)))
-      }
-      appendFlush(100, maxTs + 4L * 3600000000L)
-      appendFlush(101, maxTs + 8L * 3600000000L)
+      FlushFeed.append(sentinelPair(100, maxTs + 4L * 3600000000L), inDir, 100)
+      FlushFeed.append(sentinelPair(101, maxTs + 8L * 3600000000L), inDir, 101)
       // ONE shared source and one tagged-union state machine for both
       // sides (see cdc_stream_interval_join): unmatched purchases emit
       // their null-click row at eviction, driven by the event-time
@@ -3237,30 +3213,13 @@ object Cdc {
     // that every row was transformed by precisely the version active
     // when it flowed — the RFC's no-recompilation upgrade contract.
     "cdc_rollout_upgrade" -> ((s, dir) => withStreamPartitions(s) {
-      import org.apache.spark.sql.expressions.Window
       import graft.streaming.{ChainRollout, VersionedChain}
-      import java.nio.file.{Files, Paths, StandardCopyOption}
       val ev = Tables.events(s, dir)
-      val ranked = ev.withColumn("__rn", row_number().over(
-        Window.orderBy(col("ts_us"), col("event_id")))).localCheckpoint()
-      val total = ranked.count()
-      val inDir = freshScratch(dir, "roll_in")
+      // the four quarter flushes, staged once and released between
+      // the rollout phases as an upstream keeps flushing
+      val feed = FlushFeed.stage(ev, freshScratch(dir, "roll_in"), slices = 4,
+        Seq(col("ts_us"), col("event_id")))
       val outDir = freshScratch(dir, "roll_out")
-      def flush(i: Int): Unit = {
-        val lo = i * total / 4 + 1
-        val hi = (i + 1) * total / 4
-        val staging = Files.createTempDirectory(s"roll-$i")
-        ranked.where(col("__rn").between(lo, hi)).drop("__rn")
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(staging.toString)
-        val listing = Files.list(staging)
-        val part = try listing
-          .filter(_.toString.endsWith(".parquet")).findFirst().get()
-        finally listing.close()
-        Files.move(part, Paths.get(inDir, f"flush-$i%03d.parquet"),
-          StandardCopyOption.ATOMIC_MOVE)
-        Thread.sleep(5)
-      }
       val v1 = VersionedChain(1, Changefeed(Seq(
         TransformPlugin("to-changelog", Changelog.fromEvents),
         MaskPlugin(Seq("props"), Mask.RedactKeepLast(2)))))
@@ -3268,12 +3227,12 @@ object Cdc {
         TransformPlugin("to-changelog", Changelog.fromEvents),
         MaskPlugin(Seq("props"), Mask.Sha256))))
       drainOnce { ckpt =>
-        val roll = new ChainRollout(s, inDir, ev.schema,
+        val roll = new ChainRollout(s, feed.dir, ev.schema,
           GraftSink.Files(outDir, saveMode = SaveMode.Append), ckpt, v1)
-        flush(0); flush(1); roll.start(); roll.drain()
-        roll.prepare(v2); flush(2)
+        feed.release(0); feed.release(1); roll.start(); roll.drain()
+        roll.prepare(v2); feed.release(2)
         roll.pause(); roll.commit()
-        flush(3); roll.start()
+        feed.release(3); roll.start()
       }
       s.read.parquet(outDir)
         .select(col("key"), col("seq"), col("op"), col("event_type"),
@@ -3412,7 +3371,7 @@ object Cdc {
     * await the query it returns. The checkpoint is deleted only when the
     * query ended without an exception (the rule Spark applies to its own
     * temp checkpoints), so a failed drain keeps its state for diagnosis. */
-  private[queries] def drainOnce(start: String => StreamingQuery): StreamingQuery = {
+  private[graft] def drainOnce(start: String => StreamingQuery): StreamingQuery = {
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt")
     val q = start(ckpt.toString)
     q.awaitTermination()
@@ -3470,62 +3429,109 @@ object Cdc {
     out
   }
 
-  /** Re-write `ev` as `slices` ts-ordered parquet flush files with
-    * distinct mtimes (file-stream arrival order == event-time order),
-    * into a deterministic dir cleaned on every call — the harness
-    * stand-in for an upstream feed. */
+  /** The harness's upstream: a dir of parquet flushes that
+    * [[CdcStream.fromParquetDir]] replays as ordered micro-batches. This
+    * is the one writer of that layout, and it is harness-only (a
+    * deployment's upstream writes its own files):
+    *  - names: flush `i` is the one file `flush-NNN.parquet` (`%03d`);
+    *  - staging: flushes are written under a `.staging*` dir in the
+    *    feed, which the file source skips, and renamed in atomically;
+    *    the staging dir is deleted when its last flush is released;
+    *  - order: the file source delivers in mtime order, so a flush is
+    *    stamped max(now, newest flush in the dir + 1 s) before it turns
+    *    visible. Release order is arrival order (equal mtimes let a
+    *    flush apply out of order: perfbench/BENCHMARK.md).
+    * [[FlushFeed.stage]] writes every slice of a frame in one Spark
+    * action and releases slice `i` on demand; [[FlushFeed.append]]
+    * lands one frame as one flush. */
+  private[graft] final class FlushFeed private (val dir: String,
+                                                staging: java.nio.file.Path,
+                                                slices: Int) {
+    private val pending = scala.collection.mutable.SortedSet(0 until slices: _*)
+
+    /** Land slice `i` as `flush-i`; the last release deletes the
+      * staging dir. */
+    def release(i: Int): Unit = {
+      require(pending.remove(i), s"slice $i of $dir is not staged")
+      FlushFeed.land(staging.resolve(s"__slice=$i"), dir, i)
+      if (pending.isEmpty) deleteTree(staging)
+    }
+
+    /** Release every slice still staged, in slice order; returns [[dir]]. */
+    def releaseAll(): String = {
+      pending.toList.foreach(release)
+      dir
+    }
+  }
+
+  private[graft] object FlushFeed {
+    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+    import org.apache.spark.sql.expressions.Window
+
+    /** Stage `ev` into the feed `dir` as `slices` flushes in `orderCols`
+      * order: slice i holds the ranks (i·total/n, (i+1)·total/n] — the
+      * boundaries the oracle SQL re-derives — so a rank's slice is
+      * (rank·n − 1) div total. One action: the rank and the frame's row
+      * count come from one global window, and one write lays out every
+      * slice (a slice with no rows stages an empty file). */
+    def stage(ev: DataFrame, dir: String, slices: Int,
+              orderCols: Seq[Column]): FlushFeed = {
+      val staging = Files.createTempDirectory(Paths.get(dir), ".staging")
+      val byRank = Window.orderBy(orderCols: _*)
+      val whole = byRank.rowsBetween(Window.unboundedPreceding,
+        Window.unboundedFollowing)
+      ev.select(col("*"), row_number().over(byRank).as("__rn"),
+          count(lit(1)).over(whole).as("__total"))
+        .withColumn("__slice",
+          expr(s"(CAST(__rn AS BIGINT) * $slices - 1) div __total"))
+        .drop("__rn", "__total")
+        .write.partitionBy("__slice").mode(SaveMode.Overwrite)
+        .parquet(staging.toString)
+      (0 until slices).map(i => staging.resolve(s"__slice=$i"))
+        .filterNot(Files.exists(_))
+        .foreach(d => ev.limit(0).coalesce(1).write.parquet(d.toString))
+      new FlushFeed(dir, staging, slices)
+    }
+
+    /** Land `df` in the feed `dir` as the one flush `flush-index`. */
+    def append(df: DataFrame, dir: String, index: Int): Unit = {
+      val staging = Files.createTempDirectory(Paths.get(dir), ".staging")
+      df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging.toString)
+      land(staging, dir, index)
+      deleteTree(staging)
+    }
+
+    /** The visible parquet files directly under `d`. */
+    private def parquetFiles(d: Path): Seq[Path] = {
+      val listing = Files.list(d)
+      try listing.toArray.toSeq.map(_.asInstanceOf[Path]).filter { p =>
+        val name = p.getFileName.toString
+        name.endsWith(".parquet") && !name.startsWith(".")
+      } finally listing.close()
+    }
+
+    /** Stamp the part file under `staged` with the next arrival time,
+      * then rename it into the feed as `flush-index`. */
+    private def land(staged: Path, dir: String, index: Int): Unit = {
+      val Seq(part) = parquetFiles(staged) // a flush is exactly one file
+      val newest = parquetFiles(Paths.get(dir))
+        .map(Files.getLastModifiedTime(_).toMillis).foldLeft(0L)(math.max)
+      Files.setLastModifiedTime(part, java.nio.file.attribute.FileTime
+        .fromMillis(math.max(System.currentTimeMillis(), newest + 1000L)))
+      Files.move(part, Paths.get(dir, f"flush-$index%03d.parquet"),
+        StandardCopyOption.ATOMIC_MOVE)
+    }
+  }
+
+  /** Re-write `ev` as `slices` [[FlushFeed]] flushes in `orderCols`
+    * order (file-stream arrival order == that order) into a
+    * deterministic dir cleaned on every call. */
   private[graft] def streamSliceDir(s: SparkSession, ev: DataFrame,
                              dir: String, slices: Int,
                              orderCols: Seq[Column] = Seq(col("ts_us"),
                                col("event_id")),
-                             tag: String = "stream_in"): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.SaveMode
-    val out = freshScratch(dir, tag)
-    // One global sort, materialized once — the slice write below then
-    // reads it instead of re-running the window per slice.
-    val ranked = ev.withColumn("__rn", row_number().over(
-      Window.orderBy(orderCols: _*))).localCheckpoint()
-    val total = ranked.count()
-    // ONE write job for ALL slices (previously one filter+coalesce job
-    // per slice — `slices` extra scheduler round-trips per streaming
-    // query, pure micro-batch-prep fixed cost; guide §1.2 "don't
-    // compute things you throw away" / §2.6): tag each row with its
-    // slice id (same integer rank-thirds boundaries as before, so
-    // oracle SQL that re-derives the assignment is untouched), cluster
-    // by slice, write hive-partitioned — every __slice dir gets
-    // exactly one file because all of a slice's rows hash to one
-    // shuffle partition. Arrival order is then pinned EXPLICITLY with
-    // per-flush mtimes instead of sleeps between sequential writes.
-    val his = (0 until slices).map(i => (i + 1) * total / slices)
-    val sliceCol = (0 until slices - 1).foldRight(lit(slices - 1): Column) {
-      case (i, acc) => when(col("__rn") <= his(i), lit(i)).otherwise(acc)
-    }
-    val staging = Files.createTempDirectory("slices")
-    ranked.withColumn("__slice", sliceCol).drop("__rn")
-      .repartition(slices, col("__slice"))
-      .write.partitionBy("__slice").mode(SaveMode.Overwrite)
-      .parquet(staging.toString)
-    val base = System.currentTimeMillis()
-    for (i <- 0 until slices) {
-      val d = staging.resolve(s"__slice=$i")
-      if (!Files.exists(d)) // degenerate total < slices: 0-row flush
-        ranked.limit(0).drop("__rn")
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(d.toString)
-      val listing = Files.list(d)
-      val part = try listing
-        .filter(_.toString.endsWith(".parquet")).findFirst().get()
-      finally listing.close()
-      val dst = Paths.get(out, f"flush-$i%03d.parquet")
-      Files.move(part, dst, StandardCopyOption.ATOMIC_MOVE)
-      // strictly increasing mtimes: file-stream arrival order ==
-      // event-time order, regardless of write timing
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(base + i * 1000L))
-    }
-    out
-  }
+                             tag: String = "stream_in"): String =
+    FlushFeed.stage(ev, freshScratch(dir, tag), slices, orderCols).releaseAll()
 
   val oracles: Map[String, String] = Map(
 

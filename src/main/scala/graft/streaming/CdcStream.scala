@@ -407,7 +407,10 @@ object CdcStream {
     * interval), never the full history. Inner join ⇒ a pair emits as
     * soon as both rows have arrived; eviction follows the watermark, so
     * results match the batch join exactly for data at most `delay` late
-    * (parity pinned in CdcStreamSpec). */
+    * (parity pinned in CdcStreamSpec). The query watermark is the
+    * minimum of the two sides', so this form, not [[intervalJoinTagged]],
+    * serves feeds whose event types lag each other (CdcStreamSpec
+    * "lagging clicks: ..." pins both answers). */
   def attributionJoin(purchases: DataFrame, clicks: DataFrame,
                       delay: String, window: String): DataFrame =
     attributionJoinWith(purchases, clicks, delay, window, "inner")
@@ -481,7 +484,10 @@ object CdcStream {
     *    every decision above (a flush's rows are never below either);
     *    the self-join deployment reads one feed, so the single
     *    watermark is the natural resolved-ts. State stays O(interval)
-    *    per key, pinned by the progress-metric bound in the spec. */
+    *    per key, pinned by the progress-metric bound in the spec.
+    *    When one type lags the other, its rows fall below the single
+    *    watermark and drop as late with no error (CdcStreamSpec
+    *    "lagging clicks: ..."); such a feed needs [[attributionJoin]]. */
   def intervalJoinTagged(feed: DataFrame, delay: String, window: String,
                          emitUnmatched: Boolean): Dataset[IvOut] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}

@@ -1,47 +1,52 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.cdc._
+import graft.queries.Cdc.FlushFeed
 import graft.streaming.CdcStream
 
 class CdcStreamSpec extends SparkSpec {
 
   private def batchEvents: DataFrame = Tables.events(spark, sfDir)
 
-  /** Write the events table as `n` ts-ordered parquet files into a fresh
-    * dir (sequential writes → mtime order == event-time order), so the
-    * file stream sees n ordered "flushes". */
-  private def sliceIntoDir(n: Int): (String, DataFrame) = {
-    val dir = Files.createTempDirectory("stream-in").toString
+  private val tsOrder = Seq(col("ts_us"), col("event_id"))
+
+  /** The events table as a feed of `n` ts-ordered flushes, all
+    * released: the file stream sees n ordered "flushes". */
+  private def slicedFeed(n: Int): (String, DataFrame) = {
     val ev = batchEvents
-    val total = ev.count()
-    val ranked = ev.withColumn("__rn",
-      row_number().over(Window.orderBy(col("ts_us"), col("event_id"))))
-    for (i <- 0 until n) {
-      val lo = i * total / n + 1
-      val hi = (i + 1) * total / n
-      val staging = Files.createTempDirectory(s"slice-$i")
-      ranked.where(col("__rn").between(lo, hi)).drop("__rn")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      val part = Files.list(staging).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.move(part, Paths.get(dir, f"flush-$i%03d.parquet"),
-        StandardCopyOption.ATOMIC_MOVE)
-      Thread.sleep(5) // distinct mtimes
-    }
-    (dir, ev)
+    (FlushFeed.stage(ev, tmp("stream-in"), n, tsOrder).releaseAll(), ev)
   }
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
+  /** The batch interval join the streaming attribution forms must
+    * equal: each purchase pairs with every click by the same user in
+    * the preceding hour. */
+  private def batchAttribution(ev: DataFrame,
+                               joinType: String = "inner"): DataFrame = {
+    val bp = ev.where(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts_us").as("purchase_ts_us"),
+        col("event_id").as("purchase_seq"))
+    val bc = ev.where(col("event_type") === "click")
+      .select(col("user_id").as("c_user"), col("ts_us").as("click_ts_us"),
+        col("event_id").as("click_seq"))
+    bp.join(bc, col("user_id") === col("c_user") &&
+        col("click_ts_us") <= col("purchase_ts_us") &&
+        col("click_ts_us") >= col("purchase_ts_us") - 3600L * 1000000,
+        joinType)
+      .select(col("user_id"), col("purchase_ts_us"), col("purchase_seq"),
+        col("click_ts_us"), col("click_seq"))
+  }
+
   test("streamed plugin chain output equals the batch chain output") {
-    val (inDir, ev) = sliceIntoDir(4)
+    val (inDir, ev) = slicedFeed(4)
     val chain = Changefeed(Seq(
       TransformPlugin("to-changelog", Changelog.fromEvents),
       EventTypeFilter(Set("purchase", "click")),
@@ -61,7 +66,7 @@ class CdcStreamSpec extends SparkSpec {
 
   test("deliverWithDlq: a poison batch quarantines with a reason, healthy " +
     "batches deliver, the feed completes") {
-    val (inDir, ev) = sliceIntoDir(3)
+    val (inDir, ev) = slicedFeed(3)
     // poison = any batch containing the globally-minimal event_id
     // (exactly one of the three flushes)
     val poisonId = ev.agg(min("event_id")).head().getLong(0)
@@ -91,7 +96,7 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("snapshot of the streamed feed equals the batch snapshot (A2 parity)") {
-    val (inDir, ev) = sliceIntoDir(3)
+    val (inDir, ev) = slicedFeed(3)
     val chain = Changefeed(Seq(TransformPlugin("to-changelog", Changelog.fromEvents)))
     val outDir = tmp("stream-snap")
     val q = CdcStream.deliver(
@@ -105,16 +110,11 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("stateful snapshot stream converges to the batch snapshot (A2 streaming form)") {
-    val (inDir, ev) = sliceIntoDir(3)
+    val (inDir, ev) = slicedFeed(3)
     val stream = CdcStream.fromParquetDir(spark, inDir, ev.schema)
     val updates = CdcStream.snapshotUpdates(
       Changelog.fromEvents(stream))
-    val q = updates.toDF().writeStream
-      .format("memory").queryName("snap_updates").outputMode("update")
-      .option("checkpointLocation", tmp("ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainToTable(updates, "snap_updates", "update")
     // final state per key = latest emitted update; drop tombstones
     val streamedSnap = Materialize.snapshot(spark.table("snap_updates"))
     val batchSnap = Materialize.snapshot(Changelog.fromEvents(ev))
@@ -122,30 +122,16 @@ class CdcStreamSpec extends SparkSpec {
     assert(batchSnap.exceptAll(streamedSnap).count() === 0)
   }
 
-  /** Write slice `i` of `n` (ts-ordered) from `ranked` into `dir` as one
-    * flush file — lets a test add flushes incrementally, between rollout
-    * phases, the way an upstream keeps flushing during an upgrade. */
-  private def flushSlice(dir: String, ranked: DataFrame, total: Long,
-                         i: Int, n: Int): Unit = {
-    val lo = i * total / n + 1
-    val hi = (i + 1) * total / n
-    val staging = Files.createTempDirectory(s"flush-$i")
-    ranked.where(col("__rn").between(lo, hi)).drop("__rn")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    val part = Files.list(staging).filter(_.toString.endsWith(".parquet"))
-      .findFirst().get()
-    Files.move(part, Paths.get(dir, f"flush-$i%03d.parquet"),
-      StandardCopyOption.ATOMIC_MOVE)
-    Thread.sleep(5)
-  }
-
   test("2PC chain rollout: exactly-once across a plugin version upgrade") {
     import graft.streaming.{ChainRollout, VersionedChain}
     val ev = batchEvents
     val total = ev.count()
     val ranked = ev.withColumn("__rn",
-      row_number().over(Window.orderBy(col("ts_us"), col("event_id"))))
-    val inDir = tmp("rollout-in")
+      row_number().over(Window.orderBy(tsOrder: _*)))
+    // four quarter flushes, released between the rollout phases the way
+    // an upstream keeps flushing during an upgrade
+    val feed = FlushFeed.stage(ev, tmp("rollout-in"), 4, tsOrder)
+    val inDir = feed.dir
 
     val v1 = VersionedChain(1, Changefeed(Seq(
       TransformPlugin("to-changelog", Changelog.fromEvents),
@@ -160,8 +146,8 @@ class CdcStreamSpec extends SparkSpec {
       tmp("rollout-ckpt"), v1)
 
     // two flushes arrive and drain under v1
-    flushSlice(inDir, ranked, total, 0, 4)
-    flushSlice(inDir, ranked, total, 1, 4)
+    feed.release(0)
+    feed.release(1)
     roll.start(); roll.drain()
 
     // Prepare: broken chains fail validation without touching the feed;
@@ -178,7 +164,7 @@ class CdcStreamSpec extends SparkSpec {
     roll.prepare(v2) // idempotent re-prepare
 
     // a flush lands while the upgrade is in flight (paused, not committed)
-    flushSlice(inDir, ranked, total, 2, 4)
+    feed.release(2)
 
     roll.pause() // drained feed: no-op
     roll.commit()
@@ -187,7 +173,7 @@ class CdcStreamSpec extends SparkSpec {
     assert(roll.activeVersion === 2)
 
     // resume from the SAME checkpoint under v2; one more flush after
-    flushSlice(inDir, ranked, total, 3, 4)
+    feed.release(3)
     roll.start(); roll.drain()
     // restart with no new input: checkpoint replays nothing
     roll.start(); roll.drain()
@@ -212,9 +198,8 @@ class CdcStreamSpec extends SparkSpec {
     import graft.streaming.{ChainRollout, VersionedChain}
     val ev = batchEvents
     val total = ev.count()
-    val ranked = ev.withColumn("__rn",
-      row_number().over(Window.orderBy(col("ts_us"), col("event_id"))))
-    val inDir = tmp("abort-in")
+    val feed = FlushFeed.stage(ev, tmp("abort-in"), 2, tsOrder)
+    val inDir = feed.dir
     val v1 = VersionedChain(1, Changefeed(Seq(
       TransformPlugin("to-changelog", Changelog.fromEvents))))
     val outDir = tmp("abort-out")
@@ -222,7 +207,7 @@ class CdcStreamSpec extends SparkSpec {
       GraftSink.Files(outDir, saveMode = SaveMode.Append),
       tmp("abort-ckpt"), v1)
 
-    flushSlice(inDir, ranked, total, 0, 2)
+    feed.release(0)
     roll.start(); roll.drain()
 
     // a Prepare that fails schema validation throws, NAMING the culprit
@@ -238,7 +223,7 @@ class CdcStreamSpec extends SparkSpec {
     assert(roll.activeVersion === 1)
 
     // v(n) keeps delivering after the failed prepare — the feed is untouched
-    flushSlice(inDir, ranked, total, 1, 2)
+    feed.release(1)
     roll.start(); roll.drain()
     val afterFail = spark.read.parquet(outDir)
     assert(afterFail.count() === total)
@@ -262,7 +247,7 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("streamed replay dedup collapses redelivered flushes (A14 streaming form)") {
-    val (inDir, ev) = sliceIntoDir(3)
+    val (inDir, ev) = slicedFeed(3)
     // redeliver every flush verbatim (at-least-once upstream)
     Files.list(Paths.get(inDir)).forEach { p =>
       if (p.toString.endsWith(".parquet"))
@@ -271,12 +256,7 @@ class CdcStreamSpec extends SparkSpec {
     val deduped = CdcStream.dedupWithinWatermark(
       CdcStream.fromParquetDir(spark, inDir, ev.schema),
       tsCol = "ts", watermarkDelay = "30 days", idCols = Seq("event_id"))
-    val q = deduped.writeStream
-      .format("memory").queryName("replay_dedup").outputMode("append")
-      .option("checkpointLocation", tmp("ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainToTable(deduped, "replay_dedup")
     val got = spark.table("replay_dedup")
     assert(got.count() === ev.count())
     assert(got.exceptAll(ev).count() === 0)
@@ -285,17 +265,12 @@ class CdcStreamSpec extends SparkSpec {
 
   test("streamed gap sessions match the batch sessionization (A13 parity)") {
     import graft.operators.Sessionize
-    val (inDir, ev) = sliceIntoDir(4)
+    val (inDir, ev) = slicedFeed(4)
     val sessions = CdcStream.sessionCounts(
       CdcStream.fromParquetDir(spark, inDir, ev.schema),
       tsCol = "ts", keyCol = "user_id",
       gap = "30 minutes", watermarkDelay = "1 hour")
-    val q = sessions.writeStream
-      .format("memory").queryName("gap_sessions").outputMode("append")
-      .option("checkpointLocation", tmp("ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainToTable(sessions, "gap_sessions")
     val emitted = spark.table("gap_sessions")
     val batch = Sessionize.stats(
       ev.select("user_id", "ts_us", "event_id", "value"),
@@ -312,16 +287,11 @@ class CdcStreamSpec extends SparkSpec {
 
   test("streaming pipeline frontiers converge to the batch feed-lag report " +
     "(A24 streaming parity)") {
-    val (inDir, ev) = sliceIntoDir(3)
+    val (inDir, ev) = slicedFeed(3)
     val chain = Changefeed(Seq(TransformPlugin("to-changelog", Changelog.fromEvents)))
     val frontiers = CdcStream.pipelineFrontiers(
       chain.run(CdcStream.fromParquetDir(spark, inDir, ev.schema)), 32)
-    val q = frontiers.writeStream
-      .format("memory").queryName("frontiers").outputMode("complete")
-      .option("checkpointLocation", tmp("ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainToTable(frontiers, "frontiers", "complete")
     // derive lag from the |pipelines|-row state exactly as the operator
     // docstring prescribes, then compare with the batch report
     val state = spark.table("frontiers").localCheckpoint()
@@ -336,16 +306,11 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("windowed counts with watermark: emitted windows match batch; resolved-ts advances") {
-    val (inDir, ev) = sliceIntoDir(4)
+    val (inDir, ev) = slicedFeed(4)
     val counts = CdcStream.windowedCounts(
       CdcStream.fromParquetDir(spark, inDir, ev.schema),
       tsCol = "ts", windowLen = "1 hour", watermarkDelay = "30 minutes")
-    val q = counts.writeStream
-      .format("memory").queryName("win_counts").outputMode("append")
-      .option("checkpointLocation", tmp("ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val q = drainToTable(counts, "win_counts")
     assert(CdcStream.resolvedTsUs(q).exists(_ > 0L))
     val emitted = spark.table("win_counts")
     val batch = ev.groupBy(
@@ -363,17 +328,12 @@ class CdcStreamSpec extends SparkSpec {
 
   test("hopping counts with watermark: emitted windows match the batch " +
     "sliding-window result (A12 streaming parity)") {
-    val (inDir, ev) = sliceIntoDir(4)
+    val (inDir, ev) = slicedFeed(4)
     val counts = CdcStream.hoppingCounts(
       CdcStream.fromParquetDir(spark, inDir, ev.schema),
       tsCol = "ts", windowLen = "15 minutes", slide = "5 minutes",
       watermarkDelay = "30 minutes")
-    val q = counts.writeStream
-      .format("memory").queryName("hop_counts").outputMode("append")
-      .option("checkpointLocation", tmp("ckpt_hop"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainToTable(counts, "hop_counts")
     val emitted = spark.table("hop_counts")
     val batch = ev
       .groupBy(window(col("ts"), "15 minutes", "5 minutes").as("w"),
@@ -389,32 +349,17 @@ class CdcStreamSpec extends SparkSpec {
 
   test("stream-stream interval join matches the batch interval join " +
     "(B15 streaming form)") {
-    val (inDir, ev) = sliceIntoDir(4)
+    val (inDir, ev) = slicedFeed(4)
     val joined = CdcStream.attributionJoin(
       purchases = CdcStream.fromParquetDir(spark, inDir, ev.schema)
         .where(col("event_type") === "purchase"),
       clicks = CdcStream.fromParquetDir(spark, inDir, ev.schema)
         .where(col("event_type") === "click"),
       delay = "1 hour", window = "1 hour")
-    val q = joined.writeStream
-      .format("memory").queryName("ssj").outputMode("append")
-      .option("checkpointLocation", tmp("ckpt_ssj"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainToTable(joined, "ssj")
     val streamed = spark.table("ssj")
     // batch reference: same projection + interval condition, no streams
-    val bp = ev.where(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts_us").as("purchase_ts_us"),
-        col("event_id").as("purchase_seq"))
-    val bc = ev.where(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts_us").as("click_ts_us"),
-        col("event_id").as("click_seq"))
-    val batch = bp.join(bc, col("user_id") === col("c_user") &&
-        col("click_ts_us") <= col("purchase_ts_us") &&
-        col("click_ts_us") >= col("purchase_ts_us") - 3600L * 1000000)
-      .select(col("user_id"), col("purchase_ts_us"), col("purchase_seq"),
-        col("click_ts_us"), col("click_seq"))
+    val batch = batchAttribution(ev)
     // the input slices are event-time ordered, so nothing is late and
     // streamed == batch exactly (state eviction never drops a matchable row)
     assert(streamed.count() === batch.count())
@@ -424,28 +369,13 @@ class CdcStreamSpec extends SparkSpec {
 
   test("unified tagged interval join (inner) emits exactly the batch " +
     "interval join pairs") {
-    val (inDir, ev) = sliceIntoDir(4)
+    val (inDir, ev) = slicedFeed(4)
     val joined = CdcStream.intervalJoinTagged(
       CdcStream.fromParquetDir(spark, inDir, ev.schema),
       delay = "1 hour", window = "1 hour", emitUnmatched = false)
-    val q = joined.toDF().writeStream
-      .format("memory").queryName("ssj_uni").outputMode("append")
-      .option("checkpointLocation", tmp("ckpt_ssj_uni"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainToTable(joined, "ssj_uni")
     val streamed = spark.table("ssj_uni")
-    val bp = ev.where(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts_us").as("purchase_ts_us"),
-        col("event_id").as("purchase_seq"))
-    val bc = ev.where(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts_us").as("click_ts_us"),
-        col("event_id").as("click_seq"))
-    val batch = bp.join(bc, col("user_id") === col("c_user") &&
-        col("click_ts_us") <= col("purchase_ts_us") &&
-        col("click_ts_us") >= col("purchase_ts_us") - 3600L * 1000000)
-      .select(col("user_id"), col("purchase_ts_us"), col("purchase_seq"),
-        col("click_ts_us"), col("click_seq"))
+    val batch = batchAttribution(ev)
     assert(streamed.count() === batch.count())
     assert(streamed.exceptAll(batch).count() === 0)
     assert(batch.exceptAll(streamed).count() === 0)
@@ -454,7 +384,7 @@ class CdcStreamSpec extends SparkSpec {
   test("unified tagged interval join (outer) emits the batch LEFT join — " +
     "attributed pairs plus each unmatched purchase's null row exactly " +
     "once — and evicts drained keys") {
-    val (inDir, ev) = sliceIntoDir(3)
+    val (inDir, ev) = slicedFeed(3)
     val maxTs = ev.agg(max(col("ts_us"))).head.getLong(0)
     // sentinel drain (the cdc_stream_interval_join_outer pattern): two
     // trailing flushes push the watermark past every real purchase's
@@ -462,8 +392,7 @@ class CdcStreamSpec extends SparkSpec {
     // that watermark so timeout emission fires
     for (i <- 0 until 2) {
       val ts = maxTs + (4L + 4 * i) * 3600000000L
-      val staging = Files.createTempDirectory(s"sentinel-$i")
-      ev.limit(1)
+      FlushFeed.append(ev.limit(1)
         .crossJoin(spark.range(2).select(col("id").as("__i")))
         .withColumn("event_id", lit(-(2L * (100 + i) + 1)) - col("__i"))
         .withColumn("user_id", lit(-1L))
@@ -471,36 +400,14 @@ class CdcStreamSpec extends SparkSpec {
         .withColumn("ts", timestamp_micros(lit(ts)))
         .withColumn("event_type",
           when(col("__i") === 0, "purchase").otherwise("click"))
-        .drop("__i")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      val part = Files.list(staging).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.move(part, Paths.get(inDir, f"flush-${100 + i}%03d.parquet"),
-        StandardCopyOption.ATOMIC_MOVE)
-      Thread.sleep(5)
+        .drop("__i"), inDir, 100 + i)
     }
     val joined = CdcStream.intervalJoinTagged(
       CdcStream.fromParquetDir(spark, inDir, ev.schema),
       delay = "1 hour", window = "1 hour", emitUnmatched = true)
-    val q = joined.toDF().writeStream
-      .format("memory").queryName("ssjo_uni").outputMode("append")
-      .option("checkpointLocation", tmp("ckpt_ssjo_uni"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val q = drainToTable(joined, "ssjo_uni")
     val streamed = spark.table("ssjo_uni").where(col("user_id") >= 0)
-    val bp = ev.where(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts_us").as("purchase_ts_us"),
-        col("event_id").as("purchase_seq"))
-    val bc = ev.where(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts_us").as("click_ts_us"),
-        col("event_id").as("click_seq"))
-    val batch = bp.join(bc, col("user_id") === col("c_user") &&
-        col("click_ts_us") <= col("purchase_ts_us") &&
-        col("click_ts_us") >= col("purchase_ts_us") - 3600L * 1000000,
-        "left_outer")
-      .select(col("user_id"), col("purchase_ts_us"), col("purchase_seq"),
-        col("click_ts_us"), col("click_seq"))
+    val batch = batchAttribution(ev, "left_outer")
     assert(streamed.count() === batch.count())
     assert(streamed.exceptAll(batch).count() === 0)
     assert(batch.exceptAll(streamed).count() === 0)
@@ -510,6 +417,75 @@ class CdcStreamSpec extends SparkSpec {
     val lastStateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
     assert(lastStateRows <= 1,
       s"state held $lastStateRows keys after the drain: eviction regressed")
+  }
+
+  test("lagging clicks: the dual-watermark attribution joins equal the " +
+    "batch interval join, and the one-watermark tagged join drops pairs") {
+    // Two streams where clicks arrive one flush after the purchases they
+    // attribute to: purchases flush 0; then clicks flush k-1 with
+    // purchases flush k; then the last clicks. 15k generated events at
+    // 1 event/s in 3 slices, so a slice spans more than the 1 h delay
+    // and most of a lagging click slice is older than the tagged join's
+    // single watermark (max ts of both types − delay) when it arrives.
+    val ev = spark.read.format("graft.sources.GenSource")
+      .option("rows", 15000).option("users", 997).load()
+      .select(col("user_id"), col("ts_us"),
+        timestamp_micros(col("ts_us")).as("ts"), col("event_id"),
+        col("event_type"))
+    val n = 3
+    def feedOf(kind: String) = FlushFeed.stage(
+      ev.where(col("event_type") === kind), tmp(s"lag-$kind"), n, tsOrder)
+    val (purchases, clicks) = (feedOf("purchase"), feedOf("click"))
+    def stream(feed: FlushFeed) =
+      CdcStream.fromParquetDir(spark, feed.dir, ev.schema)
+    val joins = Seq(
+      "lag_inner" -> CdcStream.attributionJoin(stream(purchases),
+        stream(clicks), delay = "1 hour", window = "1 hour"),
+      "lag_outer" -> CdcStream.attributionJoinOuter(stream(purchases),
+        stream(clicks), delay = "1 hour", window = "1 hour"),
+      "lag_tagged" -> CdcStream.intervalJoinTagged(
+        stream(purchases).union(stream(clicks)), delay = "1 hour",
+        window = "1 hour", emitUnmatched = false).toDF())
+    val qs = joins.map { case (name, df) =>
+      df.writeStream.format("memory").queryName(name).outputMode("append")
+        .option("checkpointLocation", tmp(s"ckpt_$name"))
+        .start()
+    }
+    def drained(): Unit = qs.foreach(_.processAllAvailable())
+    val maxTs = ev.agg(max(col("ts_us"))).head.getLong(0)
+    def sentinel(kind: String, i: Int) = ev.limit(1)
+      .withColumn("ts_us", lit(maxTs + (4L + 4 * i) * 3600000000L))
+      .withColumn("ts", timestamp_micros(col("ts_us")))
+      .withColumn("user_id", lit(-1L)).withColumn("event_id", lit(-1L - i))
+      .withColumn("event_type", lit(kind))
+    try {
+      purchases.release(0); drained()
+      for (k <- 1 until n) { clicks.release(k - 1); purchases.release(k); drained() }
+      clicks.release(n - 1); drained()
+      // two sentinel rounds move both watermarks past every real
+      // purchase's horizon, then run a batch under them (outer emission)
+      for (i <- 0 until 2) {
+        FlushFeed.append(sentinel("purchase", i), purchases.dir, 100 + i)
+        FlushFeed.append(sentinel("click", i), clicks.dir, 100 + i)
+        drained()
+      }
+    } finally qs.foreach(_.stop())
+    def out(name: String) = spark.table(name).where(col("user_id") >= 0)
+    val inner = batchAttribution(ev)
+    val outer = batchAttribution(ev, "left_outer")
+    assert(inner.count() > 1000, "generator parameters produced few matches")
+    for ((name, batch) <- Seq("lag_inner" -> inner, "lag_outer" -> outer)) {
+      assert(out(name).count() === batch.count(), name)
+      assert(out(name).exceptAll(batch).count() === 0, name)
+      assert(batch.exceptAll(out(name)).count() === 0, name)
+    }
+    // intervalJoinTagged diverges on this feed: every pair it emits is a
+    // batch pair, but the lagging clicks fall below its one watermark
+    // and are dropped as late, with no error
+    val tagged = out("lag_tagged")
+    assert(tagged.exceptAll(inner).count() === 0)
+    assert(tagged.count() < inner.count(),
+      s"intervalJoinTagged matched all ${inner.count()} batch pairs")
   }
 
   test("stream-stream interval join: state stays O(delay+window), never " +

@@ -2,9 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
+import graft.queries.Cdc.FlushFeed
 import graft.streaming.{CdcStream, CrawlIngest}
 
 class CrawlIngestSpec extends SparkSpec {
@@ -25,12 +25,7 @@ class CrawlIngestSpec extends SparkSpec {
       // flush 2: all dups
       Seq(doc(20, "alpha beta"), doc(21, "epsilon zeta")))
     flushes.zipWithIndex.foreach { case (docs, i) =>
-      docs.toDF("doc_id", "text").coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$inDir/staging-$i")
-      val part = new java.io.File(s"$inDir/staging-$i").listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(inDir, f"flush-$i%03d.parquet"))
+      FlushFeed.append(docs.toDF("doc_id", "text"), inDir, i)
     }
 
     val (corpusDir, ledgerDir) = (tmp("crawl-corpus"), tmp("crawl-ledger"))
@@ -71,12 +66,7 @@ class CrawlIngestSpec extends SparkSpec {
       // flush 2: paraphrase of the novel doc
       Seq(doc(20, novel.replace("other105", "x"))))
     flushes.zipWithIndex.foreach { case (docs, i) =>
-      docs.toDF("doc_id", "text").coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$inDir/staging-$i")
-      val part = new java.io.File(s"$inDir/staging-$i").listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(inDir, f"flush-$i%03d.parquet"))
+      FlushFeed.append(docs.toDF("doc_id", "text"), inDir, i)
     }
     val (corpusDir, bandsDir) = (tmp("ncrawl-corpus"), tmp("ncrawl-bands"))
     val schema = Seq(doc(0, "x")).toDF("doc_id", "text").schema

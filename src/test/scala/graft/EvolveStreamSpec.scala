@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -79,18 +79,15 @@ class EvolveStreamSpec extends SparkSpec {
     // arriving after a restart must still conform under the evolved
     // schema because the sink's _ddl_history ledger IS the state.
     val feed = feedWith(evolveDdlJson)
-    val inDir = graft.queries.Cdc.streamSliceDir(spark, feed, sfDir,
-      slices = 3, orderCols = Seq(col("commit_ts_us"), col("seq")),
-      tag = "spec_evolve_restart")
-    // hold back the LAST flush (strictly after the DDL)
-    val held = Paths.get(tmp("evolve_held"), "flush-002.parquet")
-    Files.move(Paths.get(inDir, "flush-002.parquet"), held,
-      StandardCopyOption.ATOMIC_MOVE)
+    val staged = graft.queries.Cdc.FlushFeed.stage(feed, tmp("evolve_r_in"),
+      slices = 3, Seq(col("commit_ts_us"), col("seq")))
+    val inDir = staged.dir
     val sink = tmp("evolve_r_sink"); val dlq = tmp("evolve_r_dlq")
     val ckpt = tmp("evolve_r_ckpt")
+    // hold back the LAST flush (strictly after the DDL)
+    staged.release(0); staged.release(1)
     drain(inDir, feed.schema, sink, dlq, ckpt)   // run 1: flushes 0-1
-    Files.move(held, Paths.get(inDir, "flush-002.parquet"),
-      StandardCopyOption.ATOMIC_MOVE)
+    staged.release(2)
     drain(inDir, feed.schema, sink, dlq, ckpt)   // run 2: fresh query
     val streamed = snapshotOf(CdcStream.readEvolved(spark, sink))
     val batch = snapshotOf(SchemaEvolution.evolve(changelog, Seq(

@@ -36,12 +36,7 @@ class GraftSourceSpec extends SparkSpec {
     GraftSink.Files(dir, "parquet").write(in.limit(200))
     val stream = GraftSource.changelogStream(spark, dir, in.schema)
     assert(stream.isStreaming)
-    val q = stream.writeStream.format("memory").queryName("src_stream_t")
-      .option("checkpointLocation",
-        Files.createTempDirectory("ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainToTable(stream, "src_stream_t")
     assert(spark.table("src_stream_t").count() === 200)
   }
 }

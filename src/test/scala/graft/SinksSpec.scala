@@ -39,6 +39,20 @@ class SinksSpec extends SparkSpec {
     assert(spark.table("mem_sink_test").count() === 100)
   }
 
+  test("GraftSink.Memory: a second write to one view uncaches the first " +
+    "frame, leaving one cached plan") {
+    import org.apache.spark.storage.StorageLevel
+    val first = changelog.limit(100)
+    val second = changelog.limit(50)
+    GraftSink.Memory("mem_sink_rewrite").write(first)
+    assert(first.storageLevel !== StorageLevel.NONE)
+    GraftSink.Memory("mem_sink_rewrite").write(second)
+    assert(first.storageLevel === StorageLevel.NONE,
+      "the replaced frame is still pinned in the cache")
+    assert(second.storageLevel !== StorageLevel.NONE)
+    assert(spark.table("mem_sink_rewrite").count() === 50)
+  }
+
   test("Batched sink writes one partition per commit-time window") {
     val path = tmp("sink-batched")
     val hourUs = 3600L * 1000000
@@ -1235,12 +1249,8 @@ class SinksSpec extends SparkSpec {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("tag",
         org.apache.spark.sql.types.StringType)))
-    val q = graft.sources.TableCdfSource
-      .stream(spark, path, schema, maxVersionsPerTrigger = 1)
-      .writeStream.format("memory").queryName("cdf_src_test")
-      .option("checkpointLocation", tmp("ckpt-cdf"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    drainToTable(graft.sources.TableCdfSource
+      .stream(spark, path, schema, maxVersionsPerTrigger = 1), "cdf_src_test")
     val got = spark.table("cdf_src_test")
       .select("key", "_change_type", "_commit_version")
       .as[(Long, String, Long)].collect().sorted
@@ -1268,7 +1278,6 @@ class SinksSpec extends SparkSpec {
     "NEVER planned (census) — and DV-delete versions as fresh-position " +
     "deletes; preimages on demand") {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val path = tmp("vtable-streamcdf-merge")
     val vt = GraftSink.VersionedTable(path)
     def batch(rows: (Long, Long, String, String)*): DataFrame =
@@ -1326,13 +1335,9 @@ class SinksSpec extends SparkSpec {
     assert(dps.size === 1 &&
       dps.head.freshSlices.head.contains(s"__dvb=${bucketOf(7L)}"))
     // ---- the stream end-to-end, preimages on
-    val q = graft.sources.TableCdfSource
+    drainToTable(graft.sources.TableCdfSource
       .stream(spark, path, dataSchema, maxVersionsPerTrigger = 1,
-        keyCols = Seq("key"), preimages = true)
-      .writeStream.format("memory").queryName("cdf_merge_src_test")
-      .option("checkpointLocation", tmp("ckpt-cdfm"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+        keyCols = Seq("key"), preimages = true), "cdf_merge_src_test")
     val got = spark.table("cdf_merge_src_test")
       .as[(Long, Long, String, String, Long)].collect().toSet
     val v1Rows = (0L until 64L)
@@ -1426,7 +1431,6 @@ class SinksSpec extends SparkSpec {
     "one commit; time travel intact; CDF and the stream serve " +
     "pre/post-image legs; types preserved; no-match is a no-op") {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val path = tmp("vtable-update")
     val vt = GraftSink.VersionedTable(path)
     vt.commit((0L until 100L).map(k => (k, s"p$k", k * 10L))
@@ -1473,13 +1477,9 @@ class SinksSpec extends SparkSpec {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("qty",
         org.apache.spark.sql.types.LongType)))
-    val q = graft.sources.TableCdfSource
+    drainToTable(graft.sources.TableCdfSource
       .stream(spark, path, dataSchema, preimages = true,
-        startingVersion = 2L)
-      .writeStream.format("memory").queryName("cdf_upd_src_test")
-      .option("checkpointLocation", tmp("ckpt-cdfupd"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+        startingVersion = 2L), "cdf_upd_src_test")
     val got = spark.table("cdf_upd_src_test")
       .groupBy("_commit_version", "_change_type").count()
       .as[(Long, String, Long)].collect().toSet
@@ -1882,7 +1882,6 @@ class SinksSpec extends SparkSpec {
     "key hash — partitions scale with rows/maxChunkRows (bounded " +
     "reader state) and the chunked drain equals the batch diff") {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val path = tmp("vtable-cdf-chunks")
     val vt = GraftSink.VersionedTable(path)
     def batch(tag: String) = (0L until 400L)
@@ -1901,13 +1900,9 @@ class SinksSpec extends SparkSpec {
     // ~100 rows/bucket/side → ~4 chunks per bucket
     assert(fine >= 12 && fine <= 32, s"fine=$fine")
     val qn = "cdf_chunk_sink"
-    val q = graft.sources.TableCdfSource
+    drainToTable(graft.sources.TableCdfSource
       .stream(spark, path, vt.read(spark).schema,
-        keyCols = Seq("key"), maxChunkRows = 25L)
-      .writeStream.format("memory").queryName(qn)
-      .option("checkpointLocation", tmp("ckpt-chunks"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+        keyCols = Seq("key"), maxChunkRows = 25L), qn)
     val oracle = vt.changes(spark, 1L, 2L, Seq("key"))
     val streamed = spark.table(qn)
       .where(col("_commit_version") === 2L)
@@ -1919,7 +1914,6 @@ class SinksSpec extends SparkSpec {
     "chunked whole-version diff — parallel and memory-bounded, never " +
     "one giant partition") {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val path = tmp("vtable-cdf-unbucketed")
     val vt = GraftSink.VersionedTable(path)
     vt.commit((0L until 300L).map(k => (k, k, s"a$k"))
@@ -1934,13 +1928,9 @@ class SinksSpec extends SparkSpec {
         graft.sources.CdfOffset(2))
     assert(parts.length >= 6, s"parts=${parts.length}") // ceil(300/50)
     val qn = "cdf_unbucketed_sink"
-    val q = graft.sources.TableCdfSource
+    drainToTable(graft.sources.TableCdfSource
       .stream(spark, path, vt.read(spark).schema,
-        keyCols = Seq("key"), maxChunkRows = 50L)
-      .writeStream.format("memory").queryName(qn)
-      .option("checkpointLocation", tmp("ckpt-unb"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+        keyCols = Seq("key"), maxChunkRows = 50L), qn)
     val oracle = vt.changes(spark, 1L, 2L, Seq("key"))
     val streamed = spark.table(qn)
       .where(col("_commit_version") === 2L)
@@ -1951,7 +1941,6 @@ class SinksSpec extends SparkSpec {
   test("TableCdfSource serves RESTORE versions as the keyed diff, " +
     "planning ONLY the buckets the rollback actually moved") {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val path = tmp("vtable-cdf-restore")
     val vt = GraftSink.VersionedTable(path)
     vt.mergeBucketed((0L until 100L).map(k => (k, k, "I", s"v$k"))
@@ -1967,13 +1956,9 @@ class SinksSpec extends SparkSpec {
     // keys 0..9 (≤ 10 of 16) carry a vector diff
     assert(parts.length < 16, s"parts=${parts.length}")
     val qn = "cdf_restore_sink"
-    val q = graft.sources.TableCdfSource
+    drainToTable(graft.sources.TableCdfSource
       .stream(spark, path, vt.read(spark).schema,
-        keyCols = Seq("key"), startingVersion = 3L)
-      .writeStream.format("memory").queryName(qn)
-      .option("checkpointLocation", tmp("ckpt-restore"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+        keyCols = Seq("key"), startingVersion = 3L), qn)
     val oracle = vt.changes(spark, 2L, 3L, Seq("key"))
     val streamed = spark.table(qn)
       .select(oracle.columns.map(col).toSeq: _*)
@@ -1986,7 +1971,6 @@ class SinksSpec extends SparkSpec {
   test("TableCdfSource serves OVERWRITE versions as the keyed diff " +
     "(batch changes() parity) — carried-identical rows emit nothing") {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val path = tmp("vtable-cdf-overwrite")
     val vt = GraftSink.VersionedTable(path)
     vt.commit((0L until 50L).map(k => (k, s"v$k"))
@@ -1995,13 +1979,9 @@ class SinksSpec extends SparkSpec {
       .map(k => (k, if (k == 7L) "CHANGED" else s"v$k"))
       .toDF("key", "tag"), overwrite = true) // v2
     val qn = "cdf_overwrite_sink"
-    val q = graft.sources.TableCdfSource
+    drainToTable(graft.sources.TableCdfSource
       .stream(spark, path, vt.read(spark).schema,
-        keyCols = Seq("key"), startingVersion = 2L)
-      .writeStream.format("memory").queryName(qn)
-      .option("checkpointLocation", tmp("ckpt-ovw"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+        keyCols = Seq("key"), startingVersion = 2L), qn)
     val oracle = vt.changes(spark, 1L, 2L, Seq("key"))
     val streamed = spark.table(qn)
       .select(oracle.columns.map(col).toSeq: _*)
@@ -2125,7 +2105,6 @@ class SinksSpec extends SparkSpec {
   test("TableCdfSource drained from version 1 equals the batch " +
     "changes() row for row across every version kind") {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val path = tmp("vtable-cdf-every-kind")
     val vt = GraftSink.VersionedTable(path)
     def upserts(rows: (Long, Long, String, String)*): DataFrame =
@@ -2147,12 +2126,8 @@ class SinksSpec extends SparkSpec {
       Seq("append", "merge", "delete", "update", "constraint", "optimize",
         "restore", "overwrite"))
     val qn = "cdf_every_kind_sink"
-    val q = graft.sources.TableCdfSource
-      .stream(spark, path, vt.read(spark).schema, keyCols = Seq("key"))
-      .writeStream.format("memory").queryName(qn)
-      .option("checkpointLocation", tmp("ckpt-every-kind"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    drainToTable(graft.sources.TableCdfSource
+      .stream(spark, path, vt.read(spark).schema, keyCols = Seq("key")), qn)
     val oracle = vt.changes(spark, 0L, v8, Seq("key"))
     val streamed = spark.table(qn).select(oracle.columns.map(col).toSeq: _*)
     assertSameRows(streamed, oracle)

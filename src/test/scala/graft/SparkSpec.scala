@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared test harness: one session per JVM (getOrCreate), small
@@ -10,4 +11,17 @@ trait SparkSpec extends AnyFunSuite {
 
   /** Smallest driver-generated scale factor — fast enough for unit tests. */
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Drain `stream` AvailableNow into the memory table `name` on a fresh
+    * checkpoint; returns the finished query. */
+  def drainToTable(stream: Dataset[_], name: String,
+                   mode: String = "append"): StreamingQuery = {
+    val q = stream.writeStream.format("memory").queryName(name)
+      .outputMode(mode)
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("ckpt").toString)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
 }

@@ -7,10 +7,11 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source guard over src/main/scala: sessions are built in one place,
-  * AvailableNow drains are started in a few named helpers, and the
-  * VersionedTable log format is known to one module, so the builder
-  * chain, the drain tail and the manifest parsing are not copied back
-  * into call sites. */
+  * AvailableNow drains are started in a few named helpers, the
+  * VersionedTable log format is known to one module, and flush-feed
+  * files have one writer, so the builder chain, the drain tail, the
+  * manifest parsing and the flush protocol are not copied back into
+  * call sites. */
 class StructureSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -55,6 +56,17 @@ class StructureSpec extends AnyFunSuite {
     val checkpoints = sites("""createTempDirectory\([^)]*ckpt""")
     assert(triggers.nonEmpty && checkpoints.nonEmpty)
     assert((triggers ++ checkpoints).filterNot(allowed).isEmpty)
+  }
+
+  test("flush files are written only by the flush-feed writer") {
+    val feed = Set("stage", "append", "land").map("graft/queries/Cdc.scala" -> _)
+    val mtimes = sites("""setLastModifiedTime\(""")
+    val names = sites("""flush-\$?\{?\w*\}?%03d""")
+    val tempDirs = sites("""createTempDirectory\(""")
+    assert(mtimes.nonEmpty && names.nonEmpty && tempDirs.nonEmpty)
+    assert((mtimes ++ names).filterNot(feed).isEmpty)
+    assert(tempDirs.filterNot(feed + ("graft/queries/Cdc.scala" -> "drainOnce"))
+      .isEmpty)
   }
 
   test("the table-log format is spelled only in TableLog") {

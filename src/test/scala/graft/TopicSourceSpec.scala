@@ -312,12 +312,7 @@ class TopicSourceSpec extends SparkSpec {
     val widened = StructType(TopicSource.changelogTopicSchema.fields :+
       StructField("region", StringType))
     val qn = "topic_evo_tbl"
-    val q = TopicSource.stream(spark, topic, widened)
-      .writeStream.format("memory").queryName(qn)
-      .option("checkpointLocation", tmp("topic_evo_ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainToTable(TopicSource.stream(spark, topic, widened), qn)
     val got = spark.table(qn)
     assert(got.count() === changelog.count())
     assert(got.where(col("region").isNotNull).count() === 0L)
