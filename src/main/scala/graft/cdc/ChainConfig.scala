@@ -107,7 +107,12 @@ object ChainConfig {
       case "sql" => TransformPlugin(s"sql[$arg]", df => {
         val view = s"__chain_input_${sqlViewSeq.incrementAndGet()}"
         df.createOrReplaceTempView(view)
-        df.sparkSession.sql(arg.replace("__input__", view))
+        // the query is analyzed here, so its view can go at once; left
+        // in place, one view per call piles up in the caller's session
+        // (drained micro-batches run there). The catalog drop leaves a
+        // cached `df` cached.
+        try df.sparkSession.sql(arg.replace("__input__", view))
+        finally df.sparkSession.sessionState.catalog.dropTempView(view)
       })
       case "mask" =>
         val specs = arg.split(',').map(_.trim).map { s =>

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -790,10 +790,15 @@ object GraftSink {
       * aggregation per check). */
     private def requireChecks(rows: DataFrame, checks: Map[String, String],
                               what: String): Unit =
-      checks.foreach { case (n, sqlTxt) =>
-        require(rows.where(!expr(sqlTxt)).limit(1).count() == 0,
-          s"$path: CHECK constraint '$n' ($sqlTxt) violated by $what")
+      checks.foreach { check =>
+        requireCheck(rows.where(!expr(check._2)).limit(1).count() == 0,
+          check, what)
       }
+
+    private def requireCheck(holds: Boolean, check: (String, String),
+                             what: String): Unit =
+      require(holds,
+        s"$path: CHECK constraint '${check._1}' (${check._2}) violated by $what")
 
     /** All-nullable view of a schema (recursive) — stamped schemas are
       * applied to MIXED file sets where older files null-fill added
@@ -1743,102 +1748,114 @@ object GraftSink {
       val w = Window.partitionBy(keyCols.map(col): _*)
         .orderBy(orderCols.map(c => col(c).desc): _*)
       // Materialize the batch's latest-per-key ONCE: it is consumed by
-      // the touched-bucket census, every CHECK-constraint probe, the
-      // anti-join's build side AND the union leg — without this each
-      // consumer re-scanned the batch and re-ran the window (~4 full
-      // recomputes per commit; guide §2.4). Bounded by the merge
-      // batch (micro-batch-sized at deployment), never by the table.
-      val latest = batch
+      // the anti-join's build side AND the union leg — without this each
+      // consumer re-scanned the batch and re-ran the window (guide
+      // §2.4). The same job observes the touched-bucket census
+      // (≤ numBuckets values) and one violation count per standing
+      // CHECK over the upserts, so neither needs a job of its own.
+      // Bounded by the merge batch (micro-batch-sized at deployment),
+      // never by the table.
+      val checks = cur.checks.toSeq
+      val upsert = col(opCol) =!= "D"
+      val observed = batch
         .withColumn("__rn", row_number().over(w))
         .where(col("__rn") === 1).drop("__rn")
-        .localCheckpoint()
-      val touched = latest
-        .select(bucketOf(keyCols, numBuckets).as("__b")).distinct()
-        .collect().map(_.getLong(0)).toSet // ≤ numBuckets rows
-      def inTouched(line: String): Boolean =
-        TableLog.pathBucket(TableLog.path(line)).forall(touched.contains)
-      val (touchedLines, carried) = cur.lines.partition(inTouched)
-      val touchedFiles = touchedLines.map(TableLog.path)
-      val outSchema = org.apache.spark.sql.types.StructType(
-        latest.drop(opCol).schema.fields)
-      schemaGate(log, cur, outSchema)
-      requireChecks(latest.where(col(opCol) =!= "D").drop(opCol),
-        cur.checks, "this merge batch — nothing was written")
-      val current = readFiles(batch.sparkSession, touchedFiles,
-        Some(asNullable(outSchema)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]),
-        cur.dv, cur.rename)
-      val merged = current
-        .join(latest.select(keyCols.map(col): _*), keyCols, "left_anti")
-        .unionByName(latest.where(col(opCol) =!= "D").drop(opCol))
-        .withColumn("__bucket", bucketOf(keyCols, numBuckets))
-      // write the rewrite hive-partitioned by bucket, then publish
-      // carried ∪ new manifests with optimistic disjoint-merge rebase
-      var newV = cur.version + 1
-      val dataRel = TableLog.newDataRel(newV)
-      // Cluster the rewrite by bucket before writing: the anti-join
-      // leaves `merged` hash-partitioned on keyCols (Spark's Murmur3),
-      // which is UNCORRELATED with bucketOf's xxhash64 — so a
-      // partitionBy write from that layout emits up to tasks×buckets
-      // splinter files per commit (~512 at 32 shuffle partitions × 16
-      // buckets; guide §6 — small files hurt twice: manifest/stat
-      // lines AND per-file open cost on every later read). One
-      // explicit exchange on __bucket lands exactly one file per
-      // touched bucket — the bucketed-table layout the manifest
-      // pruning is designed around (Delta's optimized-write shape).
-      // Sub-split OVERSIZED buckets (VERDICT r18 ask #8): one file per
-      // touched bucket is the layout contract, but a hot bucket's
-      // single rewrite file is unbounded — maxRecordsPerFile rolls a
-      // bucket's file at `maxRowsPerBucketFile` rows (default 4M ≈
-      // the guide-§6 128 MB–1 GB file band at CDC row widths), so a
-      // skewed key caps FILE size while small merges still land ≤1
-      // file per bucket (SinksSpec pins both). Manifest pruning is
-      // per-file by path bucket, so multi-file buckets carry/rewrite
-      // exactly like single-file ones.
-      toPhysical(merged.repartition(numBuckets, col("__bucket")), cur.rename)
-        .write.mode(SaveMode.Overwrite)
-        .option("maxRecordsPerFile", maxRowsPerBucketFile)
-        .partitionBy("__bucket").parquet(s"$path/$dataRel")
-      val newFiles = log.fileLines(dataRel)
-      // carried files keep their deleted positions — their buckets'
-      // DV slices carry verbatim; the rewritten (touched) buckets'
-      // rows were DV-filtered above, so THEIR slices are DROPPED from
-      // the new version (a merge physically ages the vector out,
-      // bucket by bucket — the unbucketed −1 slice too: unbucketed
-      // files always join the rewrite)
-      val dvCarry = cur.dv.filterNot { s =>
-        val b = TableLog.sliceBucket(s); b == -1L || touched.contains(b)
-      }
-      val header = TableLog.header(meta ++ cur.carry("rename", "checks") +
-        ("kind" -> "merge") +
-        ("buckets" -> numBuckets.toString) +
-        ("touched" -> touched.toSeq.sorted.mkString(",")) +
-        ("schema" -> outSchema.json) ++
-        (if (dvCarry.nonEmpty) Some("dv" -> dvCarry.mkString(",")) else None))
-      beforePublish()
-      var carriedNow = carried
-      var attempts = 0
-      while (!log.publish(newV, header ++ carriedNow ++ newFiles)) {
-        attempts += 1
-        // inspect the winner that took newV: rebase only when its
-        // merge provably did not touch our buckets (serial-equivalent)
-        val winner = log.read(newV)
-        val rebasable = attempts <= 8 &&
-          winner.kind.contains("merge") &&
-          winner.buckets.contains(numBuckets) &&
-          winner.touched.exists(_.intersect(touched).isEmpty) &&
-          touchedFiles.forall(rel => TableLog.pathBucket(rel).isDefined)
-        if (!rebasable)
-          throw new IllegalStateException(s"$path: concurrent commit took " +
-            s"v$newV while this merge was writing, and its changes are " +
-            "not a disjoint-bucket merge (or rebase attempts exhausted) " +
-            "— re-run the merge against the new current version (the " +
-            "carried file list is stale)")
-        carriedNow = winner.lines.filterNot(l =>
-          TableLog.pathBucket(TableLog.path(l)).exists(touched.contains))
-        newV += 1
-      }
-      newV
+        .observe("__merge_census",
+          collect_set(bucketOf(keyCols, numBuckets)).as("touched"),
+          checks.indices.map(i =>
+            count(when(upsert && !expr(checks(i)._2), 1)).as(s"check$i")): _*)
+      val latest = observed.localCheckpoint()
+      try {
+        // set by the checkpoint job itself, before localCheckpoint returns
+        val census = observed.queryExecution.observedMetrics("__merge_census")
+        val touched = census.getSeq[Long](0).toSet
+        def inTouched(line: String): Boolean =
+          TableLog.pathBucket(TableLog.path(line)).forall(touched.contains)
+        val (touchedLines, carried) = cur.lines.partition(inTouched)
+        val touchedFiles = touchedLines.map(TableLog.path)
+        val outSchema = org.apache.spark.sql.types.StructType(
+          latest.drop(opCol).schema.fields)
+        schemaGate(log, cur, outSchema)
+        checks.indices.foreach { i =>
+          requireCheck(census.getLong(i + 1) == 0L, checks(i),
+            "this merge batch — nothing was written")
+        }
+        val current = readFiles(batch.sparkSession, touchedFiles,
+          Some(asNullable(outSchema)
+            .asInstanceOf[org.apache.spark.sql.types.StructType]),
+          cur.dv, cur.rename)
+        val merged = current
+          .join(latest.select(keyCols.map(col): _*), keyCols, "left_anti")
+          .unionByName(latest.where(upsert).drop(opCol))
+          .withColumn("__bucket", bucketOf(keyCols, numBuckets))
+        // write the rewrite hive-partitioned by bucket, then publish
+        // carried ∪ new manifests with optimistic disjoint-merge rebase
+        var newV = cur.version + 1
+        val dataRel = TableLog.newDataRel(newV)
+        // Cluster the rewrite by bucket before writing: the anti-join
+        // leaves `merged` hash-partitioned on keyCols (Spark's Murmur3),
+        // which is UNCORRELATED with bucketOf's xxhash64 — so a
+        // partitionBy write from that layout emits up to tasks×buckets
+        // splinter files per commit (~512 at 32 shuffle partitions × 16
+        // buckets; guide §6 — small files hurt twice: manifest/stat
+        // lines AND per-file open cost on every later read). One
+        // explicit exchange on __bucket lands exactly one file per
+        // touched bucket — the bucketed-table layout the manifest
+        // pruning is designed around (Delta's optimized-write shape).
+        // Sub-split OVERSIZED buckets (VERDICT r18 ask #8): one file per
+        // touched bucket is the layout contract, but a hot bucket's
+        // single rewrite file is unbounded — maxRecordsPerFile rolls a
+        // bucket's file at `maxRowsPerBucketFile` rows (default 4M ≈
+        // the guide-§6 128 MB–1 GB file band at CDC row widths), so a
+        // skewed key caps FILE size while small merges still land ≤1
+        // file per bucket (SinksSpec pins both). Manifest pruning is
+        // per-file by path bucket, so multi-file buckets carry/rewrite
+        // exactly like single-file ones.
+        toPhysical(merged.repartition(numBuckets, col("__bucket")), cur.rename)
+          .write.mode(SaveMode.Overwrite)
+          .option("maxRecordsPerFile", maxRowsPerBucketFile)
+          .partitionBy("__bucket").parquet(s"$path/$dataRel")
+        val newFiles = log.fileLines(dataRel)
+        // carried files keep their deleted positions — their buckets'
+        // DV slices carry verbatim; the rewritten (touched) buckets'
+        // rows were DV-filtered above, so THEIR slices are DROPPED from
+        // the new version (a merge physically ages the vector out,
+        // bucket by bucket — the unbucketed −1 slice too: unbucketed
+        // files always join the rewrite)
+        val dvCarry = cur.dv.filterNot { s =>
+          val b = TableLog.sliceBucket(s); b == -1L || touched.contains(b)
+        }
+        val header = TableLog.header(meta ++ cur.carry("rename", "checks") +
+          ("kind" -> "merge") +
+          ("buckets" -> numBuckets.toString) +
+          ("touched" -> touched.toSeq.sorted.mkString(",")) +
+          ("schema" -> outSchema.json) ++
+          (if (dvCarry.nonEmpty) Some("dv" -> dvCarry.mkString(",")) else None))
+        beforePublish()
+        var carriedNow = carried
+        var attempts = 0
+        while (!log.publish(newV, header ++ carriedNow ++ newFiles)) {
+          attempts += 1
+          // inspect the winner that took newV: rebase only when its
+          // merge provably did not touch our buckets (serial-equivalent)
+          val winner = log.read(newV)
+          val rebasable = attempts <= 8 &&
+            winner.kind.contains("merge") &&
+            winner.buckets.contains(numBuckets) &&
+            winner.touched.exists(_.intersect(touched).isEmpty) &&
+            touchedFiles.forall(rel => TableLog.pathBucket(rel).isDefined)
+          if (!rebasable)
+            throw new IllegalStateException(s"$path: concurrent commit took " +
+              s"v$newV while this merge was writing, and its changes are " +
+              "not a disjoint-bucket merge (or rebase attempts exhausted) " +
+              "— re-run the merge against the new current version (the " +
+              "carried file list is stale)")
+          carriedNow = winner.lines.filterNot(l =>
+            TableLog.pathBucket(TableLog.path(l)).exists(touched.contains))
+          newV += 1
+        }
+        newV
+      } finally GraftSqlBridge.releaseCheckpoint(latest)
     }
 
     /** EXACTLY-ONCE bucketed merge: [[mergeBucketed]] with the

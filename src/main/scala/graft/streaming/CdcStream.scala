@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -37,14 +37,29 @@ object CdcStream {
 
   /** The one AvailableNow `foreachBatch` tail behind every `deliver*`
     * here and [[CrawlIngest]]: run `fn` over each micro-batch of `stream`
-    * until no input remains, exactly-once per `checkpointDir`. */
+    * until no input remains, exactly-once per `checkpointDir`.
+    *
+    * Each micro-batch reaches `fn` rebound to the session that owns
+    * `stream`, not to the clone Spark runs the query in. Spark caches
+    * generated code per (class loader, source), and every streaming
+    * query runs in a fresh session clone whose jobs get a fresh executor
+    * class loader, so each new query recompiled the merge's byte-
+    * identical classes. In the owner's session `fn`'s jobs share one
+    * class loader and each class compiles once per JVM. Two effects are
+    * visible: `fn`'s jobs follow the owner's live conf (AQE stays on if
+    * the owner has it on; the clone forces it off), and temp views a
+    * sink registers land in the owner's session. */
   private[streaming] def startDrain(stream: DataFrame, checkpointDir: String)
-                                   (fn: (Dataset[Row], Long) => Unit): StreamingQuery =
+                                   (fn: (Dataset[Row], Long) => Unit): StreamingQuery = {
+    val owner = stream.sparkSession
+    val inOwner: (Dataset[Row], Long) => Unit =
+      (batch, id) => fn(GraftSqlBridge.ofRows(owner, batch), id)
     stream.writeStream
-      .foreachBatch(fn)
+      .foreachBatch(inOwner)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
+  }
 
   /** Run chain + sink over every micro-batch until no input remains
     * (Trigger.AvailableNow — processes all available data then stops,

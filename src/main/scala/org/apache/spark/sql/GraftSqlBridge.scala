@@ -20,6 +20,24 @@ object GraftSqlBridge {
   def catalystExpression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** `ds`'s analyzed plan as a DataFrame of `session`: its actions
+    * plan, run and pick their conf in `session`, not in the session
+    * that built `ds`. Only a leaf over already-computed rows (the
+    * `LogicalRDD` a foreachBatch micro-batch is) moves safely this way;
+    * a plan that still reads a source would resolve it in `session`. */
+  def ofRows(session: SparkSession, ds: Dataset[_]): DataFrame =
+    classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],
+      ds.queryExecution.logical)
+
+  /** Drop the blocks behind a `localCheckpoint()`ed Dataset now; they
+    * otherwise stay until the JVM garbage-collects the Dataset. The
+    * Dataset must not be read again. */
+  def releaseCheckpoint(ds: Dataset[_]): Unit =
+    ds.queryExecution.logical match {
+      case r: execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
   /** Register a temp function on an EXISTING session (the extensions
     * path below only applies at session construction). */
   def registerFunction(spark: SparkSession, name: String,

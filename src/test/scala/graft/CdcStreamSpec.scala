@@ -64,6 +64,48 @@ class CdcStreamSpec extends SparkSpec {
     assert(batch.exceptAll(streamed).count() === 0)
   }
 
+  test("drained micro-batches run in the caller's session: plugins see " +
+    "it, and a Memory sink's view lands in it") {
+    val (inDir, ev) = slicedFeed(2)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    val chain = Changefeed(Seq(TransformPlugin("session-probe", df => {
+      seen.add(df.sparkSession); df
+    })))
+    val view = "drained_in_caller"
+    CdcStream.deliver(CdcStream.fromParquetDir(spark, inDir, ev.schema),
+      chain, GraftSink.Memory(view), tmp("ckpt")).awaitTermination()
+    try {
+      assert(spark.catalog.tableExists(view))
+      assert(spark.table(view).count() > 0)
+      assert(!seen.isEmpty)
+      seen.forEach(s => assert(s eq spark))
+    } finally {
+      if (spark.catalog.tableExists(view)) spark.catalog.uncacheTable(view)
+      spark.catalog.dropTempView(view)
+    }
+  }
+
+  test("successive merge drains reuse the generated code of earlier ones") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val ev = batchEvents
+    val feed = FlushFeed.stage(ev, tmp("reuse-in"), 3, tsOrder)
+    val table = GraftSink.VersionedTable(tmp("reuse-table"))
+    val ckpt = tmp("ckpt")
+    val compiled = (0 until 3).map { i =>
+      feed.release(i)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      CdcStream.deliverVersionedMerge(
+        CdcStream.fromParquetDir(spark, feed.dir, ev.schema),
+        Changefeed(Seq(TransformPlugin("to-changelog", Changelog.fromEvents))),
+        table, ckpt, keyCols = Seq("key"),
+        orderCols = Seq("commit_ts_us", "seq"), numBuckets = 8)
+        .awaitTermination()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    assert(table.currentVersion(spark) === 3L)
+    assert(compiled(2) === 0L, s"classes compiled per drain: $compiled")
+  }
+
   test("deliverWithDlq: a poison batch quarantines with a reason, healthy " +
     "batches deliver, the feed completes") {
     val (inDir, ev) = slicedFeed(3)

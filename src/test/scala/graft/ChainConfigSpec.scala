@@ -68,6 +68,9 @@ class ChainConfigSpec extends SparkSpec {
     assert(out.columns.toSeq === Seq("key", "value"))
     assert(out.exceptAll(reference).count() === 0)
     assert(reference.exceptAll(out).count() === 0)
+    // the stage's input view is gone once the stage is built
+    assert(!spark.catalog.listTables().collect()
+      .exists(_.name.startsWith("__chain_input_")))
   }
 
   test("transform: stage round-trips rows through an external python3 " +

@@ -1490,6 +1490,22 @@ class SinksSpec extends SparkSpec {
       (3L, "update_preimage", 10L), (3L, "update_postimage", 10L)))
   }
 
+  test("VersionedTable.mergeBucketed releases the batch it materialized, " +
+    "after a publish and after a refused CHECK") {
+    import spark.implicits._
+    val vt = GraftSink.VersionedTable(tmp("vtable-release"))
+    def batch(key: Long, qty: Long): DataFrame =
+      Seq((key, 1L, "I", qty)).toDF("key", "seq", "op", "qty")
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    vt.mergeBucketed(batch(1L, 5L), Seq("key"), Seq("seq"), numBuckets = 4)
+    assert(persisted === before)
+    vt.addConstraint(spark, "qty_pos", "qty > 0")
+    intercept[IllegalArgumentException](vt.mergeBucketed(batch(2L, -1L),
+      Seq("key"), Seq("seq"), numBuckets = 4))
+    assert(persisted === before)
+  }
+
   test("VersionedTable CHECK constraints: ADD validates standing " +
     "content; appends, merges, and updates validate BEFORE writing " +
     "(no orphan files); constraints carry across delete/rename/restore " +

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source guard over src/main/scala: sessions are built in one place,
-  * AvailableNow drains are started in a few named helpers, the
+  * AvailableNow drains are started in a few named helpers, micro-batch
+  * callbacks go through the one helper that rebinds them, the
   * VersionedTable log format is known to one module, and flush-feed
   * files have one writer, so the builder chain, the drain tail, the
   * manifest parsing and the flush protocol are not copied back into
@@ -56,6 +57,14 @@ class StructureSpec extends AnyFunSuite {
     val checkpoints = sites("""createTempDirectory\([^)]*ckpt""")
     assert(triggers.nonEmpty && checkpoints.nonEmpty)
     assert((triggers ++ checkpoints).filterNot(allowed).isEmpty)
+  }
+
+  test("foreachBatch appears only in startDrain, which rebinds each " +
+    "micro-batch to the caller's session") {
+    val batches = sites("""\.foreachBatch\(""")
+    assert(batches.nonEmpty)
+    assert(batches.distinct ===
+      Seq("graft/streaming/CdcStream.scala" -> "startDrain"))
   }
 
   test("flush files are written only by the flush-feed writer") {
