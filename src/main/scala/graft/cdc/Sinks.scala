@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.cdc.TableLog.Conflict
+
 /** Sink targets for a changefeed (reference README.md:21-26 — the RFC's
   * core motivation: custom sink targets, warehouse batch-write
   * optimization, partition routing into the sink).
@@ -670,8 +672,9 @@ object GraftSink {
     *    retained manifest — A27's as-of, at table granularity.
     *  - '''atomic commits''': the manifest is written to a temp name
     *    and renamed without overwrite; if version v was taken by a
-    *    concurrent writer the rename fails and the commit RETRIES at
-    *    v+1 (optimistic concurrency, the Delta protocol). A crash
+    *    concurrent writer the rename fails and the write rebases,
+    *    re-derives or fails by its row of [[TableLog.commit]]'s conflict
+    *    table (optimistic concurrency, the Delta protocol). A crash
     *    before the rename leaves only invisible orphan data files.
     *
     * Scale shape: data moves through Spark's distributed parquet
@@ -712,11 +715,22 @@ object GraftSink {
     }
 
     /** [[commit]] on top of `prev`, the latest manifest as the caller
-      * resolved it. */
-    private def commitOn(log: TableLog, prev0: Manifest, df: DataFrame,
+      * resolved it. A lost race rebases over any winner; the schema,
+      * rename and CHECK guards re-run against it ([[TableLog.commit]]). */
+    private def commitOn(log: TableLog, prev: Manifest, df: DataFrame,
                          overwrite: Boolean, meta: Map[String, String],
-                         beforePublish: () => Unit): Long = {
-      var prev = prev0
+                         beforePublish: () => Unit): Long =
+      log.commit("commit", prev, beforePublish)(m => Right(
+        writeAttempt(log, m, df, overwrite, meta, (_, _) => Conflict.Rebase)))._1
+
+    /** Write `df` as the next version on top of `prev` (appended to it,
+      * or replacing it under `overwrite`): one data dir, and the lines of
+      * a manifest whose guards are checked against the version it lands
+      * on. */
+    private def writeAttempt(log: TableLog, prev: Manifest, df: DataFrame,
+                             overwrite: Boolean, meta: Map[String, String],
+                             onConflict: (Manifest, Manifest) => Conflict)
+        : TableLog.Attempt[Unit] = {
       // an append under a column-mapped table writes PHYSICAL names
       // (the stamped #schema stays logical); an overwrite materializes
       // the logical view and RESETS the map
@@ -725,7 +739,7 @@ object GraftSink {
       // gate BEFORE writing too: a refused schema (type clash,
       // suspected rename, held physical name) or a violated CHECK
       // must not leave orphan data files — the schema gate below
-      // re-checks per publish attempt
+      // re-checks on the version the commit lands on
       val allowDropAdd = meta.get("allowDropAdd").exists(_.toBoolean)
       val validatedChecks =
         if (overwrite) Map.empty[String, String] else prev.checks
@@ -740,14 +754,12 @@ object GraftSink {
       val newFiles = log.fileLines(dataRel)
       val kind = meta.getOrElse("kind",
         if (overwrite) "overwrite" else "append")
-      beforePublish() // test seam: deterministic concurrent-commit injection
-      var published = false
-      while (!published) {
+      TableLog.Attempt((), { (on: Manifest) =>
         // the gate re-checks per attempt: a lost race means a NEW
         // previous version, whose schema is the one that matters
-        schemaGate(log, prev, df.schema, carried = !overwrite,
+        schemaGate(log, on, df.schema, carried = !overwrite,
           allowDropAdd = allowDropAdd)
-        if (!overwrite) require(prev.rename == renameMap,
+        if (!overwrite) require(on.rename == renameMap,
           s"$path: a concurrent RENAME landed while this commit was " +
             "writing — its files were translated under the old column " +
             "map; re-run against the new current version")
@@ -758,7 +770,7 @@ object GraftSink {
         // (ADVICE r17); the loud failure tells the caller to re-run
         // (which re-validates) rather than silently re-checking here
         // and masking the race
-        if (!overwrite) require(prev.checks == validatedChecks,
+        if (!overwrite) require(on.checks == validatedChecks,
           s"$path: a concurrent ADD CONSTRAINT landed while this " +
             "commit was writing — its rows were never validated " +
             "against the new constraint; re-run against the new " +
@@ -768,14 +780,11 @@ object GraftSink {
         // an overwrite starts clean
         val carried =
           if (overwrite) Map.empty[String, String]
-          else prev.carry("dv", "rename", "checks")
+          else on.carry("dv", "rename", "checks")
         val header = TableLog.header(meta - "allowDropAdd" ++ carried +
           ("kind" -> kind) + ("schema" -> df.schema.json))
-        val base = if (overwrite) Nil else prev.lines
-        published = log.publish(prev.version + 1, header ++ base ++ newFiles)
-        if (!published) prev = log.latest()
-      }
-      prev.version + 1
+        header ++ (if (overwrite) Nil else on.lines) ++ newFiles
+      }, onConflict, Seq(dataRel))
     }
 
     /** Logical → physical column translation for a write under a
@@ -856,12 +865,8 @@ object GraftSink {
         ("kind" -> "rename") + ("schema" -> newSchema.json) ++
         (if (newMap.nonEmpty)
           Some("rename" -> TableLog.encodeRename(newMap)) else None))
-      val newV = m.version + 1
-      if (!log.publish(newV, header ++ m.lines))
-        throw new IllegalStateException(s"$path: concurrent commit took " +
-          s"v$newV while this rename was publishing — re-run against " +
-          "the new current version")
-      newV
+      log.commit("renameColumn", m)(_ => Right(TableLog.Attempt((),
+        _ => header ++ m.lines, (_, _) => Conflict.Fail)))._1
     }
 
     /** Stamped-schema type map of one version, cached per instance —
@@ -1261,41 +1266,19 @@ object GraftSink {
       * GDPR erasure). OPTIMIZE/overwrite commits materialize the
       * filtered content and DROP the vector — a routine compaction
       * also physically erases deleted rows (the GDPR hard-delete
-      * step). Losing the publish race fails loudly (positions were
-      * derived from the version this delete read). Returns
-      * (newVersion, rowsDeleted). */
+      * step). A lost publish race follows [[TableLog.commit]]'s
+      * conflict table. Returns (newVersion, rowsDeleted). */
     def deleteWhere(spark: org.apache.spark.sql.SparkSession,
                     cond: Column,
                     beforePublish: () => Unit = () => ()): (Long, Long) = {
       val log = this.log(spark)
-      // OCC retry: a lost publish race RE-DERIVES the positions
-      // against the new current version (serial-equivalent for any
-      // winner — the delete simply ran after it); metadata-only
-      // winners rebase inside publishDelete without a re-scan
-      var attempts = 0
-      while (attempts < 5) {
-        attempts += 1
-        val m = log.latest()
+      log.commit("deleteWhere", log.latest(), beforePublish) { m =>
         require(m.version > 0, s"$path: no committed versions")
         // the position scan plans only files whose stats can hold a
         // match — on a range-clustered table a predicate erasure reads
         // its candidate files, not the table (VERDICT r17 ask 2)
-        val candidates = pruneByPredicate(m, cond)
-        if (candidates.isEmpty) return (m.version, 0L) // stats exclude every file
-        val alive = readFilesAddr(spark, candidates, schemaOf(m), m.dv,
-          m.rename)
-        val newDead = alive.where(cond)
-          .select(col("__dv_file").as("file"),
-            col("__dv_row").as("row_index"))
-        if (attempts == 1) beforePublish()
-        publishDelete(spark, log, m, newDead) match {
-          case Some(r) => return r
-          case None => () // content winner — loop re-derives
-        }
+        deleteAttempt(spark, log, m, pruneByPredicate(m, cond))(_.where(cond))
       }
-      throw new IllegalStateException(s"$path: deleteWhere lost the " +
-        "publish race 5 times — a writer is committing continuously; " +
-        "re-run when the table quiesces")
     }
 
     /** The DV slice bucket of a dead position — its file's `__bucket=`
@@ -1303,90 +1286,39 @@ object GraftSink {
     private def dvBucketCol(file: Column): Column =
       coalesce(TableLog.pathBucketCol(file), lit(-1L))
 
-    /** Publish a position-kill commit (`kind` delete|update) on top of
-      * version `base`, with OCC REBASE over METADATA-ONLY winners
-      * (VERDICT r17 ask 3): a `constraint`/`rename` winner republishes
-      * the SAME file lines and the SAME deletion vector, so positions
-      * derived against `base` are provably still exact — the commit
-      * re-publishes on top of the winner carrying ITS headers, zero
-      * work repeated. Any CONTENT winner (append/merge/overwrite/
-      * delete/update/…) returns None: the caller re-derives positions
-      * against the new current version and retries — a full re-scan,
-      * but SERIALIZABLE by construction for every winner kind (no
-      * disjointness analysis to get wrong). `allowConstraintWinner` is
-      * false on the update path: updated rows were validated against
-      * `base`'s checks, so a concurrently-added constraint must force
-      * the re-derive (which re-validates) — a delete can never violate
-      * a row constraint, so it rebases over constraints freely. */
-    private def tryPublishPositions(log: TableLog, base0: Manifest,
-                                    kind: String, dvList: Seq[String],
-                                    extraFileLines: Seq[String],
-                                    allowConstraintWinner: Boolean)
-        : Option[Long] = {
-      var base = base0
-      var attempts = 0
-      while (attempts <= 8) {
-        attempts += 1
-        val header = TableLog.header(base.carry("schema", "rename", "checks") +
-          ("kind" -> kind) + ("dv" -> dvList.mkString(",")))
-        if (log.publish(base.version + 1,
-          header ++ base.lines ++ extraFileLines))
-          return Some(base.version + 1)
-        val winner = log.read(base.version + 1)
-        val rebasable = winner.kind.exists(k =>
-          k == "rename" || (allowConstraintWinner && k == "constraint")) &&
-          winner.lines == base.lines &&
-          winner.meta.get("dv") == base.meta.get("dv")
-        if (!rebasable) return None
-        base = winner
-      }
-      None
-    }
-
-    /** Slice-wise deletion-vector publish shared by [[deleteWhere]] /
-      * [[deleteKeys]]: `newDead` is the freshly dead (file, row_index)
-      * set, file paths manifest-relative. Only the TOUCHED buckets'
-      * slices are rewritten (merged with their previous content);
-      * untouched slices carry verbatim. Row accounting comes from
-      * parquet footers — zero counting jobs (r16 nit: the old path
-      * paid two count() scans just to report rowsDeleted). None = a
-      * content commit won the publish race (slices cleaned up) — the
-      * caller re-derives against the new current version. */
-    private def publishDelete(spark: org.apache.spark.sql.SparkSession,
-                              log: TableLog, base: Manifest,
-                              newDead: DataFrame): Option[(Long, Long)] = {
+    /** A position-kill commit (`kind` delete|update) on top of `base`:
+      * the positions of the addressed rows `killed` (from
+      * [[readFilesAddr]]) land as deletion-vector slices, and the
+      * manifest also lists `addedLines` (an update's post-images, under
+      * `addedDirs`). Only the TOUCHED buckets' slices are rewritten
+      * (merged with their previous content); untouched slices carry
+      * verbatim. The result is the rows newly killed, from parquet
+      * footers — zero counting jobs (r16 nit).
+      *
+      * Its rows of [[TableLog.commit]]'s conflict table: a `rename` (or,
+      * for a delete, `constraint`) winner republishes the SAME file
+      * lines and vector, so the positions stay exact and the commit
+      * rebases; every other winner re-derives them — serializable for
+      * any winner kind. An update re-derives over a constraint because
+      * its rows were validated against the old checks. */
+    private def positionAttempt(spark: org.apache.spark.sql.SparkSession,
+                                log: TableLog, base: Manifest, kind: String,
+                                killed: DataFrame,
+                                addedLines: Seq[String] = Nil,
+                                addedDirs: Seq[String] = Nil)
+        : TableLog.Attempt[Long] = {
       val dvOut = TableLog.newDvRel(base.version + 1)
-      val (dvList, newSlices, prevTouched) =
-        writeDvSlices(spark, log, base.dv, newDead, dvOut)
-      tryPublishPositions(log, base, "delete", dvList, Nil,
-        allowConstraintWinner = true) match {
-        case Some(newV) =>
-          Some((newV, sliceRecordCount(log, newSlices) -
-            sliceRecordCount(log, prevTouched)))
-        case None =>
-          log.fs.delete(new org.apache.hadoop.fs.Path(path, dvOut), true)
-          None
-      }
-    }
-
-    /** Write the new deletion-vector slices for `newDead` (merging the
-      * previously touched buckets' slices) under `dvOut`; returns
-      * (the new #dv= slice list, the new slices, the prior touched
-      * slices) — shared by delete and update publishes. */
-    private def writeDvSlices(spark: org.apache.spark.sql.SparkSession,
-                              log: TableLog, prevSlices: Seq[String],
-                              newDead: DataFrame, dvOut: String)
-        : (Seq[String], Seq[String], Seq[String]) = {
-      val bucketed = newDead
+      val newDead = killed.select(col("__dv_file").as("file"),
+        col("__dv_row").as("row_index"))
         .withColumn("__dvb", dvBucketCol(col("file"))).persist()
-      try {
+      val (dvList, rowsKilled) = try {
         // one cached pass finds the touched buckets (≤ numBuckets+1
         // rows — metadata-bounded); the write below reuses the cache
-        val touched = bucketed.select("__dvb").distinct()
+        val touched = newDead.select("__dvb").distinct()
           .collect().map(_.getLong(0)).toSet
-        val (prevTouched, prevCarried) = prevSlices.partition(s =>
+        val (prevTouched, prevCarried) = base.dv.partition(s =>
           touched.contains(TableLog.sliceBucket(s)))
-        bucketed
+        newDead
           .unionByName(readDv(spark, prevTouched)
             .withColumn("__dvb", dvBucketCol(col("file"))))
           .repartition(col("__dvb"))
@@ -1396,13 +1328,33 @@ object GraftSink {
             new org.apache.hadoop.fs.Path(path, dvOut)).toSeq
           .filter(_.isDirectory)
           .map(d => s"$dvOut/${d.getPath.getName}").sorted
-        (prevCarried ++ newSlices, newSlices, prevTouched)
-      } finally bucketed.unpersist()
+        def rows(slices: Seq[String]): Long =
+          log.footerRows(slices.flatMap(log.parquetFiles))
+        (prevCarried ++ newSlices, rows(newSlices) - rows(prevTouched))
+      } finally newDead.unpersist()
+      TableLog.Attempt(rowsKilled,
+        on => TableLog.header(on.carry("schema", "rename", "checks") +
+          ("kind" -> kind) + ("dv" -> dvList.mkString(","))) ++
+          on.lines ++ addedLines,
+        (on, winner) =>
+          if (winner.kind.exists(k => k == "rename" ||
+                (kind == "delete" && k == "constraint")) &&
+              winner.lines == on.lines &&
+              winner.meta.get("dv") == on.meta.get("dv")) Conflict.Rebase
+          else Conflict.Rederive,
+        dvOut +: addedDirs)
     }
 
-    /** Footer row counts across DV slice dirs — driver metadata. */
-    private def sliceRecordCount(log: TableLog, slices: Seq[String]): Long =
-      log.footerRows(slices.flatMap(log.parquetFiles))
+    /** [[deleteWhere]] / [[deleteKeys]] on top of `m`: kill the rows
+      * `select` keeps among `files` (nothing to commit when no file can
+      * hold one). */
+    private def deleteAttempt(spark: org.apache.spark.sql.SparkSession,
+                              log: TableLog, m: Manifest, files: Seq[String])
+                             (select: DataFrame => DataFrame)
+        : Either[Long, TableLog.Attempt[Long]] =
+      if (files.isEmpty) Left(0L)
+      else Right(positionAttempt(spark, log, m, "delete",
+        select(readFilesAddr(spark, files, schemaOf(m), m.dv, m.rename))))
 
     /** The table's bucket spec as of `m` — the newest manifest at or
       * below `m` carrying `#buckets=`, stopping at any layout reset (a
@@ -1456,32 +1408,17 @@ object GraftSink {
                    numBuckets: Int = 64): (Long, Long) = {
       require(keys.nonEmpty, "deleteKeys needs at least one key")
       val log = this.log(spark)
-      // same OCC retry as deleteWhere: content winners re-derive
-      var attempts = 0
-      while (attempts < 5) {
-        attempts += 1
-        val m = log.latest()
+      log.commit("deleteKeys", log.latest()) { m =>
         require(m.version > 0, s"$path: no committed versions")
         requireBuckets(log, m, numBuckets, s"deleteKeys with $numBuckets " +
           "would prune the wrong buckets and silently miss rows")
         val (keyDf, wanted) = keyBuckets(spark, m, keyCols, keys, numBuckets)
-        val rels = m.files.filter(rel =>
-          TableLog.pathBucket(rel).forall(wanted.contains))
-        if (rels.isEmpty) return (m.version, 0L) // keys hash to empty buckets
         // readFilesAddr prunes the DV slices to the wanted buckets too
         // — the erasure loads 1/numBuckets of the vector, not all of it
-        val alive = readFilesAddr(spark, rels, schemaOf(m), m.dv, m.rename)
-        val newDead = alive.join(broadcast(keyDf), keyCols, "left_semi")
-          .select(col("__dv_file").as("file"),
-            col("__dv_row").as("row_index"))
-        publishDelete(spark, log, m, newDead) match {
-          case Some(r) => return r
-          case None => () // content winner — loop re-derives
-        }
+        deleteAttempt(spark, log, m, m.files.filter(rel =>
+          TableLog.pathBucket(rel).forall(wanted.contains)))(
+          _.join(broadcast(keyDf), keyCols, "left_semi"))
       }
-      throw new IllegalStateException(s"$path: deleteKeys lost the " +
-        "publish race 5 times — a writer is committing continuously; " +
-        "re-run when the table quiesces")
     }
 
     /** UPDATE … WHERE … SET (merge-on-read — Delta's UPDATE without
@@ -1498,63 +1435,42 @@ object GraftSink {
       * them and the table re-converges; run optimize(keyCols) to
       * re-bucket eagerly. CDF serves the version as update_postimage
       * rows (the added files) plus update_preimage rows (the fresh
-      * positions) when preimages are requested. Losing the publish
-      * race fails loudly. Returns (newVersion, rowsUpdated). */
+      * positions) when preimages are requested. A lost publish race
+      * follows [[TableLog.commit]]'s conflict table. Returns
+      * (newVersion, rowsUpdated). */
     def updateWhere(spark: org.apache.spark.sql.SparkSession,
                     cond: Column, set: Map[String, Column],
                     beforePublish: () => Unit = () => ()): (Long, Long) = {
       require(set.nonEmpty, "updateWhere needs at least one SET column")
       val log = this.log(spark)
-      // same OCC retry as deleteWhere — a content winner re-derives
-      // the matches against the new current version (which also
-      // re-validates against its checks: allowConstraintWinner=false
-      // below, so a concurrently-added constraint forces this path)
-      var attempts = 0
-      while (attempts < 5) {
-        attempts += 1
-        val m = log.latest()
+      log.commit("updateWhere", log.latest(), beforePublish) { m =>
         require(m.version > 0, s"$path: no committed versions")
         // stats-pruned match scan, same as deleteWhere: files whose
         // footer range excludes the predicate are never read
         val candidates = pruneByPredicate(m, cond)
-        if (candidates.isEmpty) return (m.version, 0L) // stats exclude every file
-        val alive = readFilesAddr(spark, candidates, schemaOf(m), m.dv,
-          m.rename)
-        val dataCols = alive.columns.toSeq
-          .filterNot(c => c == "__dv_file" || c == "__dv_row")
-        set.keys.foreach(k => require(dataCols.contains(k),
-          s"$path: SET names unknown column '$k'"))
-        val matching = alive.where(cond).persist()
-        try {
-          val pre = matching.select(dataCols.map(col): _*)
-          val updated = pre.select(dataCols.map(c =>
-            set.get(c).map(_.cast(pre.schema(c).dataType).as(c))
-              .getOrElse(col(c))): _*)
-          requireChecks(updated, m.checks, "the updated rows")
-          val dataRel = TableLog.newDataRel(m.version + 1)
-          toPhysical(updated, m.rename).write
-            .mode(SaveMode.Overwrite).parquet(s"$path/$dataRel")
-          val newFiles = log.fileLines(dataRel)
-          val dvOut = TableLog.newDvRel(m.version + 1)
-          val newDead = matching.select(col("__dv_file").as("file"),
-            col("__dv_row").as("row_index"))
-          val (dvList, newSlices, prevTouched) =
-            writeDvSlices(spark, log, m.dv, newDead, dvOut)
-          if (attempts == 1) beforePublish()
-          tryPublishPositions(log, m, "update", dvList, newFiles,
-            allowConstraintWinner = false) match {
-            case Some(newV) =>
-              return (newV, sliceRecordCount(log, newSlices) -
-                sliceRecordCount(log, prevTouched))
-            case None => // content winner — re-derive
-              log.fs.delete(new org.apache.hadoop.fs.Path(path, dvOut), true)
-              log.fs.delete(new org.apache.hadoop.fs.Path(path, dataRel), true)
-          }
-        } finally matching.unpersist()
+        if (candidates.isEmpty) Left(0L) // stats exclude every file
+        else {
+          val alive = readFilesAddr(spark, candidates, schemaOf(m), m.dv,
+            m.rename)
+          val dataCols = alive.columns.toSeq
+            .filterNot(c => c == "__dv_file" || c == "__dv_row")
+          set.keys.foreach(k => require(dataCols.contains(k),
+            s"$path: SET names unknown column '$k'"))
+          val matching = alive.where(cond).persist()
+          try {
+            val pre = matching.select(dataCols.map(col): _*)
+            val updated = pre.select(dataCols.map(c =>
+              set.get(c).map(_.cast(pre.schema(c).dataType).as(c))
+                .getOrElse(col(c))): _*)
+            requireChecks(updated, m.checks, "the updated rows")
+            val dataRel = TableLog.newDataRel(m.version + 1)
+            toPhysical(updated, m.rename).write
+              .mode(SaveMode.Overwrite).parquet(s"$path/$dataRel")
+            Right(positionAttempt(spark, log, m, "update", matching,
+              log.fileLines(dataRel), Seq(dataRel)))
+          } finally matching.unpersist()
+        }
       }
-      throw new IllegalStateException(s"$path: updateWhere lost the " +
-        "publish race 5 times — a writer is committing continuously; " +
-        "re-run when the table quiesces")
     }
 
     /** ADD a CHECK constraint (Delta's `ALTER TABLE ADD CONSTRAINT`):
@@ -1571,16 +1487,13 @@ object GraftSink {
                       name: String, conditionSql: String,
                       beforePublish: () => Unit = () => ()): Long = {
       val log = this.log(spark)
-      // OCC retry (VERDICT r17 ask 3): a lost race re-reads the new
-      // current version and RE-VALIDATES the standing content against
-      // the constraint — the winner may have added rows this
-      // constraint never saw (the exact hazard commit()'s checks
-      // guard fails loudly on, closed from this side by re-running
-      // the scan rather than publishing a stale validation)
-      var attempts = 0
-      while (attempts < 5) {
-        attempts += 1
-        val m = log.latest()
+      // a lost race RE-DERIVES (VERDICT r17 ask 3): the new current
+      // version's content is re-validated against the constraint — the
+      // winner may have added rows this constraint never saw (the exact
+      // hazard commit()'s checks guard fails loudly on, closed from this
+      // side by re-running the scan rather than publishing a stale
+      // validation)
+      log.commit("addConstraint", log.latest(), beforePublish) { m =>
         require(m.version > 0, s"$path: no committed versions")
         require(!m.checks.contains(name),
           s"$path: constraint '$name' already exists")
@@ -1591,13 +1504,9 @@ object GraftSink {
         val header = TableLog.header(m.carry("schema", "dv", "rename") +
           ("kind" -> "constraint") +
           ("checks" -> TableLog.encodeChecks(m.checks + (name -> conditionSql))))
-        if (attempts == 1) beforePublish()
-        if (log.publish(m.version + 1, header ++ m.lines))
-          return m.version + 1
-      }
-      throw new IllegalStateException(s"$path: addConstraint lost the " +
-        "publish race 5 times — a writer is committing continuously; " +
-        "re-run when the table quiesces")
+        Right(TableLog.Attempt((), _ => header ++ m.lines,
+          (_, _) => Conflict.Rederive))
+      }._1
     }
 
     /** DESCRIBE HISTORY: one row per retained version — (version,
@@ -1658,29 +1567,33 @@ object GraftSink {
               orderCols: Seq[String], opCol: String = "op"): Long = {
       val spark = batch.sparkSession
       val log = this.log(spark)
-      val cur = log.latest()
       val w = Window.partitionBy(keyCols.map(col): _*)
         .orderBy(orderCols.map(c => col(c).desc): _*)
       val latest = batch
         .withColumn("__rn", row_number().over(w))
         .where(col("__rn") === 1).drop("__rn")
       val upserts = latest.where(col(opCol) =!= "D").drop(opCol)
-      requireChecks(upserts, cur.checks,
-        "this merge batch — nothing was written")
-      val current =
-        if (cur.version == 0L)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(upserts.schema.fields))
-        else readAt(spark, cur)
-      val merged = current
-        .join(latest.select(keyCols.map(col): _*), keyCols, "left_anti")
-        .unionByName(upserts)
-      // the merge publishes as an overwrite, which resets table
-      // metadata: the checks it validated ride in explicitly
-      commitOn(log, cur, merged, overwrite = true,
-        if (cur.checks.isEmpty) Map.empty
-        else Map("checks" -> TableLog.encodeChecks(cur.checks)), () => ())
+      // the rewrite holds the whole table as of `cur`: a lost race
+      // re-derives it from the new latest version, never republishes it
+      log.commit("merge", log.latest()) { cur =>
+        requireChecks(upserts, cur.checks,
+          "this merge batch — nothing was written")
+        val current =
+          if (cur.version == 0L)
+            spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+              org.apache.spark.sql.types.StructType(upserts.schema.fields))
+          else readAt(spark, cur)
+        val merged = current
+          .join(latest.select(keyCols.map(col): _*), keyCols, "left_anti")
+          .unionByName(upserts)
+        // the merge publishes as an overwrite, which resets table
+        // metadata: the checks it validated ride in explicitly
+        Right(writeAttempt(log, cur, merged, overwrite = true,
+          if (cur.checks.isEmpty) Map.empty
+          else Map("checks" -> TableLog.encodeChecks(cur.checks)),
+          (_, _) => Conflict.Rederive))
+      }._1
     }
 
     /** Deterministic key-bucket of a row — shared by the bucketed
@@ -1708,21 +1621,13 @@ object GraftSink {
       * file whose old-scheme path-bucket is outside the new-scheme
       * touched set survives as a duplicate), so it fails loudly.
       *
-      * Concurrency (Delta-style conflict resolution): losing the
-      * manifest rename race no longer always fails — when the winner
-      * is itself a bucketed merge with the SAME bucket spec whose
-      * touched buckets are DISJOINT from ours (and the base version
-      * held no unbucketed may-hold-any-key files), the loser REBASES:
-      * its carryover is recomputed from the winner's manifest (the
-      * winner carried our buckets' files verbatim, so dropping our
-      * touched buckets' files from the winner's list and adding our
-      * rewrite is exactly the serial result) and the rename retries at
-      * the next version — bounded attempts, nothing rewritten twice.
-      * Overlapping buckets, plain/overwrite winners, or mixed
-      * unbucketed state still FAIL LOUDLY (re-run re-reads the
-      * winner's state). `beforePublish` is a test seam: runs after the
-      * rewrite lands in `_data/` and before the first rename attempt
-      * (where a concurrent merge is injected deterministically). */
+      * Concurrency (Delta-style conflict resolution, one row of
+      * [[TableLog.commit]]'s conflict table): a lost race REBASES over a
+      * bucketed merge with the same spec and disjoint touched buckets —
+      * nothing rewritten twice — and fails loudly on any other winner.
+      * `beforePublish` is a test seam: runs after the rewrite lands in
+      * `_data/` and before the first rename attempt (where a concurrent
+      * merge is injected deterministically). */
     def mergeBucketed(batch: DataFrame, keyCols: Seq[String],
                       orderCols: Seq[String], opCol: String = "op",
                       numBuckets: Int = 64,
@@ -1771,8 +1676,7 @@ object GraftSink {
         val touched = census.getSeq[Long](0).toSet
         def inTouched(line: String): Boolean =
           TableLog.pathBucket(TableLog.path(line)).forall(touched.contains)
-        val (touchedLines, carried) = cur.lines.partition(inTouched)
-        val touchedFiles = touchedLines.map(TableLog.path)
+        val touchedFiles = cur.lines.filter(inTouched).map(TableLog.path)
         val outSchema = org.apache.spark.sql.types.StructType(
           latest.drop(opCol).schema.fields)
         schemaGate(log, cur, outSchema)
@@ -1789,9 +1693,8 @@ object GraftSink {
           .unionByName(latest.where(upsert).drop(opCol))
           .withColumn("__bucket", bucketOf(keyCols, numBuckets))
         // write the rewrite hive-partitioned by bucket, then publish
-        // carried ∪ new manifests with optimistic disjoint-merge rebase
-        var newV = cur.version + 1
-        val dataRel = TableLog.newDataRel(newV)
+        // carried ∪ new files with optimistic disjoint-merge rebase
+        val dataRel = TableLog.newDataRel(cur.version + 1)
         // Cluster the rewrite by bucket before writing: the anti-join
         // leaves `merged` hash-partitioned on keyCols (Spark's Murmur3),
         // which is UNCORRELATED with bucketOf's xxhash64 — so a
@@ -1821,40 +1724,33 @@ object GraftSink {
         // rows were DV-filtered above, so THEIR slices are DROPPED from
         // the new version (a merge physically ages the vector out,
         // bucket by bucket — the unbucketed −1 slice too: unbucketed
-        // files always join the rewrite)
-        val dvCarry = cur.dv.filterNot { s =>
-          val b = TableLog.sliceBucket(s); b == -1L || touched.contains(b)
+        // files always join the rewrite). Carried files and slices come
+        // from the version the commit lands on: a rebase over a
+        // disjoint winner carries the winner's, never `cur`'s.
+        def lines(on: Manifest): Seq[String] = {
+          val dvCarry = on.dv.filterNot { s =>
+            val b = TableLog.sliceBucket(s); b == -1L || touched.contains(b)
+          }
+          TableLog.header(meta ++ on.carry("rename", "checks") +
+            ("kind" -> "merge") +
+            ("buckets" -> numBuckets.toString) +
+            ("touched" -> touched.toSeq.sorted.mkString(",")) +
+            ("schema" -> outSchema.json) ++
+            (if (dvCarry.nonEmpty) Some("dv" -> dvCarry.mkString(",")) else None)) ++
+            on.lines.filterNot(inTouched) ++ newFiles
         }
-        val header = TableLog.header(meta ++ cur.carry("rename", "checks") +
-          ("kind" -> "merge") +
-          ("buckets" -> numBuckets.toString) +
-          ("touched" -> touched.toSeq.sorted.mkString(",")) +
-          ("schema" -> outSchema.json) ++
-          (if (dvCarry.nonEmpty) Some("dv" -> dvCarry.mkString(",")) else None))
-        beforePublish()
-        var carriedNow = carried
-        var attempts = 0
-        while (!log.publish(newV, header ++ carriedNow ++ newFiles)) {
-          attempts += 1
-          // inspect the winner that took newV: rebase only when its
-          // merge provably did not touch our buckets (serial-equivalent)
-          val winner = log.read(newV)
-          val rebasable = attempts <= 8 &&
-            winner.kind.contains("merge") &&
-            winner.buckets.contains(numBuckets) &&
-            winner.touched.exists(_.intersect(touched).isEmpty) &&
-            touchedFiles.forall(rel => TableLog.pathBucket(rel).isDefined)
-          if (!rebasable)
-            throw new IllegalStateException(s"$path: concurrent commit took " +
-              s"v$newV while this merge was writing, and its changes are " +
-              "not a disjoint-bucket merge (or rebase attempts exhausted) " +
-              "— re-run the merge against the new current version (the " +
-              "carried file list is stale)")
-          carriedNow = winner.lines.filterNot(l =>
-            TableLog.pathBucket(TableLog.path(l)).exists(touched.contains))
-          newV += 1
-        }
-        newV
+        // rebase only over a merge that provably did not touch our
+        // buckets (serial-equivalent): the winner carried our buckets'
+        // files verbatim
+        def onConflict(on: Manifest, winner: Manifest): Conflict =
+          if (winner.kind.contains("merge") &&
+              winner.buckets.contains(numBuckets) &&
+              winner.touched.exists(_.intersect(touched).isEmpty) &&
+              touchedFiles.forall(rel => TableLog.pathBucket(rel).isDefined))
+            Conflict.Rebase
+          else Conflict.Fail
+        log.commit("mergeBucketed", cur, beforePublish)(_ => Right(
+          TableLog.Attempt((), lines, onConflict, Seq(dataRel))))._1
       } finally GraftSqlBridge.releaseCheckpoint(latest)
     }
 
@@ -1891,9 +1787,9 @@ object GraftSink {
     def restore(spark: org.apache.spark.sql.SparkSession,
                 v: Long): Long = {
       val log = this.log(spark)
-      val cur = log.currentVersion()
-      require(v >= 1 && v <= cur,
-        s"$path: cannot restore to v$v (current is v$cur)")
+      val cur = log.latest()
+      require(v >= 1 && v <= cur.version,
+        s"$path: cannot restore to v$v (current is v${cur.version})")
       val m = log.read(v)
       // bucket spec resolved AS OF v, not from v's own header alone:
       // an append/commitBatch version of a bucketed table carries no
@@ -1902,12 +1798,9 @@ object GraftSink {
       val header = TableLog.header(m.carry("schema", "dv", "rename", "checks") +
         ("kind" -> "restore") + ("restored_from" -> v.toString) ++
         bucketSpecAsOf(log, m).map(b => "buckets" -> b.toString))
-      val newV = cur + 1
-      if (!log.publish(newV, header ++ m.lines))
-        throw new IllegalStateException(s"$path: concurrent commit took " +
-          s"v$newV while this restore was publishing — re-check and " +
-          "re-run against the new current version")
-      newV
+      log.commit("restore", cur)(_ => Right(
+        TableLog.Attempt((), _ => header ++ m.lines,
+          (_, _) => Conflict.Fail)))._1
     }
 
     /** Time travel by EVENT TIME (`AS OF TIMESTAMP` with deterministic
@@ -2280,7 +2173,7 @@ object GraftSink {
           (current.drop("__bucket").schema, Map("buckets" -> nb.toString))
       }
       val (newV, filesAfter) =
-        publishRewrite(log, m.version + 1, dataRel, schema, meta)
+        publishRewrite(log, m, dataRel, schema, meta)
       (newV, m.files.size, filesAfter)
     }
 
@@ -2349,30 +2242,24 @@ object GraftSink {
         .drop("__z")
       val dataRel = TableLog.newDataRel(m.version + 1)
       packed.write.mode(SaveMode.Overwrite).parquet(s"$path/$dataRel")
-      val (newV, filesAfter) = publishRewrite(log, m.version + 1, dataRel,
+      val (newV, filesAfter) = publishRewrite(log, m, dataRel,
         packed.schema, Map.empty)
       (newV, m.files.size, filesAfter)
     }
 
-    /** Publish a whole-table REWRITE (optimize / zorder) written under
-      * `dataRel` at exactly version `nv`; returns (nv, files written).
-      * The rewrite holds the WHOLE table content, so a concurrent
-      * append/merge landing first makes it stale — one publish, loud
-      * failure on a lost race. Routing rewrites through [[commit]]'s
-      * overwrite path would be silently wrong: its retry loop
-      * republishes the stale rewrite at the next version, dropping the
-      * winner's rows (ADVICE r16). */
-    private def publishRewrite(log: TableLog, nv: Long, dataRel: String,
+    /** Publish a whole-table REWRITE (optimize / zorder) of `base`
+      * written under `dataRel`; returns (version, files written). The
+      * rewrite holds the WHOLE table content, so any winner makes it
+      * stale and it never rebases: republishing it on top of a winner
+      * would drop the winner's rows (ADVICE r16). */
+    private def publishRewrite(log: TableLog, base: Manifest, dataRel: String,
                                schema: org.apache.spark.sql.types.StructType,
                                meta: Map[String, String]): (Long, Int) = {
       val newFiles = log.fileLines(dataRel)
       val header = TableLog.header(meta + ("kind" -> "optimize") +
         ("schema" -> schema.json))
-      if (!log.publish(nv, header ++ newFiles))
-        throw new IllegalStateException(s"$path: concurrent commit took " +
-          s"v$nv while optimize was writing — re-run optimize against " +
-          "the new current version")
-      (nv, newFiles.size)
+      log.commit("optimize", base)(_ => Right(TableLog.Attempt(newFiles.size,
+        _ => header ++ newFiles, (_, _) => Conflict.Fail)))
     }
 
     /** VACUUM: retire time travel below a horizon — keep the newest

@@ -32,8 +32,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    unbucketed files).
   *
   * A version is published by writing the manifest to a temp name and
-  * renaming it without overwrite: a lost race leaves the slot to the
-  * winner, a crash before the rename leaves only invisible orphans. */
+  * renaming it without overwrite, only through [[TableLog.commit]]: a
+  * lost race leaves the slot to the winner, a crash before the rename
+  * leaves only invisible orphans. */
 private[graft] final class TableLog(val fs: FileSystem, root: String) {
 
   private val dir = new Path(root, TableLog.ManifestDir)
@@ -106,11 +107,79 @@ private[graft] final class TableLog(val fs: FileSystem, root: String) {
   /** The latest manifest (the empty version 0 before the first commit). */
   def latest(): Manifest = readOrEmpty(currentVersion())
 
+  /** The one commit loop: every [[GraftSink.VersionedTable]] write
+    * publishes through it (optimistic concurrency, the Delta protocol).
+    * `derive` turns the manifest a writer starts from into its
+    * [[TableLog.Attempt]] — data written, plus the manifest lines as a
+    * function of the version it lands on — or into `Left(result)` when
+    * there is nothing to commit. The loop calls `beforePublish` (a test
+    * seam) once after the first derivation, then publishes version
+    * `on + 1`. Each lost race reads the winner once and asks the
+    * attempt's conflict rule what to do:
+    *  - [[TableLog.Conflict.Rebase]]: publish the same work on top of
+    *    the winner (its lines are recomputed from the winner);
+    *  - [[TableLog.Conflict.Rederive]]: delete the attempt's written
+    *    dirs and derive again from the new latest version;
+    *  - [[TableLog.Conflict.Fail]]: give up with the lost-race error.
+    *
+    * After [[TableLog.MaxLostRaces]] lost races every rule fails. The
+    * rules, per write:
+    *
+    * | write | rebases over | re-derives on | fails on |
+    * |---|---|---|---|
+    * | `commit`, `commitBatch`, `commitWithWatermark` | any winner; the schema, rename and CHECK guards re-run against it | — | a guard the winner trips |
+    * | `merge` | — | any winner | — |
+    * | `mergeBucketed`, `mergeBucketedBatch` | a bucketed merge with the same spec and disjoint touched buckets, when this merge read no unbucketed file | — | any other winner |
+    * | `deleteWhere`, `deleteKeys` | a rename or constraint with the same files and vector | any other winner | — |
+    * | `updateWhere` | a rename with the same files and vector | any other winner (a constraint re-validates) | — |
+    * | `addConstraint` | — | any winner (re-validates the content) | — |
+    * | `renameColumn`, `restore`, `optimize`, `optimizeZorder` | — | — | any winner |
+    *
+    * Uncontended, the loop adds nothing to a write but its one publish
+    * (no manifest read, listing or Spark job). Returns the version landed (the starting version for `Left`) and
+    * the attempt's result. */
+  def commit[R](op: String, base: Manifest,
+                beforePublish: () => Unit = () => ())
+               (derive: Manifest => Either[R, TableLog.Attempt[R]])
+      : (Long, R) = {
+    import TableLog.Conflict._
+    @scala.annotation.tailrec
+    def land(on: Manifest, next: Either[R, TableLog.Attempt[R]],
+             lost: Int): (Long, R) = next match {
+      case Left(r) => (on.version, r)
+      case Right(a) =>
+        val v = on.version + 1
+        if (publish(v, a.lines(on))) (v, a.result)
+        else {
+          val winner = read(v)
+          val rule = if (lost + 1 >= TableLog.MaxLostRaces) Fail
+                     else a.onConflict(on, winner)
+          rule match {
+            case Rebase => land(winner, next, lost + 1)
+            case Rederive =>
+              a.written.foreach(rel => fs.delete(new Path(root, rel), true))
+              val now = latest()
+              land(now, derive(now), lost + 1)
+            case Fail => throw new IllegalStateException(s"$root: $op lost " +
+              s"the publish race for v$v to a concurrent " +
+              s"${winner.kind.getOrElse("append")} commit (lost race " +
+              s"${lost + 1} of at most ${TableLog.MaxLostRaces}); it cannot " +
+              "land serially on that winner (only a metadata-only or " +
+              "disjoint-bucket winner is rebased over) — re-run against " +
+              "the new current version")
+          }
+        }
+    }
+    val first = derive(base)
+    if (first.isRight) beforePublish()
+    land(base, first, 0)
+  }
+
   /** One atomic publish attempt of version `v`; false when another
     * writer took `v` first. A successful publish refreshes
     * `_last_checkpoint` best-effort — it is a HINT, so a crash between
     * rename and hint write costs one extra probe, never correctness. */
-  def publish(v: Long, lines: Seq[String]): Boolean = {
+  private def publish(v: Long, lines: Seq[String]): Boolean = {
     fs.mkdirs(dir)
     val won = TableLog.publishFile(fs, dir, s"v$v.manifest",
       lines.mkString("\n"))
@@ -231,6 +300,26 @@ private[graft] object TableLog {
 
   /** Count of hint-less full manifest-directory listings (test seam). */
   val fallbackLists = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Lost publish races after which [[TableLog.commit]] gives up. */
+  val MaxLostRaces = 8
+
+  /** What a write does when another commit took its version. */
+  sealed trait Conflict
+  object Conflict {
+    case object Rebase extends Conflict
+    case object Rederive extends Conflict
+    case object Fail extends Conflict
+  }
+
+  /** One derivation of a write, ready to publish: `lines` maps the
+    * manifest it lands on to the new manifest's lines, `onConflict`
+    * maps (that manifest, the winner that took the next version) to the
+    * write's rule, and `written` lists the root-relative dirs this
+    * derivation wrote (deleted when it re-derives). */
+  final case class Attempt[+R](result: R, lines: Manifest => Seq[String],
+                               onConflict: (Manifest, Manifest) => Conflict,
+                               written: Seq[String] = Nil)
 
   def apply(spark: SparkSession, root: String): TableLog =
     new TableLog(fileSystem(spark, root), root)

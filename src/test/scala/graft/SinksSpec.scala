@@ -718,6 +718,10 @@ class SinksSpec extends SparkSpec {
     def bucketOf(k: Long): Long = spark.range(1)
       .select(pmod(xxhash64(lit(k)), lit(8L))).head().getLong(0)
     val other = (8L until 64L).find(k => bucketOf(k) != bucketOf(7L)).get
+    // v2: a deletion-vector slice in `other`'s bucket, which the
+    // injected winner below rewrites and so drops
+    vt.deleteKeys(spark, Seq("key"), Seq(Seq(other)), numBuckets = 8)
+    assert(vt.manifestMeta(spark, 2L).get("dv").nonEmpty)
     // inject the disjoint merge INSIDE the first merge's publish
     // window: the first merge loses the rename race and must rebase
     val v = vt.mergeBucketed(batch((7L, 100L, "U", "v7b")),
@@ -727,7 +731,11 @@ class SinksSpec extends SparkSpec {
           Seq("key"), Seq("seq"), numBuckets = 8)
         ()
       })
-    assert(v === 3L) // injected winner took v2; loser rebased to v3
+    assert(v === 4L) // injected winner took v3; loser rebased to v4
+    // the rebased manifest lists the winner's slices, not the ones the
+    // winner dropped
+    assert(vt.manifestMeta(spark, 4L).get("dv") ===
+      vt.manifestMeta(spark, 3L).get("dv"))
     val out = vt.read(spark)
     assert(out.count() === 64L)
     assert(out.where(col("key") === 7L).select("payload")
@@ -1780,6 +1788,143 @@ class SinksSpec extends SparkSpec {
       .exists(_.contains("qty_cap")))
   }
 
+  test("VersionedTable conflict matrix: every writer with a " +
+    "beforePublish seam, against a metadata-only, a disjoint-bucket and " +
+    "an append winner, lands serially after the winner or fails loudly") {
+    import spark.implicits._
+    def bucketOf(k: Long): Long = spark.range(1)
+      .select(pmod(xxhash64(lit(k)), lit(8L))).head().getLong(0)
+    val other = (8L until 16L).find(k => bucketOf(k) != bucketOf(7L)).get
+    def upserts(rows: (Long, Long, String, Long)*): DataFrame =
+      rows.toSeq.toDF("key", "seq", "op", "qty")
+    def appends(rows: (Long, Long, Long)*): DataFrame =
+      rows.toSeq.toDF("key", "seq", "qty")
+    type Rows = Map[Long, Long] // key -> qty
+    type Table = GraftSink.VersionedTable
+    // one bucketed v1, copied per cell (manifest lines are root-relative)
+    val base = tmp("vtable-matrix-base")
+    GraftSink.VersionedTable(base).mergeBucketed(
+      upserts((0L until 16L).map(k => (k, k, "I", 10L * (k + 1))): _*),
+      Seq("key"), Seq("seq"), numBuckets = 8)
+    val start: Rows = (0L until 16L).map(k => k -> 10L * (k + 1)).toMap
+    // (name, the write injected in the seam, its effect on the rows)
+    val winners: Seq[(String, Table => Unit, Rows => Rows)] = Seq(
+      ("constraint",
+        vt => { vt.addConstraint(spark, "qty_pos", "qty > 0"); () },
+        identity),
+      ("disjoint merge",
+        vt => {
+          vt.mergeBucketed(upserts((other, 100L, "U", 999L)),
+            Seq("key"), Seq("seq"), numBuckets = 8); ()
+        },
+        _ + (other -> 999L)),
+      ("append",
+        vt => { vt.commit(appends((100L, 100L, 1000L))); () },
+        _ + (100L -> 1000L)))
+    // (name, the write under test given its seam, its effect on the rows)
+    val ops: Seq[(String, (Table, () => Unit) => Long, Rows => Rows)] = Seq(
+      ("append",
+        (vt, seam) => vt.commit(appends((50L, 50L, 500L)),
+          beforePublish = seam),
+        _ + (50L -> 500L)),
+      ("overwrite",
+        (vt, seam) => vt.commit(appends((50L, 50L, 500L)),
+          overwrite = true, beforePublish = seam),
+        _ => Map(50L -> 500L)),
+      ("mergeBucketed",
+        (vt, seam) => vt.mergeBucketed(upserts((7L, 70L, "U", 777L)),
+          Seq("key"), Seq("seq"), numBuckets = 8, beforePublish = seam),
+        _ + (7L -> 777L)),
+      ("deleteWhere",
+        (vt, seam) => vt.deleteWhere(spark, col("key") < 4L, seam)._1,
+        _ -- (0L until 4L)),
+      ("updateWhere",
+        (vt, seam) => vt.updateWhere(spark, col("key") === 3L,
+          Map("qty" -> lit(333L)), seam)._1,
+        _ + (3L -> 333L)),
+      ("addConstraint",
+        (vt, seam) => vt.addConstraint(spark, "qty_cap", "qty < 100000",
+          seam),
+        identity))
+    // the cells that refuse to land: (op, winner) -> message fragment
+    val loud = Map(
+      ("append", "constraint") -> "ADD CONSTRAINT",
+      ("mergeBucketed", "constraint") -> "disjoint",
+      ("mergeBucketed", "append") -> "disjoint")
+    for ((opName, run, opEffect) <- ops;
+         (winName, inject, winEffect) <- winners) withClue(
+        s"$opName vs $winName: ") {
+      val dir = tmp("vtable-matrix")
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(base), new java.io.File(dir))
+      val vt = GraftSink.VersionedTable(dir)
+      val outcome =
+        try Right(run(vt, () => inject(vt)))
+        catch { case e: RuntimeException => Left(e.getMessage) }
+      val afterWinner = winEffect(start)
+      val expected = loud.get((opName, winName)) match {
+        case Some(fragment) =>
+          assert(outcome.fold(_.contains(fragment), _ => false), outcome)
+          afterWinner
+        case None =>
+          assert(outcome === Right(3L))
+          if (winName == "constraint")
+            assert(vt.manifestMeta(spark, 3L).get("checks")
+              .exists(_.contains("qty_pos")) === (opName != "overwrite"))
+          opEffect(afterWinner)
+      }
+      assert(vt.read(spark).select("key", "qty").as[(Long, Long)]
+        .collect().toSeq.sorted === expected.toSeq.sorted)
+    }
+  }
+
+  test("TableLog.commit: a writer that loses every race gives up after " +
+    "the bound with the one lost-race error") {
+    val path = tmp("tablelog-bound")
+    val log = TableLog(spark, path)
+    val manifests = new org.apache.hadoop.fs.Path(path, "_manifests")
+    log.fs.mkdirs(manifests)
+    var derived = 0
+    var built = 0
+    val e = intercept[IllegalStateException](
+      log.commit("append", Manifest.empty) { _ =>
+        derived += 1
+        Right(TableLog.Attempt((), { on =>
+          built += 1
+          // another writer takes the slot this attempt is about to publish
+          assert(TableLog.publishFile(log.fs, manifests,
+            s"v${on.version + 1}.manifest", "#kind=append"))
+          Seq("#kind=append")
+        }, (_, _) => TableLog.Conflict.Rebase))
+      })
+    assert(e.getMessage.contains("append lost the publish race"))
+    assert(e.getMessage.contains(s"of at most ${TableLog.MaxLostRaces}"))
+    assert(derived === 1)
+    assert(built === TableLog.MaxLostRaces)
+    assert(log.currentVersion() === TableLog.MaxLostRaces.toLong)
+  }
+
+  test("VersionedTable.merge: an append landing while the merge writes " +
+    "keeps its rows — the merge re-derives on the new latest version") {
+    import spark.implicits._
+    val path = tmp("vtable-merge-race")
+    val vt = GraftSink.VersionedTable(path)
+    vt.merge(Seq((1L, 1L, "I", "a"), (2L, 2L, "I", "b"))
+      .toDF("key", "seq", "op", "tag"), Seq("key"), Seq("seq"))
+    // merge has no seam: a once-only UDF in its batch lands the append
+    // (on its own thread, outside the task) while the write job runs
+    SinksSpec.onFirstRow = () =>
+      vt.commit(Seq((9L, 9L, "z")).toDF("key", "seq", "tag"))
+    val tagOnce = udf((t: String) => { SinksSpec.fireOnce(); t })
+    val v = vt.merge(Seq((2L, 20L, "U", "b2")).toDF("key", "seq", "op", "tag")
+      .withColumn("tag", tagOnce(col("tag"))), Seq("key"), Seq("seq"))
+    assert(SinksSpec.fired.get)
+    assert(vt.readVersion(spark, 2L).where(col("key") === 9L).count() === 1L)
+    assert(v === 3L)
+    assert(vt.read(spark).select("key", "tag").as[(Long, String)]
+      .collect().toSeq.sorted === Seq((1L, "a"), (2L, "b2"), (9L, "z")))
+  }
+
   test("VersionedTable commit allowDropAdd: the suspected-RENAME gate " +
     "opts out for a genuine drop+add of the same type; the flag never " +
     "persists in the manifest header") {
@@ -2162,4 +2307,22 @@ class SinksSpec extends SparkSpec {
     assert(back.where(col("event_type") =!= "purchase").count() === 0)
     assert(back.where(!col("props").startsWith("****")).count() === 0)
   }
+}
+
+object SinksSpec {
+  /** Side effect a test runs once from inside a Spark job. */
+  @volatile var onFirstRow: () => Unit = () => ()
+  val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Runs [[onFirstRow]] once, on a fresh thread joined before
+    * returning, so the side effect's own jobs run outside the task. */
+  def fireOnce(): Unit =
+    if (fired.compareAndSet(false, true)) {
+      var failure: Option[Throwable] = None
+      val t = new Thread(() =>
+        try onFirstRow() catch { case e: Throwable => failure = Some(e) })
+      t.start()
+      t.join()
+      failure.foreach(throw _)
+    }
 }

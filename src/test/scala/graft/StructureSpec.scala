@@ -85,4 +85,10 @@ class StructureSpec extends AnyFunSuite {
       sites(java.util.regex.Pattern.quote(l))).map(_._1).distinct
     assert(files === Seq("graft/cdc/TableLog.scala"))
   }
+
+  test("the lost-race rule lives only in TableLog.commit") {
+    assert(sites("""publish race for v""").map(_._1) ===
+      Seq("graft/cdc/TableLog.scala"))
+    assert(sites("""var attempts""").isEmpty)
+  }
 }
