@@ -748,10 +748,7 @@ object GraftSink {
         requireChecks(df, validatedChecks,
           "this commit's rows — nothing was written")
       }
-      val dataRel = TableLog.newDataRel(prev.version + 1)
-      toPhysical(df, renameMap).write
-        .mode(SaveMode.Overwrite).parquet(s"$path/$dataRel")
-      val newFiles = log.fileLines(dataRel)
+      val written = log.writeData(prev.version + 1, toPhysical(df, renameMap))
       val kind = meta.getOrElse("kind",
         if (overwrite) "overwrite" else "append")
       TableLog.Attempt((), { (on: Manifest) =>
@@ -783,8 +780,8 @@ object GraftSink {
           else on.carry("dv", "rename", "checks")
         val header = TableLog.header(meta - "allowDropAdd" ++ carried +
           ("kind" -> kind) + ("schema" -> df.schema.json))
-        header ++ (if (overwrite) Nil else on.lines) ++ newFiles
-      }, onConflict, Seq(dataRel))
+        header ++ (if (overwrite) Nil else on.lines) ++ written.lines
+      }, onConflict, Seq(written.dir))
     }
 
     /** Logical → physical column translation for a write under a
@@ -1151,16 +1148,6 @@ object GraftSink {
                        m: Manifest): DataFrame =
       readFiles(spark, m.files, schemaOf(m), m.dv, m.rename)
 
-    /** The row's data file as a MANIFEST-RELATIVE path — everything
-      * after the table root's `/_data/` marker. Deletion vectors key
-      * rows by this (never the absolute `_metadata.file_path` URI):
-      * relocating the table or reading through a different
-      * scheme/authority must not silently un-delete DV'd rows
-      * (ADVICE r16) — the same move-safety the manifests have. */
-    private def relFileCol: Column =
-      concat(lit("_data/"),
-        substring_index(col("_metadata.file_path"), "/_data/", -1))
-
     /** Dead positions (file: manifest-relative STRING, row_index: LONG)
       * across `slices` (empty → typed empty relation). Each slice holds
       * one key-bucket's dead positions, so a delete rewrites only the
@@ -1200,7 +1187,8 @@ object GraftSink {
           f.copy(name = rename.getOrElse(f.name, f.name)))))
       val raw = physSchema.map(s => spark.read.schema(s).parquet(paths: _*))
         .getOrElse(spark.read.parquet(paths: _*))
-        .withColumn("__dv_file", relFileCol)
+        .withColumn("__dv_file",
+          TableLog.relFileCol(col("_metadata.file_path")))
         .withColumn("__dv_row", col("_metadata.row_index"))
       val base =
         if (rename.isEmpty) raw
@@ -1289,11 +1277,11 @@ object GraftSink {
     /** A position-kill commit (`kind` delete|update) on top of `base`:
       * the positions of the addressed rows `killed` (from
       * [[readFilesAddr]]) land as deletion-vector slices, and the
-      * manifest also lists `addedLines` (an update's post-images, under
-      * `addedDirs`). Only the TOUCHED buckets' slices are rewritten
-      * (merged with their previous content); untouched slices carry
-      * verbatim. The result is the rows newly killed, from parquet
-      * footers — zero counting jobs (r16 nit).
+      * manifest also lists `posts` (an update's post-images). Only the
+      * TOUCHED buckets' slices are rewritten (merged with their previous
+      * content); untouched slices carry verbatim. The result is the rows
+      * newly killed, counted by the job that finds the touched buckets
+      * — no counting job of its own (r16 nit).
       *
       * Its rows of [[TableLog.commit]]'s conflict table: a `rename` (or,
       * for a delete, `constraint`) winner republishes the SAME file
@@ -1304,45 +1292,37 @@ object GraftSink {
     private def positionAttempt(spark: org.apache.spark.sql.SparkSession,
                                 log: TableLog, base: Manifest, kind: String,
                                 killed: DataFrame,
-                                addedLines: Seq[String] = Nil,
-                                addedDirs: Seq[String] = Nil)
+                                posts: Option[TableLog.Written] = None)
         : TableLog.Attempt[Long] = {
-      val dvOut = TableLog.newDvRel(base.version + 1)
       val newDead = killed.select(col("__dv_file").as("file"),
         col("__dv_row").as("row_index"))
-        .withColumn("__dvb", dvBucketCol(col("file"))).persist()
-      val (dvList, rowsKilled) = try {
-        // one cached pass finds the touched buckets (≤ numBuckets+1
-        // rows — metadata-bounded); the write below reuses the cache
-        val touched = newDead.select("__dvb").distinct()
-          .collect().map(_.getLong(0)).toSet
+        .withColumn(TableLog.SliceCol, dvBucketCol(col("file"))).persist()
+      val (written, dvList, rowsKilled) = try {
+        // one cached pass counts the positions per touched bucket
+        // (≤ numBuckets+1 rows — metadata-bounded; the scan that found
+        // them skips dead rows, so each is newly killed); the write
+        // below reuses the cache
+        val perBucket = newDead.groupBy(TableLog.SliceCol).count().collect()
+        val touched = perBucket.map(_.getLong(0)).toSet
         val (prevTouched, prevCarried) = base.dv.partition(s =>
           touched.contains(TableLog.sliceBucket(s)))
-        newDead
+        val dv = log.writeSlices(base.version + 1, newDead
           .unionByName(readDv(spark, prevTouched)
-            .withColumn("__dvb", dvBucketCol(col("file"))))
-          .repartition(col("__dvb"))
-          .write.mode(SaveMode.Overwrite).partitionBy("__dvb")
-          .parquet(s"$path/$dvOut")
-        val newSlices = log.fs.listStatus(
-            new org.apache.hadoop.fs.Path(path, dvOut)).toSeq
-          .filter(_.isDirectory)
-          .map(d => s"$dvOut/${d.getPath.getName}").sorted
-        def rows(slices: Seq[String]): Long =
-          log.footerRows(slices.flatMap(log.parquetFiles))
-        (prevCarried ++ newSlices, rows(newSlices) - rows(prevTouched))
+            .withColumn(TableLog.SliceCol, dvBucketCol(col("file"))))
+          .repartition(col(TableLog.SliceCol)))
+        (dv, prevCarried ++ dv.slices, perBucket.map(_.getLong(1)).sum)
       } finally newDead.unpersist()
       TableLog.Attempt(rowsKilled,
         on => TableLog.header(on.carry("schema", "rename", "checks") +
           ("kind" -> kind) + ("dv" -> dvList.mkString(","))) ++
-          on.lines ++ addedLines,
+          on.lines ++ posts.toSeq.flatMap(_.lines),
         (on, winner) =>
           if (winner.kind.exists(k => k == "rename" ||
                 (kind == "delete" && k == "constraint")) &&
               winner.lines == on.lines &&
               winner.meta.get("dv") == on.meta.get("dv")) Conflict.Rebase
           else Conflict.Rederive,
-        dvOut +: addedDirs)
+        written.dir +: posts.map(_.dir).toSeq)
     }
 
     /** [[deleteWhere]] / [[deleteKeys]] on top of `m`: kill the rows
@@ -1463,11 +1443,10 @@ object GraftSink {
               set.get(c).map(_.cast(pre.schema(c).dataType).as(c))
                 .getOrElse(col(c))): _*)
             requireChecks(updated, m.checks, "the updated rows")
-            val dataRel = TableLog.newDataRel(m.version + 1)
-            toPhysical(updated, m.rename).write
-              .mode(SaveMode.Overwrite).parquet(s"$path/$dataRel")
+            val posts = log.writeData(m.version + 1,
+              toPhysical(updated, m.rename))
             Right(positionAttempt(spark, log, m, "update", matching,
-              log.fileLines(dataRel), Seq(dataRel)))
+              Some(posts)))
           } finally matching.unpersist()
         }
       }
@@ -1694,7 +1673,6 @@ object GraftSink {
           .withColumn("__bucket", bucketOf(keyCols, numBuckets))
         // write the rewrite hive-partitioned by bucket, then publish
         // carried ∪ new files with optimistic disjoint-merge rebase
-        val dataRel = TableLog.newDataRel(cur.version + 1)
         // Cluster the rewrite by bucket before writing: the anti-join
         // leaves `merged` hash-partitioned on keyCols (Spark's Murmur3),
         // which is UNCORRELATED with bucketOf's xxhash64 — so a
@@ -1714,11 +1692,10 @@ object GraftSink {
         // file per bucket (SinksSpec pins both). Manifest pruning is
         // per-file by path bucket, so multi-file buckets carry/rewrite
         // exactly like single-file ones.
-        toPhysical(merged.repartition(numBuckets, col("__bucket")), cur.rename)
-          .write.mode(SaveMode.Overwrite)
-          .option("maxRecordsPerFile", maxRowsPerBucketFile)
-          .partitionBy("__bucket").parquet(s"$path/$dataRel")
-        val newFiles = log.fileLines(dataRel)
+        val written = log.writeData(cur.version + 1,
+          toPhysical(merged.repartition(numBuckets, col("__bucket")),
+            cur.rename),
+          Some("__bucket"), Some(maxRowsPerBucketFile))
         // carried files keep their deleted positions — their buckets'
         // DV slices carry verbatim; the rewritten (touched) buckets'
         // rows were DV-filtered above, so THEIR slices are DROPPED from
@@ -1737,7 +1714,7 @@ object GraftSink {
             ("touched" -> touched.toSeq.sorted.mkString(",")) +
             ("schema" -> outSchema.json) ++
             (if (dvCarry.nonEmpty) Some("dv" -> dvCarry.mkString(",")) else None)) ++
-            on.lines.filterNot(inTouched) ++ newFiles
+            on.lines.filterNot(inTouched) ++ written.lines
         }
         // rebase only over a merge that provably did not touch our
         // buckets (serial-equivalent): the winner carried our buckets'
@@ -1750,7 +1727,7 @@ object GraftSink {
             Conflict.Rebase
           else Conflict.Fail
         log.commit("mergeBucketed", cur, beforePublish)(_ => Right(
-          TableLog.Attempt((), lines, onConflict, Seq(dataRel))))._1
+          TableLog.Attempt((), lines, onConflict, Seq(written.dir))))._1
       } finally GraftSqlBridge.releaseCheckpoint(latest)
     }
 
@@ -2141,17 +2118,15 @@ object GraftSink {
       val log = this.log(spark)
       val m = log.latest()
       require(m.version > 0, s"$path: nothing to optimize")
-      val dataRel = TableLog.newDataRel(m.version + 1)
       val spec = bucketSpecAsOf(log, m).filter(_ =>
         m.files.exists(rel => TableLog.pathBucket(rel).isDefined))
-      val (schema, meta) = spec match {
+      val (written, schema, meta) = spec match {
         case None =>
           val files = math.max(1, math.ceil(
             log.rowCount(m).toDouble / targetRecordsPerFile).toInt)
           val current = readAt(spark, m)
-          current.repartition(files).write.mode(SaveMode.Overwrite)
-            .parquet(s"$path/$dataRel")
-          (current.schema, Map.empty[String, String])
+          (log.writeData(m.version + 1, current.repartition(files)),
+            current.schema, Map.empty[String, String])
         case Some(nb) =>
           // the bucket is derived from the row's FILE PATH via
           // _metadata (input_file_name would not survive the DV
@@ -2166,14 +2141,12 @@ object GraftSink {
             else coalesce(fromPath, bucketOf(keyCols, nb))
           val current = alive.withColumn("__bucket", bucket)
             .drop("__dv_file", "__dv_row")
-          current.repartition(col("__bucket")).write.mode(SaveMode.Overwrite)
-            .partitionBy("__bucket")
-            .option("maxRecordsPerFile", targetRecordsPerFile)
-            .parquet(s"$path/$dataRel")
-          (current.drop("__bucket").schema, Map("buckets" -> nb.toString))
+          (log.writeData(m.version + 1, current.repartition(col("__bucket")),
+            Some("__bucket"), Some(targetRecordsPerFile)),
+            current.drop("__bucket").schema, Map("buckets" -> nb.toString))
       }
       val (newV, filesAfter) =
-        publishRewrite(log, m, dataRel, schema, meta)
+        publishRewrite(log, m, written.lines, schema, meta)
       (newV, m.files.size, filesAfter)
     }
 
@@ -2240,22 +2213,20 @@ object GraftSink {
       val packed = current.withColumn("__z", z)
         .repartitionByRange(files, col("__z"))
         .drop("__z")
-      val dataRel = TableLog.newDataRel(m.version + 1)
-      packed.write.mode(SaveMode.Overwrite).parquet(s"$path/$dataRel")
-      val (newV, filesAfter) = publishRewrite(log, m, dataRel,
-        packed.schema, Map.empty)
+      val (newV, filesAfter) = publishRewrite(log, m,
+        log.writeData(m.version + 1, packed).lines, packed.schema, Map.empty)
       (newV, m.files.size, filesAfter)
     }
 
     /** Publish a whole-table REWRITE (optimize / zorder) of `base`
-      * written under `dataRel`; returns (version, files written). The
+      * whose files are `newFiles`; returns (version, files written). The
       * rewrite holds the WHOLE table content, so any winner makes it
       * stale and it never rebases: republishing it on top of a winner
       * would drop the winner's rows (ADVICE r16). */
-    private def publishRewrite(log: TableLog, base: Manifest, dataRel: String,
+    private def publishRewrite(log: TableLog, base: Manifest,
+                               newFiles: Seq[String],
                                schema: org.apache.spark.sql.types.StructType,
                                meta: Map[String, String]): (Long, Int) = {
-      val newFiles = log.fileLines(dataRel)
       val header = TableLog.header(meta + ("kind" -> "optimize") +
         ("schema" -> schema.json))
       log.commit("optimize", base)(_ => Right(TableLog.Attempt(newFiles.size,
@@ -2263,33 +2234,21 @@ object GraftSink {
     }
 
     /** VACUUM: retire time travel below a horizon — keep the newest
-      * `retainLast` versions, delete every older manifest and every
-      * data file no retained manifest references. Reading a vacuumed
-      * version fails LOUDLY (its manifest is gone), retained versions
-      * read byte-identically, and uncommitted orphan data dirs (a
-      * writer that died before its rename) are reclaimed too. Driver
-      * work is manifest-sized. Returns (dataFilesDeleted,
+      * `retainLast` versions, delete every older manifest, and reclaim
+      * every file no retained manifest lists, uncommitted orphans
+      * included ([[TableLog.reclaim]]). Reading a vacuumed version fails
+      * LOUDLY; retained versions read byte-identically. Driver work is
+      * manifest-sized. A `syncpoint` = (coordinator path, this table's
+      * name in it) clamps the horizon to the LATEST syncpoint's pin
+      * (VERDICT r17 ask 5), so a consistent cross-table reader never
+      * finds its pinned manifest vacuumed; older syncpoints are
+      * superseded and do not bind. Returns (dataFilesDeleted,
       * manifestsDeleted). */
     def vacuum(spark: org.apache.spark.sql.SparkSession,
-               retainLast: Int): (Int, Int) =
-      vacuum(spark, retainLast, None)
-
-    /** [[vacuum]] that REFUSES to cross a syncpoint pin (VERDICT r17
-      * ask 5): `syncpoint` = (coordinator path, this table's name in
-      * it). The horizon clamps to the LATEST syncpoint's pinned
-      * version — the one `Syncpoint.readAt` resolves — so a
-      * consistent cross-table reader can never find its pinned
-      * manifest vacuumed out from under it. Older syncpoints are
-      * superseded (readers resolve only the latest), so they do not
-      * bind; a coordinator with no syncpoint yet, or one not pinning
-      * this table, leaves the retention horizon as given. */
-    def vacuum(spark: org.apache.spark.sql.SparkSession,
                retainLast: Int,
-               syncpoint: Option[(String, String)]): (Int, Int) = {
+               syncpoint: Option[(String, String)] = None): (Int, Int) = {
       require(retainLast >= 1, "must retain at least the latest version")
       val log = this.log(spark)
-      val fs = log.fs
-      val root = new org.apache.hadoop.fs.Path(path)
       val v = log.currentVersion()
       val pinFloor = syncpoint.flatMap { case (sp, name) =>
         if (Syncpoint.current(spark, sp) == 0L) None
@@ -2297,52 +2256,7 @@ object GraftSink {
       }
       val horizon = math.max(1L, math.min(v - retainLast + 1,
         pinFloor.getOrElse(Long.MaxValue)))
-      val retained = (horizon to v).map(log.read)
-      val keep = retained.flatMap(_.files).toSet
-      // every file under _data/ not referenced by a retained manifest
-      // (recursive: bucketed commits nest files under __bucket=k/)
-      val dataRoot = new org.apache.hadoop.fs.Path(root, "_data")
-      var dataDeleted = 0
-      if (fs.exists(dataRoot)) {
-        def walk(p: org.apache.hadoop.fs.Path)
-            : Seq[org.apache.hadoop.fs.FileStatus] =
-          fs.listStatus(p).toSeq.flatMap(s =>
-            if (s.isDirectory) walk(s.getPath) else Seq(s))
-        val rootUri = root.toUri.getPath.stripSuffix("/")
-        for (f <- walk(dataRoot)) {
-          val rel = f.getPath.toUri.getPath.stripPrefix(rootUri + "/")
-          if (!keep.contains(rel)) {
-            fs.delete(f.getPath, false); dataDeleted += 1
-          }
-        }
-        // drop now-empty dirs bottom-up (bucket dirs, then commit dirs)
-        def prune(p: org.apache.hadoop.fs.Path): Unit = {
-          fs.listStatus(p).foreach(s => if (s.isDirectory) prune(s.getPath))
-          if (p != dataRoot && fs.listStatus(p).isEmpty)
-            fs.delete(p, false)
-        }
-        prune(dataRoot)
-      }
-      // deletion-vector sidecars: keep exactly the SLICES retained
-      // manifests reference, reclaim the rest (a delete rewrites only
-      // its touched buckets' slices and merges drop rewritten
-      // buckets' slices, so slices age out per bucket)
-      val keepDv = retained.flatMap(_.dv).toSet
-      val dvRoot = new org.apache.hadoop.fs.Path(root, "_dv")
-      if (fs.exists(dvRoot)) {
-        for (d <- fs.listStatus(dvRoot)) {
-          val top = s"_dv/${d.getPath.getName}"
-          for (sl <- fs.listStatus(d.getPath) if sl.isDirectory) {
-            if (!keepDv.contains(s"$top/${sl.getPath.getName}")) {
-              fs.delete(sl.getPath, true); dataDeleted += 1
-            }
-          }
-          if (fs.listStatus(d.getPath)
-            .forall(s => !s.isDirectory)) { // only _SUCCESS etc left
-            fs.delete(d.getPath, true)
-          }
-        }
-      }
+      val dataDeleted = log.reclaim((horizon to v).map(log.read))
       val manifestsDeleted = (1L until horizon).count(log.retire)
       (dataDeleted, manifestsDeleted)
     }

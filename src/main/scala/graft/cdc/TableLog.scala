@@ -5,8 +5,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.{regexp_extract, when}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{concat, lit, regexp_extract, substring_index, when}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The table log of a [[GraftSink.VersionedTable]]: the only code that
@@ -14,7 +14,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * and the offset log of its change feed
   * ([[graft.sources.TableCdfSource]]).
   *
-  * Layout under the table root:
+  * Layout under the table root. The log writes every file listed here
+  * (data files and deletion-vector slices through its one parquet
+  * writer, manifests through [[TableLog.commit]]) and reclaims them
+  * ([[reclaim]] and [[retire]], for vacuum):
   *  - `_manifests/v<N>.manifest`: version N. Header lines `#k=v`
   *    (`kind`, `schema`, `dv`, `rename`, `checks`, `buckets`,
   *    `touched`, `batch`, `batch_hi`, `max_ts`, `restored_from`), then
@@ -195,20 +198,50 @@ private[graft] final class TableLog(val fs: FileSystem, root: String) {
   /** Delete version `v`'s manifest (vacuum); false when it was gone. */
   def retire(v: Long): Boolean = fs.delete(manifestPath(v), false)
 
-  /** Every parquet file under `rel`, as root-relative paths. */
-  def parquetFiles(rel: String): Seq[String] =
-    fs.listStatus(new Path(root, rel)).toSeq.flatMap { st =>
-      val r = s"$rel/${st.getPath.getName}"
-      if (st.isDirectory) parquetFiles(r)
-      else if (r.endsWith(".parquet")) Seq(r) else Nil
-    }
+  /** The one writer of table files: `df` as parquet (overwriting) into
+    * `dir`, hive-partitioned by `partitionBy` and rolling files at
+    * `maxRecordsPerFile` rows when given (the session's
+    * `spark.sql.files.maxRecordsPerFile` otherwise). Returns the dir and
+    * its files' manifest lines, sorted by path. */
+  private def write(df: DataFrame, dir: String, partitionBy: Option[String],
+                    maxRecordsPerFile: Option[Long]): TableLog.Written = {
+    var w = df.write.mode(SaveMode.Overwrite)
+    partitionBy.foreach(c => w = w.partitionBy(c))
+    maxRecordsPerFile.foreach(n => w = w.option("maxRecordsPerFile", n))
+    w.parquet(new Path(root, dir).toString)
+    TableLog.Written(dir, fileLines(dir).sortBy(TableLog.path))
+  }
+
+  /** [[write]] of version `v`'s data files into a fresh dir —
+    * uuid-suffixed so two racing writers never share one (the loser's
+    * retry republishes its files under the next version). */
+  def writeData(v: Long, df: DataFrame, partitionBy: Option[String] = None,
+                maxRecordsPerFile: Option[Long] = None): TableLog.Written =
+    write(df, s"${TableLog.DataDir}/commit-$v-${java.util.UUID.randomUUID}",
+      partitionBy, maxRecordsPerFile)
+
+  /** [[write]] of version `v`'s dead positions (`file`, `row_index`,
+    * [[TableLog.SliceCol]]) into a fresh dir, one slice per bucket. */
+  def writeSlices(v: Long, positions: DataFrame): TableLog.Written =
+    write(positions, s"${TableLog.DvDir}/v$v-${java.util.UUID.randomUUID}",
+      Some(TableLog.SliceCol), None)
+
+  /** (root-relative path, is a dir) of each entry under `rel`, if any. */
+  private def children(rel: String): Seq[(String, Boolean)] =
+    (try fs.listStatus(new Path(root, rel)).toSeq
+     catch { case _: java.io.FileNotFoundException => Nil })
+      .map(st => s"$rel/${st.getPath.getName}" -> st.isDirectory)
+
+  /** Root-relative paths of every file under `rel`, recursively. */
+  private def listFiles(rel: String): Seq[String] =
+    children(rel).flatMap { case (r, dir) => if (dir) listFiles(r) else Seq(r) }
 
   /** Manifest file lines for the freshly written files under `rel` —
     * footer reads through a bounded pool (a bucketed merge can write
     * task×bucket files; serial driver opens would dominate small
     * merges). */
-  def fileLines(rel: String): Seq[String] = {
-    val rels = parquetFiles(rel)
+  private def fileLines(rel: String): Seq[String] = {
+    val rels = listFiles(rel).filter(_.endsWith(".parquet"))
     if (rels.size <= 4) rels.map(statsLine)
     else {
       val pool = java.util.concurrent.Executors
@@ -276,7 +309,7 @@ private[graft] final class TableLog(val fs: FileSystem, root: String) {
 
   /** Exact row count from parquet footers — |files| driver-side
     * metadata reads (block row counts only, no column I/O). */
-  def footerRows(rels: Seq[String]): Long =
+  private def footerRows(rels: Seq[String]): Long =
     rels.map { rel =>
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -289,6 +322,32 @@ private[graft] final class TableLog(val fs: FileSystem, root: String) {
   def rowCount(m: Manifest): Long =
     m.lines.map(l => TableLog.statsRows(l)
       .getOrElse(footerRows(Seq(TableLog.path(l))))).sum
+
+  /** The reclaim step of vacuum: delete every file under the data dir
+    * that no manifest in `retained` lists (the commits' `_SUCCESS`
+    * markers and uncommitted orphans included) and every deletion-vector
+    * slice none of them lists, then drop the dirs that leaves empty.
+    * Returns the count of files and slices deleted. */
+  def reclaim(retained: Seq[Manifest]): Int = {
+    import TableLog.{DataDir, DvDir}
+    def subdirs(rel: String) = children(rel).collect { case (r, true) => r }
+    def prune(rel: String): Unit = { // bottom-up: bucket, then commit dirs
+      subdirs(rel).foreach(prune)
+      if (children(rel).isEmpty) fs.delete(new Path(root, rel), false)
+    }
+    val keep = retained.flatMap(_.files).toSet
+    val stale = listFiles(DataDir).filterNot(keep)
+    stale.foreach(rel => fs.delete(new Path(root, rel), false))
+    subdirs(DataDir).foreach(prune)
+    // slices age out per bucket; a dv dir left with no slice goes whole
+    val keepDv = retained.flatMap(_.dv).toSet
+    stale.size + subdirs(DvDir).map { top =>
+      val gone = subdirs(top).filterNot(keepDv)
+      gone.foreach(sl => fs.delete(new Path(root, sl), true))
+      if (subdirs(top).isEmpty) fs.delete(new Path(root, top), true)
+      gone.size
+    }.sum
+  }
 }
 
 private[graft] object TableLog {
@@ -345,18 +404,34 @@ private[graft] object TableLog {
     else { fs.delete(tmp, false); false }
   }
 
-  /** Fresh directory for version `v`'s data files — uuid-suffixed so
-    * two racing writers never share one (the loser's retry republishes
-    * its files under the next version). */
-  def newDataRel(v: Long): String =
-    s"_data/commit-$v-${java.util.UUID.randomUUID}"
+  /** Root-relative dirs of data files and deletion-vector slices. */
+  private val DataDir = "_data"
+  private val DvDir = "_dv"
 
-  /** Fresh directory for version `v`'s deletion-vector slices. */
-  def newDvRel(v: Long): String = s"_dv/v$v-${java.util.UUID.randomUUID}"
+  /** The hive partition column of deletion-vector slices. */
+  val SliceCol = "__dvb"
+
+  /** The files one [[TableLog]] write landed: its fresh dir and their
+    * manifest lines, sorted by path. */
+  final case class Written(dir: String, lines: Seq[String]) {
+    /** The deletion-vector slice dirs the files sit in, sorted. */
+    def slices: Seq[String] =
+      lines.map(l => path(l).replaceFirst("/[^/]*$", "")).distinct.sorted
+  }
+
+  /** Whether `file` (an absolute path, e.g. from `inputFiles`) is a
+    * data file rather than a deletion-vector slice. */
+  def isDataFile(file: String): Boolean = file.contains(s"/$DataDir/")
+
+  /** A scanned row's data file as a root-relative path (deletion
+    * vectors key rows by it, so moving the table cannot un-delete a
+    * row): everything after the data-dir marker in `filePath`. */
+  def relFileCol(filePath: Column): Column =
+    concat(lit(s"$DataDir/"), substring_index(filePath, s"/$DataDir/", -1))
 
   /** The version whose commit first wrote data file `rel`. */
   def originVersion(rel: String): Option[Long] =
-    "_data/commit-(\\d+)-".r.findFirstMatchIn(rel).map(_.group(1).toLong)
+    s"$DataDir/commit-(\\d+)-".r.findFirstMatchIn(rel).map(_.group(1).toLong)
 
   /** Render `#k=v` header lines (sorted, line-safety enforced). */
   def header(meta: Map[String, String]): Seq[String] =
@@ -421,7 +496,7 @@ private[graft] object TableLog {
 
   /** The key bucket a DV slice covers (-1 = unbucketed files). */
   def sliceBucket(slice: String): Long =
-    "__dvb=(-?\\d+)".r.findFirstMatchIn(slice)
+    s"$SliceCol=(-?\\d+)".r.findFirstMatchIn(slice)
       .map(_.group(1).toLong).getOrElse(-1L)
 
   /** What version `cur` changed relative to its parent `prev` — the one

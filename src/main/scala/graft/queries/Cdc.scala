@@ -1835,14 +1835,14 @@ object Cdc {
       table.mergeBucketed(log, Seq("key"),
         Seq("commit_ts_us", "seq"), numBuckets = 16)
       val before = table.read(s).inputFiles
-        .filter(_.contains("/_data/")).toSet
+        .filter(TableLog.isDataFile).toSet
       val (_, nUpd) = table.updateWhere(s,
         pmod(col("key"), lit(5L)) === 0,
         Map("value" -> (col("value") * 2),
           "event_type" -> lit("adjusted")))
       require(nUpd > 0, "the update predicate must match rows at every SF")
       val after = table.read(s).inputFiles
-        .filter(_.contains("/_data/")).toSet
+        .filter(TableLog.isDataFile).toSet
       val witness = before.subsetOf(after)
       table.read(s)
         .select(col("key").as("user_id"),
@@ -2283,7 +2283,7 @@ object Cdc {
       // sidecar, which is exactly the point — the DATA files are
       // untouched
       def dataFiles = table.read(s).inputFiles
-        .filter(_.contains("/_data/")).toSet
+        .filter(TableLog.isDataFile).toSet
       val before = dataFiles
       val (_, nDel) = table.deleteWhere(s, pmod(col("key"), lit(7L)) === 0)
       require(nDel > 0, "the delete predicate must match rows at every SF")
@@ -2352,7 +2352,7 @@ object Cdc {
       table.mergeBucketed(log, Seq("key"),
         Seq("commit_ts_us", "seq"), numBuckets = 16)
       def dataFiles = table.read(s).inputFiles
-        .filter(_.contains("/_data/")).toSet
+        .filter(TableLog.isDataFile).toSet
       val before = dataFiles
       table.deleteKeys(s, Seq("key"), Seq(Seq(0L), Seq(1L), Seq(2L)),
         numBuckets = 16)

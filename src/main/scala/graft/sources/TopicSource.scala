@@ -314,14 +314,19 @@ private[sources] class TopicMicroBatchStream(schema: StructType, path: String,
     * overwrites, whose commit briefly replaces each directory. A
     * missing dir mid-poll is therefore "nothing visible right now",
     * never an error — the next poll (or the bounded re-list in
-    * [[planInputPartitions]]) sees the rewritten files. */
+    * [[planInputPartitions]]) sees the rewritten files. The local file
+    * system reports a dir gone mid-listing as "Permission denied" or
+    * "Invalid directory", so any listing failure on a gone dir reads as
+    * empty; on a dir that still exists it is rethrown. */
   private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
                         dir: Path): Seq[FileStatus] =
     try fs.listStatus(dir).toSeq.filter { f =>
       val n = f.getPath.getName
       f.isFile && n.endsWith(".parquet") &&
         !n.startsWith(".") && !n.startsWith("_")
-    } catch { case _: java.io.FileNotFoundException => Seq.empty }
+    } catch {
+      case e: java.io.IOException => if (fs.exists(dir)) throw e else Seq.empty
+    }
 
   private def footerMaxOffset(f: FileStatus): Option[Long] =
     footerMemo.synchronized {

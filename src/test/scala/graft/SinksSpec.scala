@@ -566,6 +566,26 @@ class SinksSpec extends SparkSpec {
       path, "_data/commit-crashed")))
   }
 
+  test("VersionedTable writes list their new file lines in path order: " +
+    "a bucketed merge and an optimize that each write several files") {
+    import spark.implicits._
+    val path = tmp("vtable-sorted")
+    val vt = GraftSink.VersionedTable(path)
+    val log = TableLog(spark, path)
+    vt.mergeBucketed((0L until 64L).map(k => (k, k, "I", s"v$k")).toDF(
+      "key", "seq", "op", "payload"), Seq("key"), Seq("seq"), numBuckets = 8)
+    val merged = log.read(1).files
+    assert(merged.size > 1)
+    assert(merged === merged.sorted)
+    val plain = GraftSink.VersionedTable(tmp("vtable-sorted-opt"))
+    (1 to 4).foreach(i => plain.commit(
+      Seq.tabulate(50)(j => (i.toLong * 100 + j, s"t$i")).toDF("key", "tag")))
+    val (optV, _, nAfter) = plain.optimize(spark, 60L)
+    val optimized = TableLog(spark, plain.path).read(optV).files
+    assert(nAfter > 1 && optimized.size === nAfter)
+    assert(optimized === optimized.sorted)
+  }
+
   test("VersionedTable.changes across a bucketed merge is FILE-PRUNED: " +
     "only the merge's removed ∪ added files are diffed — carried-" +
     "verbatim files are never planned (inputFiles census); attribution " +

@@ -9,10 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source guard over src/main/scala: sessions are built in one place,
   * AvailableNow drains are started in a few named helpers, micro-batch
   * callbacks go through the one helper that rebinds them, the
-  * VersionedTable log format is known to one module, and flush-feed
-  * files have one writer, so the builder chain, the drain tail, the
-  * manifest parsing and the flush protocol are not copied back into
-  * call sites. */
+  * VersionedTable log format and files are known to one module, and
+  * flush-feed files have one writer, so the builder chain, the drain
+  * tail, the manifest parsing, the table-file writes and the flush
+  * protocol are not copied back into call sites. */
 class StructureSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -82,8 +82,29 @@ class StructureSpec extends AnyFunSuite {
     val literals = Seq("_manifests", ".manifest\"", "_last_checkpoint",
       "\"#kind=\"", "\"#dv=\"", "\"#rename=\"", "__bucket=(", "__dvb=(")
     val files = literals.flatMap(l =>
-      sites(java.util.regex.Pattern.quote(l))).map(_._1).distinct
-    assert(files === Seq("graft/cdc/TableLog.scala"))
+      sites(java.util.regex.Pattern.quote(l))).map(_._1)
+    // the data and deletion-vector dirs as string literals ("_data/…",
+    // "/_data/", "_dv/…"); scaladoc prose may still name them
+    val dirs = sites(""""(?:[^"]*/)?_(?:data|dv)(?:/[^"]*)?"""").map(_._1)
+    assert(dirs.nonEmpty)
+    assert((files ++ dirs).distinct === Seq("graft/cdc/TableLog.scala"))
+  }
+
+  test("table files are written and reclaimed only by TableLog") {
+    val dfWrite = """\.write(\.|\s*$)"""
+    assert(sites(dfWrite).filter(_._1 == "graft/cdc/TableLog.scala") ===
+      Seq("graft/cdc/TableLog.scala" -> "write"))
+    // VersionedTable writes, lists and vacuums its files only through
+    // the log: no DataFrame write, no listing, no file-line building
+    val sinks = sources.collectFirst {
+      case ("graft/cdc/Sinks.scala", lines) => lines }.get
+    val table = sinks.slice(
+      sinks.indexWhere(_.contains("final case class VersionedTable(")),
+      sinks.indexWhere(_.contains("object Syncpoint {")))
+    assert(table.size > 1000)
+    val banned = (dfWrite + """|\.parquet\(s"\$path/|listStatus|fileLines|""" +
+      """parquetFiles|footerRows|fs\.delete""").r
+    assert(table.filter(l => banned.findFirstIn(l).isDefined).isEmpty)
   }
 
   test("the lost-race rule lives only in TableLog.commit") {

@@ -1,13 +1,15 @@
 package graft
 
-import java.nio.file.Files
+import java.io.IOException
+import java.nio.file.{AccessDeniedException, Files}
 
+import org.apache.hadoop.fs.{FileStatus, FileUtil, Path, RawLocalFileSystem}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.cdc.{Changelog, GraftSink}
-import graft.sources.TopicSource
+import graft.sources.{TopicSource, TopicSourceTestHooks}
 
 /** Consumer-side contracts of the Topic streaming source: tail ≡ batch
   * read, per-partition offset checkpointing (resume delivers exactly the
@@ -371,7 +373,6 @@ class TopicSourceSpec extends SparkSpec {
   }
 
   test("footer memo is bounded by LIVE files; cold start reads in parallel") {
-    import graft.sources.TopicSourceTestHooks
     val topic = tmp("topic_memo")
     val sink = GraftSink.Topic(topic, numPartitions = 4)
     sink.write(changelog)
@@ -390,4 +391,76 @@ class TopicSourceSpec extends SparkSpec {
     assert(ends2 === ends1, "deterministic rewrite keeps the same ends")
     assert(size2 <= size1, s"memo grew across a rewrite: $size1 -> $size2")
   }
+
+  /** `body` over a 4-partition topic read through [[VanishingDirFs]]:
+    * the local dir of each partition, and a stream handle on the topic. */
+  private def throughVanishingFs(tag: String)(
+      body: (Int => String, TopicSourceTestHooks.StreamHandle) => Unit): Unit = {
+    val topic = tmp(tag)
+    GraftSink.Topic(topic, numPartitions = 4).write(changelog)
+    val implKey = s"fs.${VanishingDirFs.Scheme}.impl"
+    spark.conf.set(implKey, classOf[VanishingDirFs].getName)
+    try body(pid => s"$topic/${TopicSource.PartitionCol}=$pid",
+      TopicSourceTestHooks.handle(TopicSource.changelogTopicSchema,
+        s"${VanishingDirFs.Scheme}://$topic"))
+    finally {
+      VanishingDirFs.faults.clear()
+      spark.conf.unset(implKey)
+    }
+  }
+
+  test("a partition dir replaced mid-listing reads as empty, whichever " +
+    "way the local listing fails") {
+    throughVanishingFs("topic_vanish") { (dir, stream) =>
+      val ends = stream.discover()
+      assert(ends.keySet === Set(0, 1, 2, 3))
+      // the two ways the local listing fails on a dir that goes between
+      // its existence check and its read: the readability check, then
+      // File.list returning null
+      VanishingDirFs.faults.put(dir(2), VanishingDirFs.Fault(keep = false,
+        d => new AccessDeniedException(d, null, "Permission denied")))
+      VanishingDirFs.faults.put(dir(3), VanishingDirFs.Fault(keep = false,
+        d => new IOException(s"Invalid directory or I/O error occurred for dir: $d")))
+      assert(stream.discover() === ends - 2 - 3)
+      assert(!new java.io.File(dir(2)).exists && !new java.io.File(dir(3)).exists)
+    }
+  }
+
+  test("a listing failure on a partition dir that still exists is rethrown") {
+    throughVanishingFs("topic_denied") { (dir, stream) =>
+      VanishingDirFs.faults.put(dir(1), VanishingDirFs.Fault(keep = true,
+        d => new AccessDeniedException(d, null, "Permission denied")))
+      intercept[AccessDeniedException](stream.discover())
+      assert(new java.io.File(dir(1)).exists)
+    }
+  }
+}
+
+/** The local file system under the `vanishfs` scheme, whose listing of a
+  * dir named in [[VanishingDirFs.faults]] fails the way the local file
+  * system's listing does when the dir is replaced mid-listing: the dir
+  * is deleted first (unless the fault keeps it), then the listing
+  * throws. */
+class VanishingDirFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${VanishingDirFs.Scheme}:///")
+  override def getScheme: String = VanishingDirFs.Scheme
+  override def listStatus(f: Path): Array[FileStatus] = {
+    val dir = f.toUri.getPath
+    Option(VanishingDirFs.faults.get(dir)) match {
+      case Some(fault) =>
+        if (!fault.keep) FileUtil.fullyDelete(new java.io.File(dir))
+        throw fault.error(dir)
+      case None => super.listStatus(f)
+    }
+  }
+}
+
+object VanishingDirFs {
+  val Scheme = "vanishfs"
+
+  final case class Fault(keep: Boolean, error: String => IOException)
+
+  /** Local dir path → how listing it fails. */
+  val faults = new java.util.concurrent.ConcurrentHashMap[String, Fault]()
 }
